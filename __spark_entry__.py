@@ -126,8 +126,8 @@ def _engine_cfg():
 
 def _events_flush_us(sf_dir: str) -> int | None:
     """Flush timestamp (max epoch µs of events.ts) from parquet footer
-    statistics — no data scan. The engine otherwise runs one extra
-    max-aggregate job over the events table per query (VERDICT r1 item 7)."""
+    statistics — no data scan. Passing it pins the reference's flush time;
+    omitting it gives the same output (the engine flushes at end of input)."""
     from rustiflow_spark.sources.tables import parquet_column_max
 
     mx = parquet_column_max(f"{sf_dir}/events.parquet", "ts")
@@ -4970,18 +4970,20 @@ FROM agg
 
 def q_flow_cic_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derived scalar features (SURVEY §2.5 D1-D7) computed by the SAME
-    Catalyst expressions the production schemas use (flows/schemas.py:
+    SQL expressions the production schemas use (flows/schemas.py:
     safe_div, per-second rates, pooled flow packet stats, down/up ratio,
     ms->µs unit conversion, subflow means, expiration_id, IANA classes)."""
     _ensure_package_shipped(spark)
     from rustiflow_spark.config import EngineConfig
     from rustiflow_spark.flows.schemas import (
+        _double,
         _flow_pkt_count,
         _flow_pkt_max,
         _flow_pkt_mean,
         _flow_pkt_min,
         _flow_pkt_total,
         _iana,
+        _ms_to_us,
         _rate_per_s,
         _safe_div,
     )
@@ -4993,36 +4995,29 @@ def q_flow_cic_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
     flows = sessionize_packets(
         _packet_table(spark, sf_dir, tcp=False), cfg, flush_ts=_packet_flush_us(sf_dir)
     )
-    dur = F.col("duration_us").cast("double")
+    dur, subflows = _double("duration_us"), _double("subflow_count")
+    fwd_n, bwd_n = _double("fwd_packet_len_count"), _double("bwd_packet_len_count")
     expiration_id = (
-        F.when(F.col("cause") == "Active Timeout", 1)
-        .when(F.col("cause").isin("Idle Timeout", "TCP Normal Termination"), 0)
-        .otherwise(-1)
+        "CASE WHEN cause = 'Active Timeout' THEN 1 "
+        "WHEN cause IN ('Idle Timeout', 'TCP Normal Termination') THEN 0 ELSE -1 END"
     )
-    return flows.select(
+    return flows.selectExpr(
         "flow_key",
         "first_ts_us",
-        expiration_id.cast("long").alias("expiration_id"),
-        _iana(F.col("src_port")).alias("src_port_iana"),
-        _iana(F.col("dst_port")).alias("dst_port_iana"),
-        _flow_pkt_count().cast("long").alias("flow_pkt_count"),
-        _flow_pkt_total().alias("flow_pkt_total"),
-        _flow_pkt_mean().alias("flow_pkt_mean"),
-        _flow_pkt_min().alias("flow_pkt_min"),
-        _flow_pkt_max().alias("flow_pkt_max"),
-        _rate_per_s(F.col("payload_len_total"), dur).alias("payload_bytes_per_s"),
-        _rate_per_s(_flow_pkt_count().cast("double"), dur).alias("packets_per_s"),
-        _safe_div(
-            F.col("bwd_packet_len_count").cast("double"),
-            F.col("fwd_packet_len_count").cast("double"),
-        ).alias("down_up_ratio"),
-        (F.col("iat_mean") * F.lit(1000.0)).alias("iat_mean_us"),
-        _safe_div(
-            F.col("fwd_packet_len_total"), F.col("subflow_count").cast("double")
-        ).alias("fwd_subflow_bytes_mean"),
-        _safe_div(
-            F.col("bwd_packet_len_total"), F.col("subflow_count").cast("double")
-        ).alias("bwd_subflow_bytes_mean"),
+        f"CAST({expiration_id} AS BIGINT) AS expiration_id",
+        f"{_iana('src_port')} AS src_port_iana",
+        f"{_iana('dst_port')} AS dst_port_iana",
+        f"CAST({_flow_pkt_count()} AS BIGINT) AS flow_pkt_count",
+        f"{_flow_pkt_total()} AS flow_pkt_total",
+        f"{_flow_pkt_mean()} AS flow_pkt_mean",
+        f"{_flow_pkt_min()} AS flow_pkt_min",
+        f"{_flow_pkt_max()} AS flow_pkt_max",
+        f"{_rate_per_s('payload_len_total', dur)} AS payload_bytes_per_s",
+        f"{_rate_per_s(_double(_flow_pkt_count()), dur)} AS packets_per_s",
+        f"{_safe_div(bwd_n, fwd_n)} AS down_up_ratio",
+        f"{_ms_to_us('iat_mean')} AS iat_mean_us",
+        f"{_safe_div('fwd_packet_len_total', subflows)} AS fwd_subflow_bytes_mean",
+        f"{_safe_div('bwd_packet_len_total', subflows)} AS bwd_subflow_bytes_mean",
     )
 
 

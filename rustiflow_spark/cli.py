@@ -177,24 +177,12 @@ def main(argv: list[str] | None = None) -> int:
     )
     cfg = _engine_config(args)
     t0 = time.time()
-    flush_ts = None
     if args.command == "extract" and getattr(args, "input_format", "parquet") == "pcap":
         from rustiflow_spark.sources.pcap import read_pcap
 
         df = read_pcap(spark, args.input, split_size=args.pcap_split_size)
     else:
         df = spark.read.parquet(args.input)
-        # flush timestamp from parquet footer statistics — saves one full
-        # ts-column scan per run
-        from rustiflow_spark.sources.tables import parquet_column_max
-
-        ts_col = "ts_us" if args.command == "extract" else args.ts_col
-        try:
-            flush_ts = parquet_column_max(args.input, ts_col)
-            if flush_ts is not None:
-                flush_ts = int(flush_ts)
-        except Exception:
-            flush_ts = None
 
     if args.command == "extract":
         from rustiflow_spark.flows.schemas import SCHEMAS, cic_schema
@@ -215,9 +203,7 @@ def main(argv: list[str] | None = None) -> int:
         def process(part):
             # kernel computes + ships only the superset columns the selected
             # schema reads (serialization dominates at narrow layouts)
-            return project(
-                sessionize_packets(part, cfg, flush_ts=flush_ts, columns=columns)
-            )
+            return project(sessionize_packets(part, cfg, columns=columns))
 
         key_cols = ["src_ip", "dst_ip", "src_port", "dst_port", "protocol"]
     else:
@@ -234,7 +220,6 @@ def main(argv: list[str] | None = None) -> int:
                 value_col=args.value_col,
                 direction_col=args.direction_col,
                 terminator_col=args.terminator_col,
-                flush_ts=flush_ts,
                 strategy=args.strategy,
             )
 

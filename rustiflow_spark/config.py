@@ -71,11 +71,15 @@ class EngineConfig:
                 timestamps of the shard domain; fine at test scale, and
                 bounded by duration/interval at cluster scale when fed the
                 per-interval min-timestamp aggregate).
-    - "none":   skip the periodic scan. Sessions not closed by a successor
-                packet are closed at flush time; idle/active-expired ones
-                still get their correct cause, evaluated at the flush
-                timestamp, but close-ts = flush-ts (affects only the
-                trailing-idle statistic of A2).
+    - "bucket": approximate the scan times from per-bucket minimum
+                timestamps (timeline.scan_times_from_bucket_mins); a scan
+                may land up to one bucket (interval / 64) late.
+    - "none":   skip the periodic scan. A session whose expiry a later
+                packet of the same biflow observes still closes there
+                with its Idle/Active Timeout cause. Every session open at
+                end of input, expired or not, is exported as "Exporter
+                Shutdown" and gets no trailing-idle sample. No timeline
+                job runs when a query is built.
     """
 
     active_timeout: int = 3600

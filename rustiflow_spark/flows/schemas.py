@@ -3,8 +3,10 @@
 Each schema is a pure Catalyst projection over the sessionization kernel's
 feature-superset DataFrame (schema.FLOW_SUPERSET_SCHEMA) — derived scalar
 features (rates, ratios, pooled variance, unit conversions; SURVEY.md §2.5
-D1-D7) are column expressions, so they run JVM-side with whole-stage
-codegen and cost nothing extra at scale.
+D1-D7) are SQL expressions, so they run JVM-side with whole-stage codegen
+and cost nothing extra at scale. Each layout is built as SQL text and
+applied with a single selectExpr: building the ~300 equivalent Column
+objects one py4j call at a time cost 0.4-0.8 s per query.
 
 Column orders and names replicate the reference's CSV layouts:
   Basic     10 cols  — flows/basic_flow.rs:316-333
@@ -21,117 +23,124 @@ match the reference exactly.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Column, functions as F
+from pyspark.sql import DataFrame
 
-US = 1_000_000.0
+# Every expression below is Spark SQL text; each layout is applied with one
+# selectExpr (one py4j round trip) instead of hundreds of Column
+# constructions. Double literals carry a D suffix: an unsuffixed 0.0 is a
+# DECIMAL in Spark SQL. Operands are parenthesized so composing helpers
+# never changes the expression tree (or the floating-point results).
+
+_US_PER_S = "1000000.0D"
 
 
-def _safe_div(num: Column, den: Column) -> Column:
-    return F.when(den != 0, num / den).otherwise(F.lit(0.0))
+def _project(flows: DataFrame, exprs: list[str], names: list[str]) -> DataFrame:
+    assert len(exprs) == len(names), (len(exprs), len(names))
+    return flows.selectExpr(*[f"{e} AS `{n}`" for e, n in zip(exprs, names)])
 
 
-def _rate_per_s(value: Column, duration_us: Column) -> Column:
+def _safe_div(num: str, den: str) -> str:
+    return f"CASE WHEN ({den}) != 0 THEN ({num}) / ({den}) ELSE 0.0D END"
+
+
+def _rate_per_s(value: str, duration_us: str) -> str:
     # features/util.rs:159-161
-    return _safe_div(value, duration_us / F.lit(US))
+    return _safe_div(value, f"({duration_us}) / {_US_PER_S}")
 
 
-def _iana(port: Column) -> Column:
+def _iana(port: str) -> str:
     return (
-        F.when(port <= 1023, "well-known")
-        .when(port <= 49151, "registered")
-        .otherwise("dynamic")
+        f"CASE WHEN {port} <= 1023 THEN 'well-known' "
+        f"WHEN {port} <= 49151 THEN 'registered' ELSE 'dynamic' END"
     )
 
 
-def _stats5(block: str) -> list[Column]:
+def _double(col: str) -> str:
+    return f"CAST({col} AS DOUBLE)"
+
+
+def _ms_to_us(col: str) -> str:
+    return f"{col} * 1000.0D"
+
+
+def _stats5(block: str) -> list[str]:
     """total, mean, std, max, min — FeatureStats::dump_values order."""
-    return [
-        F.col(f"{block}_total"),
-        F.col(f"{block}_mean"),
-        F.col(f"{block}_std"),
-        F.col(f"{block}_max"),
-        F.col(f"{block}_min"),
-    ]
+    return [f"{block}_{s}" for s in ("total", "mean", "std", "max", "min")]
 
 
 # ---- pooled flow-level packet-length stats (packet_stats.rs:19-95) --------
 
 
-def _flow_pkt_count() -> Column:
-    return F.col("fwd_packet_len_count") + F.col("bwd_packet_len_count")
+def _flow_pkt_count() -> str:
+    return "(fwd_packet_len_count + bwd_packet_len_count)"
 
 
-def _flow_pkt_total() -> Column:
-    return F.col("fwd_packet_len_total") + F.col("bwd_packet_len_total")
+def _flow_pkt_total() -> str:
+    return "(fwd_packet_len_total + bwd_packet_len_total)"
 
 
-def _flow_pkt_mean() -> Column:
+def _flow_pkt_mean() -> str:
     return _safe_div(_flow_pkt_total(), _flow_pkt_count())
 
 
-def _flow_pkt_min() -> Column:
-    nf, nb = F.col("fwd_packet_len_count"), F.col("bwd_packet_len_count")
+def _flow_pkt_extreme(fn: str, stat: str) -> str:
     return (
-        F.when((nf > 0) & (nb > 0), F.least("fwd_packet_len_min", "bwd_packet_len_min"))
-        .when(nf > 0, F.col("fwd_packet_len_min"))
-        .when(nb > 0, F.col("bwd_packet_len_min"))
-        .otherwise(F.lit(0.0))
+        "CASE WHEN fwd_packet_len_count > 0 AND bwd_packet_len_count > 0 "
+        f"THEN {fn}(fwd_packet_len_{stat}, bwd_packet_len_{stat}) "
+        f"WHEN fwd_packet_len_count > 0 THEN fwd_packet_len_{stat} "
+        f"WHEN bwd_packet_len_count > 0 THEN bwd_packet_len_{stat} "
+        "ELSE 0.0D END"
     )
 
 
-def _flow_pkt_max() -> Column:
-    nf, nb = F.col("fwd_packet_len_count"), F.col("bwd_packet_len_count")
-    return (
-        F.when((nf > 0) & (nb > 0), F.greatest("fwd_packet_len_max", "bwd_packet_len_max"))
-        .when(nf > 0, F.col("fwd_packet_len_max"))
-        .when(nb > 0, F.col("bwd_packet_len_max"))
-        .otherwise(F.lit(0.0))
-    )
+def _flow_pkt_min() -> str:
+    return _flow_pkt_extreme("least", "min")
 
 
-def _flow_pkt_variance() -> Column:
+def _flow_pkt_max() -> str:
+    return _flow_pkt_extreme("greatest", "max")
+
+
+def _flow_pkt_variance() -> str:
     # exact two-sample pooled population variance merge (packet_stats.rs:63-91)
-    n1 = F.col("fwd_packet_len_count").cast("double")
-    n2 = F.col("bwd_packet_len_count").cast("double")
-    n = n1 + n2
-    m1, m2 = F.col("fwd_packet_len_mean"), F.col("bwd_packet_len_mean")
-    v1 = F.col("fwd_packet_len_std") * F.col("fwd_packet_len_std")
-    v2 = F.col("bwd_packet_len_std") * F.col("bwd_packet_len_std")
-    cm = _flow_pkt_mean()
-    pooled = (n1 * v1 + n2 * v2 + n1 * (m1 - cm) * (m1 - cm) + n2 * (m2 - cm) * (m2 - cm)) / n
-    return F.when(n <= 1, F.lit(0.0)).otherwise(pooled)
+    n1, n2 = _double("fwd_packet_len_count"), _double("bwd_packet_len_count")
+    n = f"({n1} + {n2})"
+    v1 = "(fwd_packet_len_std * fwd_packet_len_std)"
+    v2 = "(bwd_packet_len_std * bwd_packet_len_std)"
+    d1 = f"(fwd_packet_len_mean - ({_flow_pkt_mean()}))"
+    d2 = f"(bwd_packet_len_mean - ({_flow_pkt_mean()}))"
+    pooled = f"({n1} * {v1} + {n2} * {v2} + {n1} * {d1} * {d1} + {n2} * {d2} * {d2}) / {n}"
+    return f"CASE WHEN {n} <= 1 THEN 0.0D ELSE {pooled} END"
 
 
-def _flow_pkt_std() -> Column:
-    return F.sqrt(_flow_pkt_variance())
+def _flow_pkt_std() -> str:
+    return f"sqrt({_flow_pkt_variance()})"
 
 
-def _flag_total(name: str) -> Column:
-    return F.col(f"fwd_{name}_flag_count") + F.col(f"bwd_{name}_flag_count")
+def _flag_total(name: str) -> str:
+    return f"(fwd_{name}_flag_count + bwd_{name}_flag_count)"
 
 
 def basic_schema(flows: DataFrame, without_contamination: bool = False) -> DataFrame:
     """BasicFlow 10-column layout (basic_flow.rs:316-333); clean variant =
     5 columns with IANA port classes (basic_flow.rs:335-345)."""
     if without_contamination:
-        return flows.select(
-            _iana(F.col("src_port")).alias("src_port_iana"),
-            _iana(F.col("dst_port")).alias("dst_port_iana"),
-            "protocol",
-            F.col("duration_us").alias("duration"),
-            F.col("cause").alias("flow_expire_cause"),
+        return _project(
+            flows,
+            [_iana("src_port"), _iana("dst_port"), "protocol", "duration_us", "cause"],
+            ["src_port_iana", "dst_port_iana", "protocol", "duration", "flow_expire_cause"],
         )
-    return flows.select(
-        F.col("flow_key").alias("flow_id"),
-        F.col("src_ip").alias("source_ip"),
-        F.col("src_port").alias("source_port"),
-        F.col("dst_ip").alias("destination_ip"),
-        F.col("dst_port").alias("destination_port"),
-        "protocol",
-        F.col("first_ts_us").alias("first_timestamp"),
-        F.col("last_ts_us").alias("last_timestamp"),
-        F.col("duration_us").alias("duration"),
-        F.col("cause").alias("flow_expire_cause"),
+    return _project(
+        flows,
+        [
+            "flow_key", "src_ip", "src_port", "dst_ip", "dst_port", "protocol",
+            "first_ts_us", "last_ts_us", "duration_us", "cause",
+        ],
+        [
+            "flow_id", "source_ip", "source_port", "destination_ip",
+            "destination_port", "protocol", "first_timestamp", "last_timestamp",
+            "duration", "flow_expire_cause",
+        ],
     )
 
 
@@ -167,176 +176,124 @@ CIC_COLUMNS = [
 ]
 
 
-def _cic_value_exprs(dur: Column) -> list[Column]:
+def _cic_value_exprs(dur: str) -> list[str]:
     """CIC value expressions 12..100 (everything after the basic-info block),
     in cic_flow.rs:133-270 order."""
-    ms2us = F.lit(1000.0)
+    subflows = _double("subflow_count")
     return [
-        F.col("fwd_payload_len_count"),
-        F.col("bwd_payload_len_count"),
-        F.col("fwd_payload_len_total"),
-        F.col("bwd_payload_len_total"),
-        F.col("fwd_payload_len_max"),
-        F.col("fwd_payload_len_min"),
-        F.col("fwd_payload_len_mean"),
-        F.col("fwd_payload_len_std"),
-        F.col("bwd_payload_len_max"),
-        F.col("bwd_payload_len_min"),
-        F.col("bwd_payload_len_mean"),
-        F.col("bwd_payload_len_std"),
-        _rate_per_s(F.col("payload_len_total"), dur),
-        _rate_per_s(F.col("payload_len_count").cast("double"), dur),
-        F.col("iat_mean") * ms2us,
-        F.col("iat_std") * ms2us,
-        F.col("iat_max") * ms2us,
-        F.col("iat_min") * ms2us,
-        F.col("fwd_iat_total") * ms2us,
-        F.col("fwd_iat_mean") * ms2us,
-        F.col("fwd_iat_std") * ms2us,
-        F.col("fwd_iat_max") * ms2us,
-        F.col("fwd_iat_min") * ms2us,
-        F.col("bwd_iat_total") * ms2us,
-        F.col("bwd_iat_mean") * ms2us,
-        F.col("bwd_iat_std") * ms2us,
-        F.col("bwd_iat_max") * ms2us,
-        F.col("bwd_iat_min") * ms2us,
-        F.col("fwd_psh_flag_count"),
-        F.col("bwd_psh_flag_count"),
-        F.col("fwd_urg_flag_count"),
-        F.col("bwd_urg_flag_count"),
-        F.col("fwd_rst_flag_count"),
-        F.col("bwd_rst_flag_count"),
-        F.col("fwd_header_len_total"),
-        F.col("bwd_header_len_total"),
-        _rate_per_s(F.col("fwd_payload_len_count").cast("double"), dur),
-        _rate_per_s(F.col("bwd_payload_len_count").cast("double"), dur),
-        F.col("payload_len_min"),
-        F.col("payload_len_max"),
-        F.col("payload_len_mean"),
-        F.col("payload_len_std"),
-        F.col("payload_len_std") * F.col("payload_len_std"),
-        _flag_total("fin"),
-        _flag_total("syn"),
-        _flag_total("rst"),
-        _flag_total("psh"),
-        _flag_total("ack"),
-        _flag_total("urg"),
-        _flag_total("cwr"),
-        _flag_total("ece"),
-        _safe_div(
-            F.col("bwd_payload_len_count").cast("double"),
-            F.col("fwd_payload_len_count").cast("double"),
-        ),
-        F.col("payload_len_mean"),
-        F.col("fwd_payload_len_mean"),
-        F.col("bwd_payload_len_mean"),
-        F.col("fwd_bulk_bytes_mean"),
-        F.col("fwd_bulk_packets_mean"),
-        F.col("fwd_bulk_rate"),
-        F.col("bwd_bulk_bytes_mean"),
-        F.col("bwd_bulk_packets_mean"),
-        F.col("bwd_bulk_rate"),
-        _safe_div(
-            F.col("fwd_payload_len_count").cast("double"),
-            F.col("subflow_count").cast("double"),
-        ),
-        _safe_div(F.col("fwd_payload_len_total"), F.col("subflow_count").cast("double")),
-        _safe_div(
-            F.col("bwd_payload_len_count").cast("double"),
-            F.col("subflow_count").cast("double"),
-        ),
-        _safe_div(F.col("bwd_payload_len_total"), F.col("subflow_count").cast("double")),
-        F.col("fwd_init_window_size"),
-        F.col("bwd_init_window_size"),
-        F.col("fwd_non_zero_payload_packets"),
-        F.col("bwd_non_zero_payload_packets"),
-        F.col("fwd_header_len_min"),
-        F.col("bwd_header_len_min"),
-        F.col("active_mean"),
-        F.col("active_std"),
-        F.col("active_max"),
-        F.col("active_min"),
-        F.col("idle_mean"),
-        F.col("idle_std"),
-        F.col("idle_max"),
-        F.col("idle_min"),
-        F.col("icmp_code"),
-        F.col("icmp_type"),
-        F.col("icmp_echo_request_count"),
-        F.col("icmp_echo_reply_count"),
-        F.col("icmp_error_count"),
-        F.col("icmp_destination_unreachable_count"),
-        F.col("fwd_retransmission_count"),
-        F.col("bwd_retransmission_count"),
-        F.col("fwd_retransmission_count") + F.col("bwd_retransmission_count"),
+        "fwd_payload_len_count",
+        "bwd_payload_len_count",
+        "fwd_payload_len_total",
+        "bwd_payload_len_total",
+        "fwd_payload_len_max",
+        "fwd_payload_len_min",
+        "fwd_payload_len_mean",
+        "fwd_payload_len_std",
+        "bwd_payload_len_max",
+        "bwd_payload_len_min",
+        "bwd_payload_len_mean",
+        "bwd_payload_len_std",
+        _rate_per_s("payload_len_total", dur),
+        _rate_per_s(_double("payload_len_count"), dur),
+        *[_ms_to_us(c) for c in ("iat_mean", "iat_std", "iat_max", "iat_min")],
+        *[_ms_to_us(c) for c in _stats5("fwd_iat")],
+        *[_ms_to_us(c) for c in _stats5("bwd_iat")],
+        "fwd_psh_flag_count",
+        "bwd_psh_flag_count",
+        "fwd_urg_flag_count",
+        "bwd_urg_flag_count",
+        "fwd_rst_flag_count",
+        "bwd_rst_flag_count",
+        "fwd_header_len_total",
+        "bwd_header_len_total",
+        _rate_per_s(_double("fwd_payload_len_count"), dur),
+        _rate_per_s(_double("bwd_payload_len_count"), dur),
+        "payload_len_min",
+        "payload_len_max",
+        "payload_len_mean",
+        "payload_len_std",
+        "payload_len_std * payload_len_std",
+        *[_flag_total(n) for n in ("fin", "syn", "rst", "psh", "ack", "urg", "cwr", "ece")],
+        _safe_div(_double("bwd_payload_len_count"), _double("fwd_payload_len_count")),
+        "payload_len_mean",
+        "fwd_payload_len_mean",
+        "bwd_payload_len_mean",
+        "fwd_bulk_bytes_mean",
+        "fwd_bulk_packets_mean",
+        "fwd_bulk_rate",
+        "bwd_bulk_bytes_mean",
+        "bwd_bulk_packets_mean",
+        "bwd_bulk_rate",
+        _safe_div(_double("fwd_payload_len_count"), subflows),
+        _safe_div("fwd_payload_len_total", subflows),
+        _safe_div(_double("bwd_payload_len_count"), subflows),
+        _safe_div("bwd_payload_len_total", subflows),
+        "fwd_init_window_size",
+        "bwd_init_window_size",
+        "fwd_non_zero_payload_packets",
+        "bwd_non_zero_payload_packets",
+        "fwd_header_len_min",
+        "bwd_header_len_min",
+        "active_mean",
+        "active_std",
+        "active_max",
+        "active_min",
+        "idle_mean",
+        "idle_std",
+        "idle_max",
+        "idle_min",
+        "icmp_code",
+        "icmp_type",
+        "icmp_echo_request_count",
+        "icmp_echo_reply_count",
+        "icmp_error_count",
+        "icmp_destination_unreachable_count",
+        "fwd_retransmission_count",
+        "bwd_retransmission_count",
+        "fwd_retransmission_count + bwd_retransmission_count",
         dur,
     ]
 
 
 def cic_schema(flows: DataFrame, without_contamination: bool = False) -> DataFrame:
     """CicFlow 100-column layout (96 clean)."""
-    dur = F.col("duration_us").cast("double")
-    values = _cic_value_exprs(dur)
+    values = _cic_value_exprs(_double("duration_us"))
+    tcp = ["handshake_completed", "reset_before_handshake", "reset_after_handshake"]
     if without_contamination:
-        head = [
-            _iana(F.col("src_port")),
-            _iana(F.col("dst_port")),
-            F.col("protocol"),
-            F.col("duration_us"),
-            F.col("handshake_completed"),
-            F.col("reset_before_handshake"),
-            F.col("reset_after_handshake"),
-        ]
+        head = [_iana("src_port"), _iana("dst_port"), "protocol", "duration_us", *tcp]
         names = ["Src Port (IANA)", "Dst Port (IANA)"] + CIC_COLUMNS[5:6] + CIC_COLUMNS[7:]
     else:
         head = [
-            F.col("flow_key"),
-            F.col("src_ip"),
-            F.col("src_port"),
-            F.col("dst_ip"),
-            F.col("dst_port"),
-            F.col("protocol"),
-            F.col("first_ts_us"),
-            F.col("duration_us"),
-            F.col("handshake_completed"),
-            F.col("reset_before_handshake"),
-            F.col("reset_after_handshake"),
+            "flow_key", "src_ip", "src_port", "dst_ip", "dst_port", "protocol",
+            "first_ts_us", "duration_us", *tcp,
         ]
         names = CIC_COLUMNS
-    cols = head + values
-    return flows.select(*[c.alias(n) for c, n in zip(cols, names)])
+    return _project(flows, head + values, names)
 
 
 def cidds_schema(flows: DataFrame, without_contamination: bool = False) -> DataFrame:
     """CiddsFlow 10-column layout (cidds_flow.rs:79-109); clean variant =
     7 columns (cidds_flow.rs:111-135)."""
     proto_str = (
-        F.when(F.col("protocol") == 6, "TCP")
-        .when(F.col("protocol") == 17, "UDP")
-        .when(F.col("protocol").isin(1, 58), "ICMP")
-        .otherwise("OTHER")
+        "CASE WHEN protocol = 6 THEN 'TCP' WHEN protocol = 17 THEN 'UDP' "
+        "WHEN protocol IN (1, 58) THEN 'ICMP' ELSE 'OTHER' END"
     )
+    tail = [
+        proto_str, "CAST(duration_us / 1000 AS BIGINT)",
+        _flow_pkt_total(), _flow_pkt_count(), "flags",
+    ]
+    tail_names = ["Proto", "Duration", "Bytes", "Packets", "Flags"]
     if without_contamination:
-        return flows.select(
-            _iana(F.col("src_port")).alias("Src Port (IANA)"),
-            _iana(F.col("dst_port")).alias("Dst Port (IANA)"),
-            proto_str.alias("Proto"),
-            (F.col("duration_us") / 1000).cast("long").alias("Duration"),
-            _flow_pkt_total().alias("Bytes"),
-            _flow_pkt_count().alias("Packets"),
-            F.col("flags").alias("Flags"),
+        return _project(
+            flows,
+            [_iana("src_port"), _iana("dst_port")] + tail,
+            ["Src Port (IANA)", "Dst Port (IANA)"] + tail_names,
         )
-    return flows.select(
-        F.col("src_ip").alias("Src IP"),
-        F.col("src_port").alias("Src Port"),
-        F.col("dst_ip").alias("Dst IP"),
-        F.col("dst_port").alias("Dst Port"),
-        proto_str.alias("Proto"),
-        F.col("first_ts_us").alias("Date first seen"),
-        (F.col("duration_us") / 1000).cast("long").alias("Duration"),
-        _flow_pkt_total().alias("Bytes"),
-        _flow_pkt_count().alias("Packets"),
-        F.col("flags").alias("Flags"),
+    return _project(
+        flows,
+        ["src_ip", "src_port", "dst_ip", "dst_port", proto_str, "first_ts_us"] + tail[1:],
+        ["Src IP", "Src Port", "Dst IP", "Dst Port", "Proto", "Date first seen"]
+        + tail_names[1:],
     )
 
 
@@ -377,87 +334,61 @@ def nf_schema(flows: DataFrame, without_contamination: bool = False) -> DataFram
     """NfFlow 71-column layout (nf_flow.rs:129-290); clean variant = 61
     columns (nf_flow.rs:292-431)."""
     expiration_id = (
-        F.when(F.col("cause") == "Active Timeout", 1)
-        .when(F.col("cause").isin("Idle Timeout", "TCP Normal Termination"), 0)
-        .otherwise(-1)
+        "CASE WHEN cause = 'Active Timeout' THEN 1 "
+        "WHEN cause IN ('Idle Timeout', 'TCP Normal Termination') THEN 0 ELSE -1 END"
     )
+    duration_ms = "CAST(duration_us / 1000 AS BIGINT)"
     if without_contamination:
         cols = [
-            _iana(F.col("src_port")),
-            _iana(F.col("dst_port")),
-            F.col("protocol"),
-            F.col("ip_version"),
-            (F.col("duration_us") / 1000).cast("long"),
+            _iana("src_port"),
+            _iana("dst_port"),
+            "protocol",
+            "ip_version",
+            duration_ms,
             _flow_pkt_count(),
             _flow_pkt_total(),
-            F.col("fwd_duration_ms"),
-            F.col("fwd_packet_len_count"),
-            F.col("fwd_packet_len_total"),
-            F.col("bwd_duration_ms"),
-            F.col("bwd_packet_len_count"),
-            F.col("bwd_packet_len_total"),
+            "fwd_duration_ms",
+            "fwd_packet_len_count",
+            "fwd_packet_len_total",
+            "bwd_duration_ms",
+            "bwd_packet_len_count",
+            "bwd_packet_len_total",
         ]
         names = NF_CLEAN_COLUMNS
     else:
         cols = [
-            F.col("flow_key"),
+            "flow_key",
             expiration_id,
-            F.col("src_ip"),
-            F.col("src_port"),
-            F.col("dst_ip"),
-            F.col("dst_port"),
-            F.col("protocol"),
-            F.col("ip_version"),
-            (F.col("first_ts_us") / 1000).cast("long"),
-            (F.col("last_ts_us") / 1000).cast("long"),
-            (F.col("duration_us") / 1000).cast("long"),
+            "src_ip",
+            "src_port",
+            "dst_ip",
+            "dst_port",
+            "protocol",
+            "ip_version",
+            "CAST(first_ts_us / 1000 AS BIGINT)",
+            "CAST(last_ts_us / 1000 AS BIGINT)",
+            duration_ms,
             _flow_pkt_count(),
             _flow_pkt_total(),
-            F.col("first_ts_fwd_ms"),
-            F.col("last_ts_fwd_ms"),
-            F.col("fwd_duration_ms"),
-            F.col("fwd_packet_len_count"),
-            F.col("fwd_packet_len_total"),
-            F.col("first_ts_bwd_ms"),
-            F.col("last_ts_bwd_ms"),
-            F.col("bwd_duration_ms"),
-            F.col("bwd_packet_len_count"),
-            F.col("bwd_packet_len_total"),
+            "first_ts_fwd_ms",
+            "last_ts_fwd_ms",
+            "fwd_duration_ms",
+            "fwd_packet_len_count",
+            "fwd_packet_len_total",
+            "first_ts_bwd_ms",
+            "last_ts_bwd_ms",
+            "bwd_duration_ms",
+            "bwd_packet_len_count",
+            "bwd_packet_len_total",
         ]
         names = NF_COLUMNS
-    cols += [
-        _flow_pkt_min(),
-        _flow_pkt_mean(),
-        _flow_pkt_std(),
-        _flow_pkt_max(),
-        F.col("fwd_packet_len_min"),
-        F.col("fwd_packet_len_mean"),
-        F.col("fwd_packet_len_std"),
-        F.col("fwd_packet_len_max"),
-        F.col("bwd_packet_len_min"),
-        F.col("bwd_packet_len_mean"),
-        F.col("bwd_packet_len_std"),
-        F.col("bwd_packet_len_max"),
-        F.col("iat_min"),
-        F.col("iat_mean"),
-        F.col("iat_std"),
-        F.col("iat_max"),
-        F.col("fwd_iat_min"),
-        F.col("fwd_iat_mean"),
-        F.col("fwd_iat_std"),
-        F.col("fwd_iat_max"),
-        F.col("bwd_iat_min"),
-        F.col("bwd_iat_mean"),
-        F.col("bwd_iat_std"),
-        F.col("bwd_iat_max"),
-    ]
-    for n in ("syn", "cwr", "ece", "urg", "ack", "psh", "rst", "fin"):
-        cols.append(_flag_total(n))
-    for d in ("fwd", "bwd"):
-        for n in ("syn", "cwr", "ece", "urg", "ack", "psh", "rst", "fin"):
-            cols.append(F.col(f"{d}_{n}_flag_count"))
-    assert len(cols) == len(names), (len(cols), len(names))
-    return flows.select(*[c.alias(n) for c, n in zip(cols, names)])
+    cols += [_flow_pkt_min(), _flow_pkt_mean(), _flow_pkt_std(), _flow_pkt_max()]
+    for block in ("fwd_packet_len", "bwd_packet_len", "iat", "fwd_iat", "bwd_iat"):
+        cols += [f"{block}_{s}" for s in ("min", "mean", "std", "max")]
+    flags = ("syn", "cwr", "ece", "urg", "ack", "psh", "rst", "fin")
+    cols += [_flag_total(n) for n in flags]
+    cols += [f"{d}_{n}_flag_count" for d in ("fwd", "bwd") for n in flags]
+    return _project(flows, cols, names)
 
 
 RUSTIFLOW_COLUMNS = (
@@ -544,52 +475,25 @@ RUSTIFLOW_CLEAN_COLUMNS = (
 def rustiflow_schema(flows: DataFrame, without_contamination: bool = False) -> DataFrame:
     """RustiFlow 203-column layout (rusti_flow.rs:139-303); clean variant =
     194 columns (rusti_flow.rs:300-460)."""
-    dur = F.col("duration_us").cast("double")
+    dur = _double("duration_us")
+    tcp = [
+        "cause", "handshake_completed", "reset_before_handshake",
+        "reset_after_handshake", "close_style",
+    ]
     if without_contamination:
-        cols: list[Column] = [
-            _iana(F.col("src_port")),
-            _iana(F.col("dst_port")),
-            F.col("protocol"),
-            F.col("ip_version"),
-            F.col("src_ip_scope"),
-            F.col("dst_ip_scope"),
-            F.col("path_locality"),
-            F.col("duration_us"),
-            F.col("cause"),
-            F.col("handshake_completed"),
-            F.col("reset_before_handshake"),
-            F.col("reset_after_handshake"),
-            F.col("close_style"),
-            F.col("fwd_duration_ms"),
-            F.col("bwd_duration_ms"),
+        cols = [
+            _iana("src_port"), _iana("dst_port"), "protocol", "ip_version",
+            "src_ip_scope", "dst_ip_scope", "path_locality", "duration_us",
+            *tcp, "fwd_duration_ms", "bwd_duration_ms",
         ]
         names = RUSTIFLOW_CLEAN_COLUMNS
     else:
         cols = [
-            F.col("flow_key"),
-            F.col("src_ip"),
-            F.col("src_port"),
-            F.col("dst_ip"),
-            F.col("dst_port"),
-            F.col("protocol"),
-            F.col("ip_version"),
-            F.col("src_ip_scope"),
-            F.col("dst_ip_scope"),
-            F.col("path_locality"),
-            F.col("first_ts_us"),
-            F.col("last_ts_us"),
-            F.col("duration_us"),
-            F.col("cause"),
-            F.col("handshake_completed"),
-            F.col("reset_before_handshake"),
-            F.col("reset_after_handshake"),
-            F.col("close_style"),
-            F.col("first_ts_fwd_ms"),
-            F.col("first_ts_bwd_ms"),
-            F.col("last_ts_fwd_ms"),
-            F.col("last_ts_bwd_ms"),
-            F.col("fwd_duration_ms"),
-            F.col("bwd_duration_ms"),
+            "flow_key", "src_ip", "src_port", "dst_ip", "dst_port", "protocol",
+            "ip_version", "src_ip_scope", "dst_ip_scope", "path_locality",
+            "first_ts_us", "last_ts_us", "duration_us", *tcp,
+            "first_ts_fwd_ms", "first_ts_bwd_ms", "last_ts_fwd_ms",
+            "last_ts_bwd_ms", "fwd_duration_ms", "bwd_duration_ms",
         ]
         names = RUSTIFLOW_COLUMNS
     cols += _stats5("iat") + _stats5("fwd_iat") + _stats5("bwd_iat")
@@ -600,76 +504,56 @@ def rustiflow_schema(flows: DataFrame, without_contamination: bool = False) -> D
         _flow_pkt_max(),
         _flow_pkt_min(),
         _flow_pkt_std(),
-        F.col("fwd_packet_len_count"),
-        F.col("bwd_packet_len_count"),
+        "fwd_packet_len_count",
+        "bwd_packet_len_count",
     ]
     cols += _stats5("fwd_packet_len") + _stats5("bwd_packet_len")
     cols += _stats5("header_len") + _stats5("fwd_header_len") + _stats5("bwd_header_len")
     cols += _stats5("payload_len")
-    cols += [F.col("payload_len_std") * F.col("payload_len_std")]
+    cols += ["payload_len_std * payload_len_std"]
     cols += _stats5("fwd_payload_len") + _stats5("bwd_payload_len")
-    cols += [F.col("fwd_non_zero_payload_packets"), F.col("bwd_non_zero_payload_packets")]
-    cols += [
-        F.col("fwd_bulk_rate"),
-        F.col("bwd_bulk_rate"),
-        F.col("fwd_bulk_packets_count"),
-        F.col("bwd_bulk_packets_count"),
-    ]
+    cols += ["fwd_non_zero_payload_packets", "bwd_non_zero_payload_packets"]
+    cols += ["fwd_bulk_rate", "bwd_bulk_rate", "fwd_bulk_packets_count", "bwd_bulk_packets_count"]
     cols += _stats5("fwd_bulk_packets") + _stats5("bwd_bulk_packets")
     cols += _stats5("fwd_bulk_bytes") + _stats5("bwd_bulk_bytes")
     cols += _stats5("fwd_bulk_duration") + _stats5("bwd_bulk_duration")
-    cols += [F.col("subflow_count")]
+    cols += ["subflow_count"]
     cols += _stats5("active") + _stats5("idle")
     cols += [
-        F.col("icmp_type"),
-        F.col("icmp_code"),
-        F.col("icmp_echo_request_count"),
-        F.col("icmp_echo_reply_count"),
-        F.col("icmp_error_count"),
-        F.col("icmp_destination_unreachable_count"),
-        F.col("fwd_retransmission_count") + F.col("bwd_retransmission_count"),
-        F.col("fwd_retransmission_count"),
-        F.col("bwd_retransmission_count"),
-        F.col("fwd_duplicate_ack_count") + F.col("bwd_duplicate_ack_count"),
-        F.col("fwd_duplicate_ack_count"),
-        F.col("bwd_duplicate_ack_count"),
-        F.col("fwd_zero_window_count") + F.col("bwd_zero_window_count"),
-        F.col("fwd_zero_window_count"),
-        F.col("bwd_zero_window_count"),
-        F.col("fwd_init_window_size"),
-        F.col("bwd_init_window_size"),
+        "icmp_type",
+        "icmp_code",
+        "icmp_echo_request_count",
+        "icmp_echo_reply_count",
+        "icmp_error_count",
+        "icmp_destination_unreachable_count",
     ]
+    for kind in ("retransmission", "duplicate_ack", "zero_window"):
+        cols += [
+            f"fwd_{kind}_count + bwd_{kind}_count",
+            f"fwd_{kind}_count",
+            f"bwd_{kind}_count",
+        ]
+    cols += ["fwd_init_window_size", "bwd_init_window_size"]
     cols += _stats5("window_size") + _stats5("fwd_window_size") + _stats5("bwd_window_size")
-    for d in ("fwd", "bwd"):
-        for n in ("fin", "syn", "rst", "psh", "ack", "urg", "cwr", "ece"):
-            cols.append(F.col(f"{d}_{n}_flag_count"))
-    for n in ("fin", "syn", "rst", "psh", "ack", "urg", "cwr", "ece"):
-        cols.append(_flag_total(n))
-    cols.append(F.col("flags"))
+    flags = ("fin", "syn", "rst", "psh", "ack", "urg", "cwr", "ece")
+    cols += [f"{d}_{n}_flag_count" for d in ("fwd", "bwd") for n in flags]
+    cols += [_flag_total(n) for n in flags]
+    cols.append("flags")
+    subflows = _double("subflow_count")
     cols += [
-        _rate_per_s(F.col("payload_len_total"), dur),
-        _rate_per_s(F.col("payload_len_count").cast("double"), dur),
-        _rate_per_s(F.col("fwd_payload_len_total"), dur),
-        _rate_per_s(F.col("fwd_payload_len_count").cast("double"), dur),
-        _rate_per_s(F.col("bwd_payload_len_total"), dur),
-        _rate_per_s(F.col("bwd_payload_len_count").cast("double"), dur),
-        _safe_div(
-            F.col("fwd_payload_len_count").cast("double"),
-            F.col("subflow_count").cast("double"),
-        ),
-        _safe_div(F.col("fwd_payload_len_total"), F.col("subflow_count").cast("double")),
-        _safe_div(
-            F.col("bwd_payload_len_count").cast("double"),
-            F.col("subflow_count").cast("double"),
-        ),
-        _safe_div(F.col("bwd_payload_len_total"), F.col("subflow_count").cast("double")),
-        _safe_div(
-            F.col("bwd_payload_len_count").cast("double"),
-            F.col("fwd_payload_len_count").cast("double"),
-        ),
+        _rate_per_s("payload_len_total", dur),
+        _rate_per_s(_double("payload_len_count"), dur),
+        _rate_per_s("fwd_payload_len_total", dur),
+        _rate_per_s(_double("fwd_payload_len_count"), dur),
+        _rate_per_s("bwd_payload_len_total", dur),
+        _rate_per_s(_double("bwd_payload_len_count"), dur),
+        _safe_div(_double("fwd_payload_len_count"), subflows),
+        _safe_div("fwd_payload_len_total", subflows),
+        _safe_div(_double("bwd_payload_len_count"), subflows),
+        _safe_div("bwd_payload_len_total", subflows),
+        _safe_div(_double("bwd_payload_len_count"), _double("fwd_payload_len_count")),
     ]
-    assert len(cols) == len(names), (len(cols), len(names))
-    return flows.select(*[c.alias(n) for c, n in zip(cols, names)])
+    return _project(flows, cols, names)
 
 
 SCHEMAS = {

@@ -6,9 +6,15 @@ timestamped events (e.g. pre-tokenized training sequences keyed by
 with the reference's timeout semantics and reduced to one feature vector
 per session.
 
-Plan shape (one shuffle):
+Plan shape of the kernel path (one shuffle):
 
-    scan -> groupBy(key).applyInPandas(event kernel) -> feature rows
+    scan -> repartition(key) -> sortWithinPartitions(key, ts, seq)
+         -> mapInArrow(block kernel, key-run carry) -> feature rows
+
+``strategy='catalyst'`` (or 'auto') replaces the Python stage with
+windows + aggregations (sessionize_events_catalyst). With scan_mode
+'exact' or 'bucket', building the query also runs one timeline query
+over the ts column (timeline.compute_timeline); with 'none' it submits no job.
 
 ``assign_sessions`` instead returns the input rows annotated with
 (session_index, session_cause) — the payload columns (e.g. ``tokens``)
@@ -235,6 +241,34 @@ def _feature_schema(
     return T.StructType(fields)
 
 
+def _require_no_nulls(batch, names: list[str]) -> None:
+    """Raise if a kernel input column holds NULL: to_numpy would turn it
+    into NaN and astype(int64) into an arbitrary integer."""
+    for name in names:
+        nulls = batch.column(batch.schema.get_field_index(name)).null_count
+        if nulls:
+            raise ValueError(
+                f"column {name!r} has {nulls} NULL value(s); the session "
+                "kernel needs every row's value (filter or fill them first)"
+            )
+
+
+def _concat_batches(batches):
+    """One RecordBatch with every row of ``batches``, in order.
+
+    pa.concat_arrays raises (offset overflow) instead of splitting a
+    column that does not fit one array, so no row is ever dropped."""
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.concat_arrays([b.column(i) for b in batches])
+            for i in range(batches[0].num_columns)
+        ],
+        schema=batches[0].schema,
+    )
+
+
 def sessionize_events(
     df: DataFrame,
     key_cols: list[str],
@@ -253,7 +287,7 @@ def sessionize_events(
     """One row per session with the event feature vector (EVENT_FEATURE_COLUMNS).
 
     Scale path: hash-repartition by key, sort within partitions by
-    (key, ts, seq), then a mapInPandas pass over the sorted stream feeds the
+    (key, ts, seq), then a mapInArrow pass over the sorted stream feeds the
     segment-vectorized block kernel (kernel/segmented.py). Arrow batches that
     split a key are stitched by buffering the trailing (possibly incomplete)
     key of each batch — so the plan is exactly one shuffle and the Python
@@ -263,6 +297,13 @@ def sessionize_events(
     both computation and the Arrow-returned columns (the session output can
     exceed the input volume for sparse keys; see the module docstring of
     kernel/segmented.py).
+
+    flush_ts: time leftover sessions are flushed at ("Exporter Shutdown"
+    close time). Optional: no output depends on it, and None flushes at
+    end of input (timeline.END_OF_INPUT_US) without reading the input.
+
+    The ts, value, direction and terminator columns must not hold NULL:
+    the kernel raises rather than decoding one into an integer.
 
     strategy: 'kernel' (default) always runs the Arrow block kernel;
     'catalyst' forces the zero-Python windows+aggregations plan
@@ -384,7 +425,14 @@ def sessionize_events(
 
     arrow_schema = to_arrow_schema(schema)
 
+    numeric = [
+        c
+        for c in (ts_col, value_col, direction_col, terminator_col, next_ts_col)
+        if c
+    ]
+
     def _batch_cols(b) -> dict[str, np.ndarray]:
+        _require_no_nulls(b, numeric)
         return {
             name: b.column(i).to_numpy(zero_copy_only=False)
             for i, name in enumerate(b.schema.names)
@@ -480,6 +528,9 @@ def assign_sessions(
     window plan (assign_sessions_catalyst) whenever scan is off (finite
     active timeouts included, via bounded-pass cut refinement), which
     keeps the payload bytes out of the Arrow round trip entirely.
+
+    flush_ts: as in sessionize_events. The ts and terminator columns must
+    not hold NULL (the kernel path raises).
     """
     from rustiflow_spark.kernel.segmented import (
         _CAUSE_STRINGS,
@@ -531,6 +582,7 @@ def assign_sessions(
     def process_block(b, key_np: dict[str, np.ndarray]):
         import pyarrow as pa
 
+        _require_no_nulls(b, [ts_col] + ([terminator_col] if terminator_col else []))
         ts = (
             b.column(name_idx[ts_col])
             .to_numpy(zero_copy_only=False)
@@ -568,20 +620,11 @@ def assign_sessions(
             list(b.columns) + [si, sc_], schema=arrow_schema
         )
 
-    def _concat(a, b):
-        import pyarrow as pa
-
-        t = pa.Table.from_batches([a, b]).combine_chunks()
-        batches = t.to_batches()
-        return batches[0] if len(batches) == 1 else pa.Table.from_batches(
-            batches
-        ).combine_chunks().to_batches()[0]
-
     def run_partition(batches):
         carry = None
         for b in batches:
             if carry is not None and carry.num_rows:
-                b = _concat(carry, b)
+                b = _concat_batches([carry, b])
             n = b.num_rows
             if not n:
                 continue

@@ -1,13 +1,21 @@
 """Sessionization operator: packet events -> per-flow feature vectors.
 
-Spark plan shape (one shuffle total):
+Spark plan shape (one shuffle):
 
-    scan (parquet/Iceberg, pruned columns)
+    scan (parquet/Iceberg/pcap, pruned columns)
       -> canonical biflow key columns               [Catalyst exprs, codegen]
-      -> groupBy(key).applyInPandas(kernel)         [hash shuffle on key,
-                                                     Arrow batches, NumPy]
+      -> repartition(key) + sortWithinPartitions    [hash shuffle on key,
+         (xxhash64(key), key, ts_us, event_seq)      radix-sortable prefix]
+      -> mapInArrow(block kernel)                   [sorted Arrow batches,
+                                                     NumPy, key-run carry]
       -> feature superset DataFrame                 [downstream selects are
                                                      pure column pruning]
+
+engine='simple' replaces the shuffle, sort and kernel steps with
+groupBy(key).applyInPandas over the per-group reference kernel
+(differential testing only). With scan_mode 'exact' or 'bucket',
+building the query also runs one timeline query over the ts_us column
+(timeline.compute_timeline); with 'none' it submits no job.
 
 The canonical key makes both directions of a biflow land in one group —
 the analog of the reference's canonical-hash shard routing (pcap.rs:243-249,
@@ -96,14 +104,15 @@ def sessionize_packets(
     feature superset columns (schema.FLOW_SUPERSET_SCHEMA).
 
     engine: 'vectorized' — segment-vectorized block kernel over sorted
-    partitions (mapInPandas; the scale path, ~2 orders of magnitude faster),
+    partitions (mapInArrow; the scale path, ~2 orders of magnitude faster),
     including early-export snapshots via gather-expansion; 'simple' —
     per-group applyInPandas kernel (reference implementation, kept for
     differential testing); 'auto' always picks vectorized. Both produce
     identical output (asserted by tests/test_packet_vectorized.py).
 
-    flush_ts: known max event timestamp (e.g. parquet/Iceberg column stats
-    via sources.tables.parquet_column_max) — skips the extra ts column scan.
+    flush_ts: time leftover sessions are flushed at ("Exporter Shutdown"
+    close time). Optional: no output depends on it, and None flushes at
+    end of input (timeline.END_OF_INPUT_US) without reading the input.
 
     columns: optional iterable of superset column names the caller's
     downstream projection reads (derive automatically with
@@ -128,7 +137,7 @@ def sessionize_packets(
     scan_times, flush_ts = compute_timeline(df, "ts_us", cfg, flush_ts=flush_ts)
 
     keyed = with_canonical_key(df)
-    # mapInPandas/applyInPandas are opaque to Catalyst's column pruning:
+    # mapInArrow/applyInPandas are opaque to Catalyst's column pruning:
     # everything still on the frame is shuffled, sorted AND shipped
     # through Arrow. The kernel only reads the canonical key + the int
     # feature columns — the directed src/dst endpoints are dead after
@@ -274,7 +283,7 @@ def sessionize_packets(
     # sf1.0). Grouping contiguity is preserved under ANY total order
     # that puts the real key columns right after the hash, and
     # within-key order (ts, seq) is untouched; the kernel's adjacency
-    # run detection never sees __ks (dropped before mapInPandas).
+    # run detection never sees __ks (dropped before mapInArrow).
     keyed = keyed.withColumn("__ks", F.xxhash64(*_KEY_COLS))
     keyed = keyed.sortWithinPartitions("__ks", *sort_cols).drop("__ks")
     return keyed.mapInArrow(run_partition, schema=out_schema)

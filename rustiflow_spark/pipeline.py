@@ -37,8 +37,7 @@ def token_feature_pipeline(
     as-of join against each session's first timestamp (backward,
     leakage-free).
 
-    flush_ts: known max event timestamp (parquet/Iceberg column statistics)
-    — avoids the extra ts column scan per run.
+    flush_ts: as in sessionize_events — optional, no output depends on it.
     """
     cfg = cfg or EngineConfig()
     key = ["source", "doc_id"]

@@ -525,9 +525,14 @@ def resync_offset(
     Classic pcap has no sync markers, so a byte-range split must find its
     first record boundary heuristically: an offset qualifies when `chain`
     consecutive records starting there all carry a sane timestamp
-    (1980..2100, frac within unit), a sane length (1..MAX_SANE_FRAME), and
-    chain to each other (the standard distributed-pcap technique; 5-deep
-    validation makes a payload-byte false positive vanishingly unlikely).
+    (1980..2100, frac within unit), sane lengths (1 <= incl_len <=
+    orig_len <= MAX_SANE_FRAME: a capture never stores more bytes than the
+    packet had), and chain to each other (the standard distributed-pcap
+    technique; 5-deep validation makes a payload-byte false positive
+    vanishingly unlikely). The incl_len <= orig_len check rejects the
+    header read 4 bytes late on nanosecond captures, whose fields
+    (frac, incl, orig, first frame bytes) otherwise pass every other test
+    and chain exactly like the true records.
 
     Candidate offsets are prefiltered with one vectorized pass over the
     scan window (header-field sanity at every byte offset); only survivors
@@ -570,7 +575,7 @@ def resync_offset(
         & (ts <= _TS_SEC_MAX)
         & (frac < frac_lim)
         & (incl > 0)
-        & (incl <= MAX_SANE_FRAME)
+        & (incl <= orig)
         & (orig <= MAX_SANE_FRAME)
     )
 
@@ -584,7 +589,7 @@ def resync_offset(
                 break
             if ts_frac >= frac_lim or inc == 0:
                 break
-            if inc > MAX_SANE_FRAME or org > MAX_SANE_FRAME:
+            if inc > org or org > MAX_SANE_FRAME:
                 break
             p += 16 + inc
             ok += 1

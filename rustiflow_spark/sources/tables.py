@@ -38,12 +38,11 @@ def read_table(spark: SparkSession, path_or_table: str, fmt: str = "auto") -> Da
 
 def parquet_column_max(path: str, column: str) -> int | None:
     """Max value of a column from parquet footer statistics only — zero data
-    pages read. Used to supply the engine's flush timestamp (the shard-global
-    max event time) without an extra full column scan per query; the Iceberg
-    analog is the manifest-level upper_bounds map.
+    pages read. Gives the input's last event time (the reference's flush
+    time) to callers that want to pass it as flush_ts; the Iceberg analog
+    is the manifest-level upper_bounds map.
 
-    Returns None when any row group lacks statistics for the column (the
-    caller then falls back to the aggregate scan).
+    Returns None when any row group lacks statistics for the column.
     """
     import os
 

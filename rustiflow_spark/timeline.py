@@ -72,6 +72,14 @@ def scan_times_from_bucket_mins(
 # timestamps rather than collecting them all to the driver
 EXACT_SCAN_MAX_TIMESTAMPS = 2_000_000
 
+# Flush time used when the caller does not know the input's last event
+# time. It is exact: the flush time only becomes the close time of
+# "Exporter Shutdown" sessions, which no output reads (the trailing-idle
+# sample is taken for "Idle Timeout" sessions only), and the kernels'
+# "scan beyond end of input" guard cannot fire because scan times are
+# event timestamps.
+END_OF_INPUT_US = int(np.iinfo(np.int64).max)
+
 
 def compute_timeline(
     df, ts_col: str, cfg: EngineConfig, flush_ts: int | None = None
@@ -81,19 +89,18 @@ def compute_timeline(
     scan_mode 'exact' collects the sorted distinct timestamps (test scale /
     single shard domain) and degrades to 'bucket' past
     EXACT_SCAN_MAX_TIMESTAMPS distinct values instead of OOMing the driver;
-    'none' returns an empty timeline. flush_ts is the shard-global max event
-    time (flow_table.rs:180; pcap.rs:277-285).
+    'none' returns an empty timeline and submits no Spark job.
 
-    flush_ts: pass the known max event timestamp (e.g. from parquet/Iceberg
-    column statistics, sources.tables.parquet_column_max) to skip the extra
-    full column scan — with scan_mode 'none' the timeline then costs zero
-    Spark jobs.
+    flush_ts: the time leftover sessions are flushed at (the reference
+    flushes at the last timestamp it has seen, flow_table.rs:180;
+    pcap.rs:277-285). It is returned unchanged; None becomes
+    END_OF_INPUT_US, which yields the same output as the true last event
+    time without a pass over the input to find it.
     """
     from pyspark.sql import functions as F
 
     if flush_ts is None:
-        agg = df.agg(F.max(ts_col).alias("mx")).collect()[0]
-        flush_ts = int(agg["mx"]) if agg["mx"] is not None else 0
+        flush_ts = END_OF_INPUT_US
     if cfg.scan_mode == "none":
         return np.empty(0, dtype=np.int64), flush_ts
 

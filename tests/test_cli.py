@@ -3,12 +3,19 @@
 from __future__ import annotations
 
 import json
+import os
 
 import pandas as pd
+import pytest
 
 DATA = "/root/reference/rustiflow/tests/data"
 
+needs_data = pytest.mark.skipif(
+    not os.path.exists(DATA), reason=f"reference pcap fixtures not found at {DATA}"
+)
 
+
+@needs_data
 def test_cli_extract_pcap(spark, tmp_path, capsys):
     from rustiflow_spark.cli import main
 
@@ -48,6 +55,7 @@ def test_cli_tokens_parquet(spark, tmp_path, capsys):
     assert summary["rows"] > 0
 
 
+@needs_data
 def test_cli_toml_config(spark, tmp_path, capsys):
     """confy/TOML analog (args.rs:6-210, config.toml): file values apply
     as defaults; explicit CLI flags still win; export_path supplies

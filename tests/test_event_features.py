@@ -152,3 +152,72 @@ def test_spark_event_features_and_token_passthrough(spark):
     for i in range(len(left)):
         assert list(left["tokens"][i]) == list(right["tokens"][i])
     assert (right.groupby(["source", "doc_id"])["session_index"].min() == 0).all()
+
+
+def test_concat_batches_keeps_every_row():
+    """The key-run carry of assign_sessions joins batches into one; every
+    row of every input batch must survive, payload arrays and NULLs
+    included."""
+    import pyarrow as pa
+
+    from rustiflow_spark.operators.event_features import _concat_batches
+
+    schema = pa.schema([("k", pa.int64()), ("tokens", pa.list_(pa.string()))])
+    batches = [
+        pa.RecordBatch.from_pydict(
+            {"k": [i, i + 1], "tokens": [[f"t{i}"], None]}, schema=schema
+        )
+        for i in range(0, 6, 2)
+    ]
+    out = _concat_batches(batches)
+    assert isinstance(out, pa.RecordBatch)
+    assert out.to_pydict() == pa.Table.from_batches(batches).to_pydict()
+    assert out.num_rows == 6
+
+
+def test_assign_sessions_small_arrow_batches(spark):
+    """Keys spanning many Arrow batches (carry joined batch after batch)
+    give the same annotation as one batch per partition."""
+    from rustiflow_spark.operators.event_features import assign_sessions
+
+    pdf = generate_token_sequences(n_docs=30, seed=8)
+    sdf = spark.createDataFrame(pdf)
+    cfg = EngineConfig(scan_mode="none")
+    key = ["source", "doc_id"]
+
+    def run():
+        return (
+            assign_sessions(sdf, key, cfg).toPandas()
+            .sort_values("event_seq").reset_index(drop=True)
+        )
+
+    base = run()
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "3")
+    try:
+        small = run()
+    finally:
+        spark.conf.set(conf, old)
+    assert len(small) == len(pdf)
+    pd.testing.assert_frame_equal(
+        base.drop(columns="tokens"), small.drop(columns="tokens")
+    )
+    assert [list(t) for t in base["tokens"]] == [list(t) for t in small["tokens"]]
+
+
+@pytest.mark.parametrize("op", ["sessionize_events", "assign_sessions"])
+def test_null_timestamp_fails_loudly(spark, op):
+    """A NULL ts must raise, not become an arbitrary integer timestamp."""
+    from rustiflow_spark.operators import event_features
+
+    from pyspark.sql import functions as F
+
+    sdf = spark.createDataFrame(generate_token_sequences(n_docs=5, seed=2))
+    first = sdf.agg(F.min("event_seq")).first()[0]
+    sdf = sdf.withColumn(
+        "ts_us", F.expr(f"CASE WHEN event_seq = {first} THEN NULL ELSE ts_us END")
+    )
+    fn = getattr(event_features, op)
+    with pytest.raises(Exception, match="'ts_us' has 1 NULL"):
+        fn(sdf, ["source", "doc_id"], EngineConfig(scan_mode="none")).collect()

@@ -85,3 +85,25 @@ def test_schema_values_sane(flows):
     assert nf["expiration_id"].isin([-1, 0, 1]).all()
     cid = cidds_schema(flows).toPandas()
     assert cid["Proto"].isin(["TCP", "UDP", "ICMP", "OTHER"]).all()
+
+
+def test_projection_types_pinned(spark):
+    """Every layout keeps its column names and Spark types exactly. The
+    layouts are SQL text, where a dropped cast or a literal of the wrong
+    type changes a column's type without any error."""
+    import json
+    import os
+
+    from rustiflow_spark.schema import FLOW_SUPERSET_SCHEMA
+
+    with open(os.path.join(os.path.dirname(__file__), "flow_schema_pins.json")) as f:
+        pins = json.load(f)
+    empty = spark.createDataFrame([], FLOW_SUPERSET_SCHEMA)
+    got = {
+        name + ("_clean" if clean else ""): fn(
+            empty, without_contamination=clean
+        ).schema.simpleString()
+        for name, fn in SCHEMAS.items()
+        for clean in (False, True)
+    }
+    assert got == pins

@@ -22,6 +22,10 @@ from test_sessionize_spark import make_events_df
 
 DATA = "/root/reference/rustiflow/tests/data"
 
+needs_data = pytest.mark.skipif(
+    not os.path.exists(DATA), reason=f"reference pcap fixtures not found at {DATA}"
+)
+
 
 def extract(spark, name: str) -> pd.DataFrame:
     pdf = decode_pcap(os.path.join(DATA, name))
@@ -30,6 +34,7 @@ def extract(spark, name: str) -> pd.DataFrame:
     return flows.toPandas(), pdf
 
 
+@needs_data
 def test_tcp_syn_fixture(spark):
     flows, pdf = extract(spark, "nmap_tcp_syn_version.pcap")
     assert len(flows) == 17
@@ -64,6 +69,7 @@ def test_tcp_syn_fixture(spark):
     assert len(rf.columns) == 203
 
 
+@needs_data
 def test_udp_fixture(spark):
     flows, pdf = extract(spark, "nmap_udp_version.pcap")
     assert len(flows) == 56

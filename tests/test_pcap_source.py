@@ -3,7 +3,10 @@ driver-side decoder, and feed sessionize_packets end-to-end."""
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
+import pytest
 
 from rustiflow_spark.config import EngineConfig
 from rustiflow_spark.operators.sessionize import sessionize_packets
@@ -11,7 +14,12 @@ from rustiflow_spark.sources.pcap import decode_pcap, read_pcap
 
 DATA = "/root/reference/rustiflow/tests/data"
 
+needs_data = pytest.mark.skipif(
+    not os.path.exists(DATA), reason=f"reference pcap fixtures not found at {DATA}"
+)
 
+
+@needs_data
 def test_read_pcap_matches_local_decode(spark):
     sdf = read_pcap(spark, f"{DATA}/nmap_tcp_syn_version.pcap")
     got = sdf.toPandas().sort_values(["ts_us", "event_seq"]).reset_index(drop=True)
@@ -22,6 +30,7 @@ def test_read_pcap_matches_local_decode(spark):
         assert got[col].tolist() == exp[col].tolist(), col
 
 
+@needs_data
 def test_read_pcap_sessionize_end_to_end(spark):
     cfg = EngineConfig(active_timeout=3600, idle_timeout=120,
                        expiration_check_interval=60)
@@ -31,7 +40,7 @@ def test_read_pcap_sessionize_end_to_end(spark):
     assert (flows["protocol"] == 6).any() and (flows["protocol"] == 17).any()
 
 
-def _synth_capture(tmp_path, n_packets: int) -> str:
+def _synth_capture(tmp_path, n_packets: int, ns: bool = False) -> str:
     """Deterministic single capture with variable-length TCP/UDP frames."""
     import numpy as np
 
@@ -59,7 +68,7 @@ def _synth_capture(tmp_path, n_packets: int) -> str:
     })
     path = str(tmp_path / "big.pcap")
     with open(path, "wb") as f:
-        f.write(encode_pcap_bytes(pdf))
+        f.write(encode_pcap_bytes(pdf, ns=ns))
     return path
 
 
@@ -102,6 +111,52 @@ def test_resync_finds_boundary_mid_stream(tmp_path):
         got = resync_offset(data, probe, endian, ns)
         nxt = min(o for o in true_offs if o >= probe)
         assert got == nxt, (probe, got, nxt)
+
+
+def test_split_inside_header_resyncs_on_ns_capture(tmp_path):
+    """A split starting 1-15 bytes into a record header must decode exactly
+    the records the whole-file decode has. On a nanosecond capture the
+    header read 4 bytes late (frac, incl, orig, first frame bytes) passes
+    every field check and chains like the true records unless
+    incl_len <= orig_len is enforced."""
+    import struct as st
+
+    from rustiflow_spark.sources.pcap import (
+        decode_pcap_bytes,
+        decode_pcap_split,
+        parse_pcap_header,
+    )
+
+    path = _synth_capture(tmp_path, 400, ns=True)
+    data = open(path, "rb").read()
+    endian, ns, link = parse_pcap_header(data)
+    assert ns
+    offs, fracs = [], []
+    off = 24
+    while off + 16 <= len(data):
+        _, frac, incl, _ = st.unpack(endian + "IIII", data[off:off + 16])
+        offs.append(off)
+        fracs.append(frac)
+        off += 16 + incl
+    # a header whose shifted reading has a plausible seconds field (the
+    # ns fraction) for a full resync chain
+    hdr = next(
+        offs[i] for i in range(len(offs) - 8)
+        if min(fracs[i:i + 8]) >= 400_000_000
+    )
+    cols = ["ts_us", "src_ip", "dst_ip", "src_port", "dst_port", "protocol", "length"]
+
+    def rows(pdf):
+        return pdf[cols].sort_values(cols).reset_index(drop=True)
+
+    whole = rows(decode_pcap_bytes(data))
+    for cut in range(hdr + 1, hdr + 16):
+        parts = [
+            decode_pcap_split(path, 24, cut, endian, ns, link),
+            decode_pcap_split(path, cut, len(data), endian, ns, link),
+        ]
+        split = rows(pd.concat([p for p in parts if len(p)]))
+        pd.testing.assert_frame_equal(split, whole, obj=f"split at {cut - hdr}")
 
 
 def test_read_pcap_column_pruning(spark, tmp_path):

@@ -64,22 +64,82 @@ def test_parquet_footer_flush_matches_aggregate(spark):
     assert parquet_column_max(path, "no_such_column") is None
 
 
-def test_sessionize_with_explicit_flush_matches_default(spark):
-    """Passing the footer-derived flush_ts must not change any output."""
-    import __spark_entry__ as em
-    from rustiflow_spark.operators.event_features import sessionize_events
+def test_sessionize_with_explicit_flush_matches_default(spark, sf_dir):
+    """Flushing at the input's true last event time (footer-derived) and at
+    the default end-of-input sentinel give identical output, on the event
+    and the packet path, with and without the expiry scan."""
+    import dataclasses
 
-    ev = em._events(spark, "/root/testdata/sf0.001")
-    cfg = em._engine_cfg()
-    base = sessionize_events(ev, ["user_id"], cfg, value_col="value").toPandas()
-    flush = em._events_flush_us("/root/testdata/sf0.001")
-    assert flush is not None
-    fast = sessionize_events(
-        ev, ["user_id"], cfg, value_col="value", flush_ts=flush
-    ).toPandas()
-    key = ["user_id", "first_ts_us"]
-    base = base.sort_values(key).reset_index(drop=True)
-    fast = fast.sort_values(key).reset_index(drop=True)
     import pandas as pd
 
-    pd.testing.assert_frame_equal(base, fast)
+    import __spark_entry__ as em
+    from rustiflow_spark.operators.event_features import sessionize_events
+    from rustiflow_spark.operators.sessionize import sessionize_packets
+
+    ev = em._events(spark, sf_dir)
+    packets = em._packet_table(spark, sf_dir, tcp=True)
+    ev_flush, pkt_flush = em._events_flush_us(sf_dir), em._packet_flush_us(sf_dir)
+    assert ev_flush is not None and pkt_flush is not None
+
+    def frames(build, flush, key):
+        base, given = build({}).toPandas(), build({"flush_ts": flush}).toPandas()
+        if scan_mode == "none":
+            # the sessions whose close time is the flush time
+            assert (base["cause"] == "Exporter Shutdown").any()
+        return (
+            base.sort_values(key).reset_index(drop=True),
+            given.sort_values(key).reset_index(drop=True),
+        )
+
+    for scan_mode in ("none", "exact"):
+        cfg = dataclasses.replace(em._engine_cfg(), scan_mode=scan_mode)
+        pd.testing.assert_frame_equal(*frames(
+            lambda kw: sessionize_events(ev, ["user_id"], cfg, value_col="value", **kw),
+            ev_flush,
+            ["user_id", "first_ts_us"],
+        ))
+        pd.testing.assert_frame_equal(*frames(
+            lambda kw: sessionize_packets(packets, cfg, **kw),
+            pkt_flush,
+            ["flow_key", "first_ts_us"],
+        ))
+
+
+def _jobs_submitted(spark, build) -> list[int]:
+    """Spark job ids submitted while ``build()`` runs."""
+    sc = spark.sparkContext
+    group = "build-probe"
+    sc.setJobGroup(group, "query construction")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    spark._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_building_scan_mode_none_queries_submits_no_job(spark, tmp_path):
+    """Without flush_ts and with scan_mode 'none', building a packet or an
+    event query touches no data; 'exact' still runs its timeline query."""
+    from rustiflow_spark.config import EngineConfig
+    from rustiflow_spark.operators.event_features import (
+        assign_sessions,
+        sessionize_events,
+    )
+    from rustiflow_spark.operators.sessionize import sessionize_packets
+    from rustiflow_spark.sources.pcap import read_pcap
+    from rustiflow_spark.sources.synth import generate_token_sequences
+    from test_pcap_source import _synth_capture
+
+    packets = read_pcap(spark, _synth_capture(tmp_path, 200))
+    events = spark.createDataFrame(generate_token_sequences(n_docs=20, seed=3))
+    key = ["source", "doc_id"]
+    none, exact = EngineConfig(scan_mode="none"), EngineConfig(scan_mode="exact")
+
+    assert _jobs_submitted(spark, lambda: sessionize_packets(packets, none)) == []
+    assert _jobs_submitted(spark, lambda: sessionize_events(events, key, none)) == []
+    assert _jobs_submitted(spark, lambda: assign_sessions(events, key, none)) == []
+    # the probe sees jobs when there are some
+    assert _jobs_submitted(spark, lambda: sessionize_packets(packets, exact))
+    assert _jobs_submitted(spark, lambda: sessionize_events(events, key, exact))
