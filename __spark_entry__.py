@@ -36,6 +36,9 @@ def _ensure_package_shipped(spark: SparkSession) -> None:
     key = id(spark.sparkContext)
     if key in _SHIPPED_SESSIONS:
         return
+    conf = spark.sparkContext.getConf()
+    if conf.get("spark.python.daemon.module") == "rustiflow_spark.worker_daemon":
+        return  # workers run a daemon from this package: it imports already
     import shutil
     import tempfile
 
@@ -2547,8 +2550,10 @@ def q_dup_token_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-wide marks its span duplicated; per document the query reports
     duplicated window starts and the token count covered by the UNION of
     duplicated spans (interval-union fold over an ordered window — no
-    driver state). Oracle mode keys grams by the comma-joined string
-    (use_hash=False); production keys xxhash64. Reference analog: none
+    driver state). Oracle mode keys grams by the token-slice array
+    (use_hash=False; the DuckDB oracle's comma-joined string gives the
+    same classes on these NULL-free tokens); production keys xxhash64.
+    Reference analog: none
     (north-rule tokens-payload dedup component)."""
     _ensure_package_shipped(spark)
     from rustiflow_spark.operators.dedup import duplicate_token_spans
@@ -5853,11 +5858,24 @@ def _tmp_workdir(name: str, sf_dir: str) -> str:
         # untouched for a day is from a finished run regardless of what
         # now owns its PID (live runs touch their dirs continuously)
         try:
-            if timemod.time() - os.path.getmtime(stale) > 86_400:
+            if timemod.time() - _newest_mtime(stale) > 86_400:
                 shutil.rmtree(stale, ignore_errors=True)
         except OSError:
             pass
     return base
+
+
+def _newest_mtime(top: str) -> float:
+    """Newest mtime of `top` and everything below it: a live run writes in
+    subdirectories (stream src/out/ckpt), which leaves the top mtime old."""
+    newest = os.path.getmtime(top)
+    for root, dirs, files in os.walk(top):
+        for name in dirs + files:
+            try:
+                newest = max(newest, os.lstat(os.path.join(root, name)).st_mtime)
+            except OSError:
+                pass  # removed while walking
+    return newest
 
 
 def _replay_three_files(ev: DataFrame, name: str, sf_dir: str) -> tuple[str, str, str]:

@@ -636,7 +636,8 @@ def token_minhash_signatures(
     Where the text MinHash is an Arrow kernel (byte shingles,
     minhash_signatures above), this one is PURE CATALYST per-row array
     algebra — token n-grams via sequence+slice (vocab_topk's gram
-    trick), gram hash on the canonical comma-joined gram string, then
+    trick), gram hash on the canonical comma-joined gram string
+    (array_join, which skips NULL elements), then
     num_perm Lehmer permutations (a*g + b mod 2^31-1, products < 2^62 so
     integer-exact in any engine) reduced with array_min. No explode, no
     shuffle, no Python workers — the signature stage costs one
@@ -697,8 +698,9 @@ def _gram_spans(
     """Shared span construction for the ExactSubstr detector and rewriter
     (a keying change MUST hit both or they disagree on what counts as a
     duplicate): returns (base(__id, __t, n_tok), spans(__id, start, gk),
-    dup_keys(gk)). use_hash picks xxhash64 (production) vs the verbatim
-    comma-joined gram string (oracle replay)."""
+    dup_keys(gk)). use_hash picks xxhash64 of the token slice (production)
+    vs the token-slice array itself (oracle replay); see
+    duplicate_token_spans for how each treats NULL elements."""
     sc = df.sparkSession.sparkContext
     # NULL token arrays: coalesce to empty so n_tok is 0, not the
     # non-ANSI size(NULL) = -1 the oracle would score as NULL (round-5
@@ -717,12 +719,12 @@ def _gram_spans(
         base = base.repartition(sc.defaultParallelism)
     base = base.withColumn("n_tok", F.size("__t"))
     # key by the token-slice ARRAY itself, not a comma-joined string:
-    # identical equivalence classes (the comma join is injective on int
-    # arrays) but no per-span string materialization — at one span per
-    # token position that was the corpus's whole token stream rebuilt as
-    # strings twice per pass (guide §1.2 per-task work). Shuffle rows
-    # stay compact ints; xxhash64 hashes the array directly in the
-    # production mode.
+    # identical equivalence classes on NULL-free int arrays (the comma
+    # join is injective there) but no per-span string materialization —
+    # at one span per token position that was the corpus's whole token
+    # stream rebuilt as strings twice per pass (guide §1.2 per-task work).
+    # Shuffle rows stay compact ints; xxhash64 hashes the array directly
+    # in the production mode.
     gram = f"slice(__t, s, {window})"
     key = f"xxhash64({gram})" if use_hash else gram
     spans = base.where(F.col("n_tok") >= window).select(
@@ -770,9 +772,15 @@ def duplicate_token_spans(
     all-pairs.
 
     use_hash=True keys grams by xxhash64 (production; 64-bit keys keep
-    shuffle rows 16 bytes). use_hash=False keys the comma-joined gram
-    string — collision-free and replayable verbatim by any SQL engine
-    (decontam.py convention; the contract oracle runs this mode).
+    shuffle rows 16 bytes). use_hash=False keys the token-slice array
+    itself — collision-free, and on NULL-free tokens the same equivalence
+    classes as the comma-joined gram string any SQL engine can replay
+    (decontam.py convention; the contract oracle runs this mode). NULL
+    token elements: array keys compare NULL equal to NULL and unequal to
+    any value, so a gram with NULL at position k matches only grams with
+    NULL at position k — NULLs form their own equivalence classes.
+    xxhash64 skips NULL elements, so with use_hash=True [1, NULL, 2],
+    [1, 2, NULL] and [1, 2] share one key.
 
     Reference analog: none (north-rule tokens-payload dedup component;
     the text-level siblings are minhash_lsh_dedup / simhash above).

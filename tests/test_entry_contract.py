@@ -74,3 +74,33 @@ def test_entry_smoke(spark):
     rows = df.limit(5).collect()
     assert df.columns
     assert len(rows) >= 0
+
+
+def test_tmp_workdir_age_gate_reads_the_newest_mtime(tmp_path):
+    """A dir whose owner PID is alive is swept only when nothing in it was
+    written for a day: a live run writes in subdirectories, not at the top."""
+    import os
+    import shutil
+    import subprocess
+    import time
+    import zlib
+
+    prefix = f"/tmp/rustiflow_agegate_{zlib.crc32(str(tmp_path).encode()) & 0xFFFFFFFF:x}"
+    sleeper = subprocess.Popen(["sleep", "60"])
+    live, aged = f"{prefix}_{sleeper.pid}", f"{prefix}_{os.getppid()}"
+    two_days_ago = time.time() - 2 * 86_400
+    try:
+        for d in (live, aged):
+            os.makedirs(f"{d}/ckpt")
+            with open(f"{d}/ckpt/offsets", "w") as f:
+                f.write("0")
+        for p in (f"{aged}/ckpt/offsets", f"{aged}/ckpt", aged, live):
+            os.utime(p, (two_days_ago, two_days_ago))
+        entrymod._tmp_workdir("agegate", str(tmp_path))
+        assert os.path.isdir(live)
+        assert not os.path.exists(aged)
+    finally:
+        sleeper.kill()
+        sleeper.wait(timeout=10)
+        for d in (live, aged):
+            shutil.rmtree(d, ignore_errors=True)

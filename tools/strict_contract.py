@@ -37,14 +37,14 @@ def serialize(df: pd.DataFrame) -> list[str]:
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
+    from rustiflow_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "8g")
-        .appName("strict-contract")
-        .getOrCreate()
+    # the production session builder, so the gate runs the same worker set-up
+    spark = get_spark(
+        "strict-contract",
+        cores=8,
+        shuffle_partitions=32,
+        extra_conf={"spark.driver.memory": "8g"},
     )
     import __spark_entry__ as entrymod
 
