@@ -72,8 +72,9 @@ class EngineConfig:
                 bounded by duration/interval at cluster scale when fed the
                 per-interval min-timestamp aggregate).
     - "bucket": approximate the scan times from per-bucket minimum
-                timestamps (timeline.scan_times_from_bucket_mins); a scan
-                may land up to one bucket (interval / 64) late.
+                timestamps (timeline.scan_times_from_sorted over the
+                bucket minima); a scan may land up to one bucket
+                (interval / 64) late.
     - "none":   skip the periodic scan. A session whose expiry a later
                 packet of the same biflow observes still closes there
                 with its Idle/Active Timeout cause. Every session open at
@@ -87,14 +88,6 @@ class EngineConfig:
     early_export: int | None = None
     expiration_check_interval: int = 60
     scan_mode: str = "exact"
-    # Early-export snapshot featurization strategy (vectorized kernel only):
-    #   "prefix" — O(n) per-session prefix-cumulative arrays (the scale
-    #              path: cost is linear in session length, matching the
-    #              reference's O(1)-per-snapshot accumulator clone,
-    #              flow_table.rs:162-173).
-    #   "gather" — O(sum of prefix lengths) gather-expansion (quadratic on
-    #              long flows; kept only as the differential-test reference).
-    early_export_impl: str = "prefix"
 
     @property
     def active_timeout_us(self) -> int:

@@ -3,7 +3,8 @@ streams — the north-rule re-expression of the flow engine over
 (key, ts, value, direction, terminator) events such as pre-tokenized
 training sequences keyed by (source, doc_id).
 
-Semantics mirror the packet kernel (kernel/flow_kernel.py) with the
+Semantics mirror the packet path (segmentation in kernel/flow_kernel.py,
+features in kernel/packet_segmented.featurize_packet_block) with the
 reference's session-cut rules re-keyed (SURVEY.md §2.3 "North_rule
 re-expression"):
 

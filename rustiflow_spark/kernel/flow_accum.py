@@ -3,7 +3,7 @@
 Streaming-state analog of the reference's FlowTable design: per-flow state
 is O(1) online accumulators, never raw packets (flow_table.rs:24; every
 feature module in flows/features/* is single-pass). The batch kernel
-(kernel/flow_kernel.py:compute_session_features) computes the ~90-field
+(kernel/packet_segmented.featurize_packet_block) computes the ~90-field
 feature superset from the full raw packet slice; this module computes the
 same fields from a fixed-size accumulator folded one sorted chunk at a
 time, so the streaming sessionizer can freeze the open flow's
@@ -13,7 +13,8 @@ below-watermark prefix instead of buffering it raw:
     length / window / bulk) are (n, sum, M2, max, min) partials merged
     with the exact Chan/Welford formula (util.rs:97-107 — the reference
     itself accumulates these online), two-pass within each chunk so a
-    single-chunk fold finalizes bit-identical to the batch kernel;
+    single-chunk fold finalizes equal to the batch kernel up to float
+    rounding (asserted at rtol 1e-12 in tests/test_flow_accum.py);
   * bulk keeps the reference's cross-direction in-progress state
     (bulk_stats.rs:115-167): per direction [start_ms, last_ms, count,
     size], finalized bulks folding straight into the stat blocks;
@@ -209,7 +210,8 @@ def _retrans_fold(
     starts: list, ends: list, seq: np.ndarray, data_len: np.ndarray,
     flags: np.ndarray, mask: np.ndarray,
 ) -> int:
-    """Incremental twin of flow_kernel.compute_retransmissions: same
+    """Incremental retransmission count (retransmission_stats.rs:36-146;
+    the block kernel's per-session scan and tests/oracle_flow.py): same
     eligibility and merged-interval overlap test, but against persistent
     range lists. Returns the chunk's overlap count."""
     eligible = mask & ~((flags == ACK_FLAG) & (data_len == 0))
@@ -247,8 +249,8 @@ def _dup_ack_fold(
     window: np.ndarray, flags: np.ndarray, data_len: np.ndarray,
     mask: np.ndarray,
 ) -> None:
-    """Incremental twin of flow_kernel.compute_dup_acks: consecutive
-    in-direction candidate pairs with equal (ack, window); the previous
+    """Incremental duplicate-ACK count (tcp_quality_stats.rs:44-66):
+    consecutive in-direction candidate pairs with equal (ack, window); the previous
     packet's triple is carried in ai[base:base+4]."""
     idx = np.flatnonzero(mask)
     if idx.size == 0:
@@ -280,8 +282,8 @@ def _bulk_finalize_into(ai: np.ndarray, af: np.ndarray, slot: int,
 
 def _bulk_fold(ai: np.ndarray, af: np.ndarray, ts_us: np.ndarray,
                length: np.ndarray, fwd: np.ndarray) -> None:
-    """Incremental twin of flow_kernel.compute_bulk (bulk_stats.rs:115-167):
-    cross-direction coupled, ms-truncated, zero-length packets skipped."""
+    """Incremental bulk-transfer state machine (bulk_stats.rs:115-167, as
+    in tests/oracle_flow.py): cross-direction coupled, ms-truncated, zero-length packets skipped."""
     idx = np.flatnonzero(length > 0)
     if idx.size == 0:
         return
@@ -307,8 +309,9 @@ def _bulk_fold(ai: np.ndarray, af: np.ndarray, ts_us: np.ndarray,
 
 
 def flow_acc_fold(acc: dict | None, g: dict[str, np.ndarray]) -> dict:
-    """Fold a sorted chunk of one flow's packets (group-column arrays as in
-    flow_kernel.process_group) into the accumulator. Chunks must arrive in
+    """Fold a sorted chunk of one flow's packets (int64 packet-column
+    arrays plus bool dir_a, as buffered by the stream path) into the
+    accumulator. Chunks must arrive in
     timestamp order relative to previously folded packets."""
     if acc is None:
         acc = flow_acc_new()
@@ -508,7 +511,7 @@ def flow_acc_finalize(
     close_style: str,
 ) -> dict:
     """Feature row from the accumulator — same field set and semantics as
-    flow_kernel.compute_session_features. Lifecycle fields come from the
+    a featurize_packet_block row. Lifecycle fields come from the
     caller's (resumed) segmentation state. Non-destructive."""
     from rustiflow_spark.flows import ipmeta
 
@@ -543,7 +546,7 @@ def flow_acc_finalize(
     out["reset_before_handshake"] = int(reset_before)
     out["reset_after_handshake"] = int(reset_after)
 
-    # close-time adjustments (mirror compute_session_features exactly)
+    # close-time adjustments (mirror the block kernel exactly)
     final_span = last_ts - int(ai[I_SPAN_START])
     if closed and final_span > 0:
         _fold(af, "active", np.array([final_span / 1000.0]))

@@ -1,17 +1,22 @@
-"""Vectorized per-biflow sessionization + feature extraction kernel.
+"""Flow segmentation primitives shared by the packet and event kernels.
 
-Runs inside Arrow-batched pandas UDFs (``applyInPandas`` /
-``mapInPandas``): one invocation receives all packets of one canonical
-biflow key (or a batch of keys), sorted by (ts_us, event_seq), and emits
-one output row per exported flow (session), replicating the reference's
-``FlowTable`` semantics (rustiflow/src/flow_table.rs:23-246):
+Features are computed elsewhere: by the block kernel
+(kernel/packet_segmented.featurize_packet_block) in batch and in the
+streaming early-export path, and by the accumulator (kernel/flow_accum.py)
+in the streaming default path. Those, and the event kernel
+(kernel/event_kernel.py), import the cut rules from here. Together they
+reproduce the reference's ``FlowTable`` semantics
+(rustiflow/src/flow_table.rs:23-246):
 
   * idle timeout:  (t - last)/1e6  > idle   (basic_flow.rs:365-367)
   * active timeout:(t - first)/1e6 > active (basic_flow.rs:361-363)
-  * TCP FIN/RST termination cuts (basic_flow.rs:155-191, 287-308)
+  * TCP FIN/RST termination cuts (basic_flow.rs:155-191, 287-308) —
+    ``_TcpState`` and ``segment_biflow``
   * expired-on-arrival replacement (flow_table.rs:120-126)
   * periodic virtual-time expiry scan (flow_table.rs:207-245) — reproduced
-    from a precomputed shard-global scan timeline (see timeline.py)
+    from a precomputed shard-global scan timeline (see timeline.py) in
+    ``_timeout_close``
+  * early-export snapshots (flow_table.rs:155-177)
   * exporter-shutdown flush at the shard's last event time
     (flow_table.rs:180-195)
 
@@ -23,10 +28,8 @@ and cause of sessions whose expiry is not observed by a successor packet.
 So segmentation is computed locally per biflow, and scan times enter only
 the close-ts/cause computation.
 
-All statistics are computed as two-pass vectorized NumPy (float64); the
-reference's single-pass Welford accumulation (features/util.rs:97-107) is
-mathematically identical for population statistics — parity is asserted via
-np.allclose in tests.
+``stats6`` is the reference's statistics block over one value array
+(features/util.rs:49-79), used by the event kernel.
 """
 
 from __future__ import annotations
@@ -36,9 +39,6 @@ from dataclasses import dataclass
 import numpy as np
 
 from rustiflow_spark.config import (
-    ACK_FLAG,
-    ACTIVE_IDLE_TIMEOUT_US,
-    BULK_IDLE_MS,
     CAUSE_ACTIVE,
     CAUSE_IDLE,
     CAUSE_SHUTDOWN,
@@ -51,13 +51,7 @@ from rustiflow_spark.config import (
     CLOSE_NOT_APPLICABLE,
     CLOSE_RESET,
     CLOSE_SIMULTANEOUS,
-    FIN_FLAG,
-    MIN_BULK_PACKETS,
-    PROTO_ICMP,
-    PROTO_ICMPV6,
     PROTO_TCP,
-    SUBFLOW_TIMEOUT_US,
-    SYN_FLAG,
     US_PER_S,
     EngineConfig,
 )
@@ -432,11 +426,6 @@ def _maybe_add_early_exports(sessions: list[Session], ts: np.ndarray, cfg: Engin
     sessions.extend(snapshots)
 
 
-# ---------------------------------------------------------------------------
-# Feature computation
-# ---------------------------------------------------------------------------
-
-
 def stats6(x: np.ndarray) -> tuple[float, float, float, float, float, int]:
     """(total, mean, std_pop, max, min, count) with the reference's empty
     semantics (features/util.rs:49-79): min/max/mean/std -> 0.0 on empty."""
@@ -447,360 +436,3 @@ def stats6(x: np.ndarray) -> tuple[float, float, float, float, float, int]:
     mean = total / n
     std = float(np.sqrt(np.mean((x - mean) ** 2)))
     return total, mean, std, float(x.max()), float(x.min()), n
-
-
-def _emit_stats(out: dict, name: str, x: np.ndarray) -> None:
-    total, mean, std, mx, mn, count = stats6(x)
-    out[f"{name}_total"] = total
-    out[f"{name}_mean"] = mean
-    out[f"{name}_std"] = std
-    out[f"{name}_max"] = mx
-    out[f"{name}_min"] = mn
-    out[f"{name}_count"] = count
-
-
-def _bulk_direction(ts_ms: np.ndarray, length: np.ndarray, closed: bool):
-    """Single-direction view is NOT sufficient — bulk is cross-direction
-    coupled; see compute_bulk()."""
-    raise NotImplementedError
-
-
-def compute_bulk(ts_us: np.ndarray, length: np.ndarray, fwd: np.ndarray, closed: bool):
-    """CICFlowMeter-style bulk stats (bulk_stats.rs:115-167).
-
-    ms-truncated timestamps; zero-`length` packets skipped; a direction's
-    in-progress bulk is finalized when the *other* direction starts a new
-    bulk from idle; only bulks with >= 4 packets count; on close() both
-    in-progress bulks are finalized — but close() is not invoked for
-    TCP-terminated flows (closed=False), discarding in-progress bulks.
-    """
-    nz = length > 0
-    idx = np.flatnonzero(nz)
-    out = {
-        True: {"sizes": [], "packets": [], "durations": []},
-        False: {"sizes": [], "packets": [], "durations": []},
-    }
-    state = {True: None, False: None}  # [start_ms, last_ms, count, size]
-
-    def finalize(d):
-        b = state[d]
-        if b is not None and b[2] >= MIN_BULK_PACKETS:
-            out[d]["packets"].append(float(b[2]))
-            out[d]["sizes"].append(float(b[3]))
-            out[d]["durations"].append(float(b[1] - b[0]))
-        state[d] = None
-
-    ts_ms_all = ts_us // 1000
-    for i in idx:
-        d = bool(fwd[i])
-        t = int(ts_ms_all[i])
-        ln = int(length[i])
-        b = state[d]
-        if b is not None:
-            if t - b[1] > BULK_IDLE_MS:
-                finalize(d)
-                state[d] = [t, t, 1, ln]
-            else:
-                b[2] += 1
-                b[3] += ln
-                b[1] = t
-        else:
-            state[d] = [t, t, 1, ln]
-            finalize(not d)
-    if closed:
-        finalize(True)
-        finalize(False)
-    res = {}
-    for d, name in ((True, "fwd"), (False, "bwd")):
-        sizes = np.asarray(out[d]["sizes"])
-        packets = np.asarray(out[d]["packets"])
-        durations = np.asarray(out[d]["durations"])
-        res[f"{name}_sizes"] = sizes
-        res[f"{name}_packets"] = packets
-        res[f"{name}_durations"] = durations
-        # rate quirk: ms totals / 1e6 (bulk_stats.rs:65-78); zero total
-        # duration -> +inf (Rust f64 division semantics)
-        if durations.size == 0:
-            res[f"{name}_rate"] = 0.0
-        else:
-            denom = float(durations.sum()) / 1_000_000.0
-            res[f"{name}_rate"] = float(sizes.sum()) / denom if denom else float("inf")
-    return res
-
-
-def compute_retransmissions(
-    seq: np.ndarray, data_len: np.ndarray, flags: np.ndarray, mask: np.ndarray
-) -> int:
-    """Overlap count against merged seen ranges, one direction
-    (retransmission_stats.rs:36-146). mask selects direction + TCP."""
-    eligible = mask & ~((flags == ACK_FLAG) & (data_len == 0))
-    ctl = ((flags & SYN_FLAG) != 0).astype(np.int64) + ((flags & FIN_FLAG) != 0).astype(np.int64)
-    seg_len = data_len + ctl
-    eligible &= seg_len > 0
-    idx = np.flatnonzero(eligible)
-    count = 0
-    ranges: list[tuple[int, int]] = []
-    for i in idx:
-        start = int(seq[i])
-        end = min(start + int(seg_len[i]), U32_MAX)
-        if any(s < end and start < e for s, e in ranges):
-            count += 1
-        ns, ne = start, end
-        j = 0
-        while j < len(ranges):
-            cs, ce = ranges[j]
-            if ce < ns:
-                j += 1
-                continue
-            if ne < cs:
-                break
-            ns = min(ns, cs)
-            ne = max(ne, ce)
-            ranges.pop(j)
-        ranges.insert(j, (ns, ne))
-    return count
-
-
-def compute_dup_acks(
-    ack_seq: np.ndarray, window: np.ndarray, flags: np.ndarray, data_len: np.ndarray,
-    mask: np.ndarray,
-) -> int:
-    """Duplicate-ACK count, one direction (tcp_quality_stats.rs:44-66).
-
-    Candidate = flags == ACK exactly and no payload; the comparator resets on
-    any non-candidate TCP packet in the direction, so a duplicate requires
-    two *consecutive* TCP packets (in direction) that are both candidates
-    with equal (ack, window). Fully vectorizable.
-    """
-    idx = np.flatnonzero(mask)
-    if idx.size < 2:
-        return 0
-    cand = (flags[idx] == ACK_FLAG) & (data_len[idx] == 0)
-    same = (ack_seq[idx][1:] == ack_seq[idx][:-1]) & (window[idx][1:] == window[idx][:-1])
-    return int(np.count_nonzero(cand[1:] & cand[:-1] & same))
-
-
-def compute_session_features(
-    g: dict[str, np.ndarray],
-    sess: Session,
-    cfg: EngineConfig,
-) -> dict:
-    """All feature modules over one session slice. g holds full-group arrays;
-    the slice is [sess.start, sess.end)."""
-    sl = slice(sess.start, sess.end)
-    ts = g["ts_us"][sl]
-    n = ts.size
-    first_ts = int(ts[0])
-    last_ts = int(ts[-1])
-    # direction: forward = same directed orientation as the session's first
-    # packet (flow_table.rs:61-73 directed-key lookup with reverse fallback)
-    dir_a = g["dir_a"][sl]
-    fwd = dir_a == dir_a[0]
-    bwd = ~fwd
-    protocol = int(g["protocol"][sess.start])
-
-    out: dict = {}
-    if dir_a[0]:
-        src_ip, dst_ip = g["src_ip_a"], g["dst_ip_a"]
-        src_port, dst_port = int(g["src_port_a"]), int(g["dst_port_a"])
-    else:
-        src_ip, dst_ip = g["dst_ip_a"], g["src_ip_a"]
-        src_port, dst_port = int(g["dst_port_a"]), int(g["src_port_a"])
-    # NOTE: orientation "a" is the canonical orientation; the session's
-    # source endpoint is its first packet's source.
-    out["flow_key"] = f"{src_ip}:{src_port}-{dst_ip}:{dst_port}-{protocol}"
-    out["src_ip"], out["src_port"] = src_ip, src_port
-    out["dst_ip"], out["dst_port"] = dst_ip, dst_port
-    out["protocol"] = protocol
-    # A15 IP metadata (flows/util.rs:64-145) — lru-cached per address
-    from rustiflow_spark.flows import ipmeta
-
-    out["ip_version"] = ipmeta.ip_version(src_ip)
-    out["src_ip_scope"] = ipmeta.ip_scope(src_ip)
-    out["dst_ip_scope"] = ipmeta.ip_scope(dst_ip)
-    out["path_locality"] = ipmeta.path_locality(src_ip, dst_ip)
-    out["first_ts_us"] = first_ts
-    out["last_ts_us"] = last_ts
-    out["duration_us"] = last_ts - first_ts
-    out["cause"] = sess.cause
-    out["close_style"] = (
-        CLOSE_NOT_APPLICABLE if protocol != PROTO_TCP else sess.close_style
-    )
-    out["handshake_completed"] = int(sess.handshake_completed)
-    out["reset_before_handshake"] = int(sess.reset_before_handshake)
-    out["reset_after_handshake"] = int(sess.reset_after_handshake)
-
-    # IAT (ms floats, iat_stats.rs:29-52)
-    diffs = np.diff(ts) / 1000.0
-    _emit_stats(out, "iat", diffs)
-    ts_f, ts_b = ts[fwd], ts[bwd]
-    _emit_stats(out, "fwd_iat", np.diff(ts_f) / 1000.0)
-    _emit_stats(out, "bwd_iat", np.diff(ts_b) / 1000.0)
-
-    # Subflow (subflow_stats.rs:23-34): gap vs previous packet of either dir
-    gaps_us = np.diff(ts)
-    out["subflow_count"] = int(1 + np.count_nonzero(gaps_us > SUBFLOW_TIMEOUT_US)) if n else 0
-
-    # Active/Idle (active_idle_stats.rs): segments split at gaps > 5s strict
-    idle_mask = gaps_us > ACTIVE_IDLE_TIMEOUT_US
-    idle_vals = gaps_us[idle_mask] / 1000.0
-    bounds = np.flatnonzero(idle_mask)  # gap i = between pkt i and i+1
-    span_starts = np.concatenate(([0], bounds + 1))
-    span_ends = np.concatenate((bounds, [n - 1]))
-    span_dur = (ts[span_ends] - ts[span_starts]).astype(np.float64)
-    if not sess.closed:
-        # close() not invoked: trailing active span is NOT added
-        span_dur = span_dur[:-1]
-    active_vals = span_dur[span_dur > 0] / 1000.0
-    if sess.closed and sess.cause == CAUSE_IDLE:
-        idle_vals = np.concatenate((idle_vals, [(sess.close_ts - last_ts) / 1000.0]))
-    _emit_stats(out, "active", active_vals)
-    _emit_stats(out, "idle", idle_vals)
-
-    # Payload length (payload_stats.rs)
-    data_len = g["data_length"][sl].astype(np.float64)
-    _emit_stats(out, "payload_len", data_len)
-    _emit_stats(out, "fwd_payload_len", data_len[fwd])
-    _emit_stats(out, "bwd_payload_len", data_len[bwd])
-    out["fwd_non_zero_payload_packets"] = int(np.count_nonzero(data_len[fwd] > 0))
-    out["bwd_non_zero_payload_packets"] = int(np.count_nonzero(data_len[bwd] > 0))
-
-    # Header length (header_stats.rs)
-    hdr = g["header_length"][sl].astype(np.float64)
-    _emit_stats(out, "header_len", hdr)
-    _emit_stats(out, "fwd_header_len", hdr[fwd])
-    _emit_stats(out, "bwd_header_len", hdr[bwd])
-
-    # Packet length (packet_stats.rs)
-    length = g["length"][sl].astype(np.float64)
-    _emit_stats(out, "fwd_packet_len", length[fwd])
-    _emit_stats(out, "bwd_packet_len", length[bwd])
-
-    # TCP flags (tcp_flag_stats.rs)
-    for name in ("fin", "syn", "rst", "psh", "ack", "urg", "cwr", "ece"):
-        col = g[name + "_flag"][sl]
-        out[f"fwd_{name}_flag_count"] = int(col[fwd].sum())
-        out[f"bwd_{name}_flag_count"] = int(col[bwd].sum())
-    flags_str = "".join(
-        ch
-        if out[f"fwd_{nm}_flag_count"] + out[f"bwd_{nm}_flag_count"]
-        else "."
-        for ch, nm in (
-            ("U", "urg"), ("A", "ack"), ("P", "psh"), ("R", "rst"), ("S", "syn"), ("F", "fin"),
-        )
-    )
-    out["flags"] = flags_str
-
-    # Window size (window_size_stats.rs) — all packets, any protocol
-    win = g["window_size"][sl].astype(np.float64)
-    _emit_stats(out, "window_size", win)
-    _emit_stats(out, "fwd_window_size", win[fwd])
-    _emit_stats(out, "bwd_window_size", win[bwd])
-    out["fwd_init_window_size"] = int(win[fwd][0]) if fwd.any() else 0
-    out["bwd_init_window_size"] = int(win[bwd][0]) if bwd.any() else 0
-
-    # ICMP (icmp_stats.rs)
-    icmp_mask = (g["protocol"][sl] == PROTO_ICMP) | (g["protocol"][sl] == PROTO_ICMPV6)
-    itype = g["icmp_type"][sl]
-    icode = g["icmp_code"][sl]
-    icmp_idx = np.flatnonzero(icmp_mask)
-    if icmp_idx.size:
-        i0 = icmp_idx[0]
-        out["icmp_type"] = int(itype[i0]) if itype[i0] >= 0 else -1
-        out["icmp_code"] = int(icode[i0]) if icode[i0] >= 0 else -1
-        proto_icmp = g["protocol"][sl][icmp_mask]
-        t_vals = itype[icmp_mask]
-        v4 = proto_icmp == PROTO_ICMP
-        req = np.where(v4, t_vals == 8, t_vals == 128)
-        rep = np.where(v4, t_vals == 0, t_vals == 129)
-        dunr = np.where(v4, t_vals == 3, t_vals == 1)
-        err_extra = np.where(
-            v4,
-            np.isin(t_vals, (4, 5, 11, 12)),
-            np.isin(t_vals, (2, 3, 4)),
-        )
-        out["icmp_echo_request_count"] = int(req.sum())
-        out["icmp_echo_reply_count"] = int(rep.sum())
-        out["icmp_error_count"] = int((dunr | err_extra).sum())
-        out["icmp_destination_unreachable_count"] = int(dunr.sum())
-    else:
-        out["icmp_type"] = -1
-        out["icmp_code"] = -1
-        out["icmp_echo_request_count"] = 0
-        out["icmp_echo_reply_count"] = 0
-        out["icmp_error_count"] = 0
-        out["icmp_destination_unreachable_count"] = 0
-
-    # Bulk (bulk_stats.rs) — cross-direction coupled scan
-    bulk = compute_bulk(ts, g["length"][sl], fwd, sess.closed)
-    out["fwd_bulk_rate"] = bulk["fwd_rate"]
-    out["bwd_bulk_rate"] = bulk["bwd_rate"]
-    _emit_stats(out, "fwd_bulk_packets", bulk["fwd_packets"])
-    _emit_stats(out, "bwd_bulk_packets", bulk["bwd_packets"])
-    _emit_stats(out, "fwd_bulk_bytes", bulk["fwd_sizes"])
-    _emit_stats(out, "bwd_bulk_bytes", bulk["bwd_sizes"])
-    _emit_stats(out, "fwd_bulk_duration", bulk["fwd_durations"])
-    _emit_stats(out, "bwd_bulk_duration", bulk["bwd_durations"])
-
-    # Retransmission + TCP quality (TCP only)
-    if protocol == PROTO_TCP:
-        flags_bm = g["flags"][sl]
-        seq = g["sequence_number"][sl]
-        ack_seq = g["sequence_number_ack"][sl]
-        dl = g["data_length"][sl]
-        win_i = g["window_size"][sl]
-        out["fwd_retransmission_count"] = compute_retransmissions(seq, dl, flags_bm, fwd)
-        out["bwd_retransmission_count"] = compute_retransmissions(seq, dl, flags_bm, bwd)
-        out["fwd_duplicate_ack_count"] = compute_dup_acks(ack_seq, win_i, flags_bm, dl, fwd)
-        out["bwd_duplicate_ack_count"] = compute_dup_acks(ack_seq, win_i, flags_bm, dl, bwd)
-        out["fwd_zero_window_count"] = int(np.count_nonzero(win_i[fwd] == 0))
-        out["bwd_zero_window_count"] = int(np.count_nonzero(win_i[bwd] == 0))
-    else:
-        out["fwd_retransmission_count"] = 0
-        out["bwd_retransmission_count"] = 0
-        out["fwd_duplicate_ack_count"] = 0
-        out["bwd_duplicate_ack_count"] = 0
-        out["fwd_zero_window_count"] = 0
-        out["bwd_zero_window_count"] = 0
-
-    # Timing (timing_stats.rs) — ms floats, 0.0 when absent
-    out["first_ts_fwd_ms"] = float(ts_f[0]) / 1000.0 if ts_f.size else 0.0
-    out["first_ts_bwd_ms"] = float(ts_b[0]) / 1000.0 if ts_b.size else 0.0
-    out["last_ts_fwd_ms"] = float(ts_f[-1]) / 1000.0 if ts_f.size else 0.0
-    out["last_ts_bwd_ms"] = float(ts_b[-1]) / 1000.0 if ts_b.size else 0.0
-    out["fwd_duration_ms"] = float(ts_f[-1] - ts_f[0]) / 1000.0 if ts_f.size else 0.0
-    out["bwd_duration_ms"] = float(ts_b[-1] - ts_b[0]) / 1000.0 if ts_b.size else 0.0
-
-    return out
-
-
-def process_group(
-    g: dict[str, np.ndarray],
-    meta: dict,
-    cfg: EngineConfig,
-    scan_times: np.ndarray,
-    flush_ts: int,
-) -> list[dict]:
-    """Process one canonical-biflow group: segment + extract features.
-
-    g: column arrays sorted by (ts_us, event_seq). meta: canonical endpoint
-    strings/ports {src_ip_a, src_port_a, dst_ip_a, dst_port_a}.
-    """
-    protocol = int(g["protocol"][0])
-    tcp_ctl = None
-    if protocol == PROTO_TCP:
-        tcp_ctl = {
-            "fin": g["fin_flag"],
-            "rst": g["rst_flag"],
-            "syn": g["syn_flag"],
-            "ack": g["ack_flag"],
-            "seq": g["sequence_number"],
-            "ack_seq": g["sequence_number_ack"],
-            "data_len": g["data_length"],
-        }
-    sessions = segment_biflow(
-        g["ts_us"], g["dir_a"], protocol, tcp_ctl, cfg, scan_times, flush_ts
-    )
-    g = dict(g)
-    g.update(meta)
-    return [compute_session_features(g, sess, cfg) for sess in sessions]

@@ -4,9 +4,11 @@ per-session Python only for the genuinely order-dependent sparse parts
 (TCP lifecycle segmentation, bulk transfers, retransmission intervals —
 and those only for sessions that can possibly produce nonzero results).
 
-Semantics identical to kernel/flow_kernel.py (the simple per-group
-reference implementation, kept for differential testing); both reproduce
-the reference engine (see flow_kernel.py docstring for citations).
+``featurize_packet_block`` is the package's one packet-flow featurizer:
+batch ``sessionize_packets`` runs it per sorted Arrow block and the
+streaming early-export path per buffered key. Segmentation comes from
+kernel/flow_kernel.py (citations there); parity with the reference is
+asserted against the transliteration oracle, tests/oracle_flow.py.
 """
 
 from __future__ import annotations
@@ -81,7 +83,9 @@ def segment_groups(
     least one FIN/RST/SYN run the per-group lifecycle state machine
     (segment_biflow), exactly the rows whose cuts are control-driven
     (basic_flow.rs:155-191). Both paths produce identical sessions for
-    flagless groups (asserted by tests/test_packet_vectorized.py).
+    flagless groups (the accumulator stream path segments with
+    segment_biflow alone; tests/test_flow_accum.py and the stream-vs-batch
+    tests compare them).
 
     Returns per-session arrays sorted by start row: starts, ends (exclusive),
     cause (object), close_ts, closed, close_style (object), handshake,
@@ -257,6 +261,7 @@ def featurize_packet_block(
     scan_times: np.ndarray,
     flush_ts: int,
     columns: set | None = None,
+    segd: dict[str, np.ndarray] | None = None,
 ) -> dict[str, np.ndarray]:
     """Full feature superset for a sorted packet block.
 
@@ -274,8 +279,13 @@ def featurize_packet_block(
     dominates at high parallelism). Early-export snapshots force full
     compute (the snapshot prefix pass reuses every family's aux arrays);
     output pruning still applies downstream.
+
+    segd: the block's segmentation, as returned by segment_groups(g, cfg,
+    scan_times, flush_ts); computed here when None. Rows are exported in
+    its order: sessions, then snapshots.
     """
-    segd = segment_groups(g, cfg, scan_times, flush_ts)
+    if segd is None:
+        segd = segment_groups(g, cfg, scan_times, flush_ts)
     if segd.get("snap_starts") is not None:
         columns = None
 
@@ -300,69 +310,19 @@ def featurize_packet_block(
     reset_before = segd["reset_before"]
     reset_after = segd["reset_after"]
 
-    snap_starts = segd.get("snap_starts")
     snap_pending = None
-    if snap_starts is not None and getattr(cfg, "early_export_impl", "prefix") != "gather":
-        # Scale path: snapshot features are computed after the session pass
-        # from per-session prefix-cumulative arrays (O(n) total — the Spark
-        # analog of the reference's O(1)-per-snapshot accumulator clone,
+    snap_starts = segd.get("snap_starts")
+    if snap_starts is not None:
+        # Snapshot features are computed after the session pass from
+        # per-session prefix-cumulative arrays (O(n) total — the Spark analog
+        # of the reference's O(1)-per-snapshot accumulator clone,
         # flow_table.rs:162-173). aux arrays are captured along the way.
         snap_pending = (snap_starts, segd["snap_ends"], segd["snap_handshake"])
         snap_aux: dict[str, object] = {}
-        snap_parent_set = set(
-            np.searchsorted(starts, snap_starts).tolist()
-        )
-        snap_starts = None
-    if snap_starts is not None:
-        # Early-export snapshots overlap their parent session, so they can't
-        # share the tiling row->session map. Gather-expand instead: append
-        # each snapshot's row range after the block as its own contiguous
-        # segment; every segmented statistic below then treats snapshots
-        # exactly like sessions (same code path the simple kernel uses,
-        # recomputed over the prefix rows). Quadratic on long flows — kept
-        # only as the differential-test reference (cfg.early_export_impl).
-        s_ends = segd["snap_ends"]
-        lens = s_ends - snap_starts
-        total = int(lens.sum())
-        cum = np.zeros(lens.size, dtype=np.int64)
-        np.cumsum(lens[:-1], out=cum[1:])
-        extra_idx = (
-            np.arange(total, dtype=np.int64)
-            - np.repeat(cum, lens)
-            + np.repeat(snap_starts, lens)
-        )
-        gather = np.concatenate((np.arange(n, dtype=np.int64), extra_idx))
-        snap_proto = g["protocol"][snap_starts]
-        g = {k: v[gather] for k, v in g.items()}
-        keys = {k: v[gather] for k, v in keys.items()}
-        nsnap = snap_starts.size
-        starts = np.concatenate((starts, n + cum))
-        ends = np.concatenate((ends, n + cum + lens))
-        closed = np.concatenate((closed, np.zeros(nsnap, dtype=bool)))
-        close_ts = np.concatenate((close_ts, ts[s_ends - 1]))
-        cause = np.concatenate(
-            (cause, np.full(nsnap, CAUSE_NONE, dtype=object))
-        )
-        style = np.concatenate(
-            (
-                style,
-                np.where(
-                    snap_proto == PROTO_TCP, CLOSE_NONE, CLOSE_NOT_APPLICABLE
-                ).astype(object),
-            )
-        )
-        handshake = np.concatenate((handshake, segd["snap_handshake"]))
-        zeros_snap = np.zeros(nsnap, dtype=np.int64)
-        reset_before = np.concatenate((reset_before, zeros_snap))
-        reset_after = np.concatenate((reset_after, zeros_snap))
-        ts = g["ts_us"]
-        n = ts.size
-        nsess += nsnap
+        snap_parent_set = set(np.searchsorted(starts, snap_starts).tolist())
 
-    # sessions arrive sorted by start row and tile the (expanded) block
-    # contiguously, so array order IS contiguous row order
-    order = np.arange(nsess)
-    inv = order
+    # sessions arrive sorted by start row and tile the block contiguously,
+    # so session order IS contiguous row order
     seg_of_row = np.zeros(n, dtype=np.int64)
     seg_of_row[starts[1:]] = 1
     seg_of_row = np.cumsum(seg_of_row)
@@ -375,7 +335,7 @@ def featurize_packet_block(
     # direction: forward = same orientation as session's first packet
     dir_a = g["dir_a"]
     sess_first_dir = dir_a[starts]  # per session (list order)
-    rep_first_dir = np.repeat(sess_first_dir[order], counts[order])
+    rep_first_dir = np.repeat(sess_first_dir, counts)
     fwd_row = dir_a == rep_first_dir  # rows are in contiguous session order
 
     # --- identity / key columns -------------------------------------------
@@ -448,7 +408,7 @@ def featurize_packet_block(
         tmp: dict[str, np.ndarray] = {}
         _seg_stats(values, seg_of_row[rows], nsess, name, tmp)
         for k, v in tmp.items():
-            out[k] = v[inv]
+            out[k] = v
 
     # IAT (ms) — flow + per direction
     gaps = np.empty(n, dtype=np.int64)
@@ -476,11 +436,10 @@ def featurize_packet_block(
         snap_aux["bwd_rows"] = bwd_rows
 
     # subflow (strict > 1s)
-    closed_c = closed[order]  # contiguous order
     if need("subflow_count"):
         sub_rows = intra[gaps[intra] > SUBFLOW_TIMEOUT_US]
         subflow_contig = 1 + np.bincount(seg_of_row[sub_rows], minlength=nsess)
-        out["subflow_count"] = subflow_contig[inv].astype(np.int64)
+        out["subflow_count"] = subflow_contig.astype(np.int64)
         if snap_pending is not None:
             snap_aux["sub_rows"] = sub_rows
 
@@ -491,36 +450,31 @@ def featurize_packet_block(
             snap_aux["big_rows"] = big_rows
         idle_vals = gaps[big_rows] / 1000.0
         idle_seg = seg_of_row[big_rows]
-        cause_c = cause[order]
-        close_ts_c = close_ts[order]
-        last_ts_c = ts[ends[order] - 1]
-        trail = np.flatnonzero(closed_c & (cause_c == CAUSE_IDLE))
+        trail = np.flatnonzero(closed & (cause == CAUSE_IDLE))
         idle_all = np.concatenate(
-            (idle_vals, (close_ts_c[trail] - last_ts_c[trail]) / 1000.0)
+            (idle_vals, (close_ts[trail] - last_ts[trail]) / 1000.0)
         )
         idle_all_seg = np.concatenate((idle_seg, trail))
         o2 = np.argsort(idle_all_seg, kind="stable")
         tmp: dict[str, np.ndarray] = {}
         _seg_stats(idle_all[o2], idle_all_seg[o2], nsess, "idle", tmp)
         for k, v in tmp.items():
-            out[k] = v[inv]
+            out[k] = v
 
-        starts_c = starts[order]
-        ends_c = ends[order]
-        span_starts = np.unique(np.concatenate((starts_c, big_rows)))
+        span_starts = np.unique(np.concatenate((starts, big_rows)))
         span_seg = seg_of_row[span_starts]
         span_ends_rows = np.append(span_starts[1:] - 1, n - 1)
-        sess_last_row = (ends_c - 1)[span_seg]
+        sess_last_row = (ends - 1)[span_seg]
         span_end = np.minimum(span_ends_rows, sess_last_row)
         span_dur = (ts[span_end] - ts[span_starts]).astype(np.float64)
         is_trailing = span_end == sess_last_row
-        keep = (span_dur > 0) & (~is_trailing | closed_c[span_seg])
+        keep = (span_dur > 0) & (~is_trailing | closed[span_seg])
         tmp = {}
         kept_seg = span_seg[keep]
         o3 = np.argsort(kept_seg, kind="stable")
         _seg_stats((span_dur[keep] / 1000.0)[o3], kept_seg[o3], nsess, "active", tmp)
         for k, v in tmp.items():
-            out[k] = v[inv]
+            out[k] = v
 
     # payload / header / packet-length / window stats
     data_len = g["data_length"].astype(np.float64)
@@ -542,10 +496,10 @@ def featurize_packet_block(
             snap_aux["nz_b"] = nz_b
         out["fwd_non_zero_payload_packets"] = np.bincount(
             seg_of_row[nz_f], minlength=nsess
-        )[inv].astype(np.int64)
+        ).astype(np.int64)
         out["bwd_non_zero_payload_packets"] = np.bincount(
             seg_of_row[nz_b], minlength=nsess
-        )[inv].astype(np.int64)
+        ).astype(np.int64)
     if need("header_len_"):
         seg("header_len", hdr, allrows)
     if need("fwd_header_len_"):
@@ -576,7 +530,7 @@ def featurize_packet_block(
             if rows.size and ne.size:
                 bounds = _seg_bounds(cnt)
                 init[ne] = g["window_size"][rows][bounds[ne]]
-            out[name] = init[inv]
+            out[name] = init
 
     # timing (ms floats, 0.0 when absent)
     if need(
@@ -588,17 +542,17 @@ def featurize_packet_block(
                 ts, rows, seg_of_row, nsess
             )
             has = cnt > 0
-            out[f"first_ts_{pre}_ms"] = np.where(has, firsts / 1000.0, 0.0)[inv]
-            out[f"last_ts_{pre}_ms"] = np.where(has, lasts / 1000.0, 0.0)[inv]
+            out[f"first_ts_{pre}_ms"] = np.where(has, firsts / 1000.0, 0.0)
+            out[f"last_ts_{pre}_ms"] = np.where(has, lasts / 1000.0, 0.0)
             out[f"{pre}_duration_ms"] = np.where(
                 has, (lasts - firsts) / 1000.0, 0.0
-            )[inv]
+            )
 
     # TCP flag counters + flags string
     if columns is None or "flags" in columns or any(
         c.endswith("_flag_count") for c in columns
     ):
-        flagbits = np.zeros(nsess, dtype=np.int64)  # contiguous order
+        flagbits = np.zeros(nsess, dtype=np.int64)
         for name, bit in (
             ("urg", 5), ("ack", 4), ("psh", 3), ("rst", 2), ("syn", 1), ("fin", 0),
         ):
@@ -609,18 +563,18 @@ def featurize_packet_block(
             bc = np.bincount(
                 seg_of_row[bwd_rows], weights=col[bwd_rows], minlength=nsess
             )
-            out[f"fwd_{name}_flag_count"] = fc[inv].astype(np.int64)
-            out[f"bwd_{name}_flag_count"] = bc[inv].astype(np.int64)
+            out[f"fwd_{name}_flag_count"] = fc.astype(np.int64)
+            out[f"bwd_{name}_flag_count"] = bc.astype(np.int64)
             flagbits |= ((fc + bc) > 0).astype(np.int64) << bit
         for name in ("cwr", "ece"):
             col = g[name + "_flag"]
             out[f"fwd_{name}_flag_count"] = np.bincount(
                 seg_of_row[fwd_rows], weights=col[fwd_rows], minlength=nsess
-            )[inv].astype(np.int64)
+            ).astype(np.int64)
             out[f"bwd_{name}_flag_count"] = np.bincount(
                 seg_of_row[bwd_rows], weights=col[bwd_rows], minlength=nsess
-            )[inv].astype(np.int64)
-        out["flags"] = _FLAGS_LUT[flagbits[inv]]
+            ).astype(np.int64)
+        out["flags"] = _FLAGS_LUT[flagbits]
 
     # ICMP
     proto_row = g["protocol"]
@@ -647,18 +601,18 @@ def featurize_packet_block(
                 v4, np.isin(t_vals, (4, 5, 11, 12)), np.isin(t_vals, (2, 3, 4))
             )
             sor = seg_of_row[icmp_rows]
-            out["icmp_echo_request_count"] = np.bincount(sor, weights=req, minlength=nsess)[inv].astype(np.int64)
-            out["icmp_echo_reply_count"] = np.bincount(sor, weights=rep, minlength=nsess)[inv].astype(np.int64)
-            out["icmp_error_count"] = np.bincount(sor, weights=(dunr | err_x), minlength=nsess)[inv].astype(np.int64)
-            out["icmp_destination_unreachable_count"] = np.bincount(sor, weights=dunr, minlength=nsess)[inv].astype(np.int64)
+            out["icmp_echo_request_count"] = np.bincount(sor, weights=req, minlength=nsess).astype(np.int64)
+            out["icmp_echo_reply_count"] = np.bincount(sor, weights=rep, minlength=nsess).astype(np.int64)
+            out["icmp_error_count"] = np.bincount(sor, weights=(dunr | err_x), minlength=nsess).astype(np.int64)
+            out["icmp_destination_unreachable_count"] = np.bincount(sor, weights=dunr, minlength=nsess).astype(np.int64)
         else:
             z = np.zeros(nsess, dtype=np.int64)
             out["icmp_echo_request_count"] = z
             out["icmp_echo_reply_count"] = z.copy()
             out["icmp_error_count"] = z.copy()
             out["icmp_destination_unreachable_count"] = z.copy()
-        out["icmp_type"] = first_t[inv]
-        out["icmp_code"] = first_c[inv]
+        out["icmp_type"] = first_t
+        out["icmp_code"] = first_c
 
     # duplicate ACK (vectorized across sessions) + zero window
     flags_bm = g["flags"]
@@ -675,7 +629,7 @@ def featurize_packet_block(
         rows = rows_dir[is_tcp_row[rows_dir]]
         zw_rows = rows[win_i[rows] == 0]
         out[f"{pre}_zero_window_count"] = (
-            np.bincount(seg_of_row[zw_rows], minlength=nsess)[inv]
+            np.bincount(seg_of_row[zw_rows], minlength=nsess)
             .astype(np.int64)
         )
         if rows.size > 1:
@@ -691,7 +645,7 @@ def featurize_packet_block(
             dup_rows = rows[1:][dup]
             out[f"{pre}_duplicate_ack_count"] = np.bincount(
                 seg_of_row[dup_rows], minlength=nsess
-            )[inv].astype(np.int64)
+            ).astype(np.int64)
         else:
             dup_rows = np.empty(0, dtype=np.int64)
             out[f"{pre}_duplicate_ack_count"] = np.zeros(nsess, dtype=np.int64)
@@ -761,14 +715,14 @@ def featurize_packet_block(
                         ranges.pop(j)
                     ranges.insert(j, (ns_, ne_))
                 res[si] = count
-        out[f"{pre}_retransmission_count"] = res[inv]
+        out[f"{pre}_retransmission_count"] = res
         if snap_pending is not None:
             snap_aux[f"rt_{pre}"] = np.sort(
                 np.asarray(rt_event_rows, dtype=np.int64)
             )
 
     # bulk transfers, fully vectorized. The reference's interleaved 2-state
-    # machine (bulk_stats.rs:115-167; flow_kernel.compute_bulk) reduces to:
+    # machine (bulk_stats.rs:115-167; tests/oracle_flow.py) reduces to:
     # a bulk attempt is a maximal run of CONSECUTIVE same-direction
     # nonzero-length packets, additionally split where the intra-run gap
     # exceeds BULK_IDLE_MS (a direction's pending bulk is finalized exactly

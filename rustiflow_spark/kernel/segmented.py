@@ -13,7 +13,8 @@ Semantics are identical to kernel/event_kernel.featurize_key_events (which
 is the simple reference implementation, kept for differential testing);
 both reproduce the reference engine's session-cut semantics
 (rustiflow/src/flow_table.rs, flows/basic_flow.rs:351-370) — see the
-module docstring of kernel/flow_kernel.py for the batch-vs-stream argument.
+docstring of the shared segmentation primitives, kernel/flow_kernel.py, for
+the batch-vs-stream argument.
 """
 
 from __future__ import annotations

@@ -11,11 +11,10 @@ Spark plan shape (one shuffle):
       -> feature superset DataFrame                 [downstream selects are
                                                      pure column pruning]
 
-engine='simple' replaces the shuffle, sort and kernel steps with
-groupBy(key).applyInPandas over the per-group reference kernel
-(differential testing only). With scan_mode 'exact' or 'bucket',
-building the query also runs one timeline query over the ts_us column
-(timeline.compute_timeline); with 'none' it submits no job.
+The block kernel is kernel/packet_segmented.featurize_packet_block. With
+scan_mode 'exact' or 'bucket', building the query also runs one timeline
+query over the ts_us column (timeline.compute_timeline); with 'none' it
+submits no job.
 
 The canonical key makes both directions of a biflow land in one group —
 the analog of the reference's canonical-hash shard routing (pcap.rs:243-249,
@@ -27,11 +26,9 @@ the reference's directed-key + reverse-lookup flow map (flow_table.rs:61-73).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from rustiflow_spark.config import EngineConfig
-from rustiflow_spark.kernel.flow_kernel import process_group
 from rustiflow_spark.schema import FLOW_SUPERSET_COLUMNS, FLOW_SUPERSET_SCHEMA
 from rustiflow_spark.timeline import compute_timeline
 
@@ -81,34 +78,20 @@ def with_canonical_key(df: DataFrame) -> DataFrame:
     )
 
 
-def _group_arrays(pdf: pd.DataFrame) -> dict[str, np.ndarray]:
-    pdf = pdf.sort_values(["ts_us", "event_seq"], kind="mergesort")
-    g: dict[str, np.ndarray] = {}
-    for col in _INT_COLS:
-        g[col] = pdf[col].to_numpy(dtype=np.int64, na_value=0)
-    for col in ("icmp_type", "icmp_code"):
-        g[col] = pdf[col].to_numpy(dtype=np.float64, na_value=-1).astype(np.int64)
-    g["dir_a"] = pdf["dir_a"].to_numpy(dtype=bool)
-    return g
-
-
 def sessionize_packets(
     df: DataFrame,
     cfg: EngineConfig | None = None,
     num_partitions: int | None = None,
-    engine: str = "auto",
     flush_ts: int | None = None,
     columns=None,
 ) -> DataFrame:
     """Full sessionization: returns one row per exported flow with the
     feature superset columns (schema.FLOW_SUPERSET_SCHEMA).
 
-    engine: 'vectorized' — segment-vectorized block kernel over sorted
-    partitions (mapInArrow; the scale path, ~2 orders of magnitude faster),
-    including early-export snapshots via gather-expansion; 'simple' —
-    per-group applyInPandas kernel (reference implementation, kept for
-    differential testing); 'auto' always picks vectorized. Both produce
-    identical output (asserted by tests/test_packet_vectorized.py).
+    Rows are hash-partitioned on the canonical key, sorted within
+    partitions, and featurized per sorted Arrow block by the
+    segment-vectorized block kernel (mapInArrow), early-export snapshots
+    included.
 
     flush_ts: time leftover sessions are flushed at ("Exporter Shutdown"
     close time). Optional: no output depends on it, and None flushes at
@@ -122,8 +105,6 @@ def sessionize_packets(
     engineering-notes.md:671-699). None = full superset (unchanged).
     """
     cfg = cfg or EngineConfig()
-    if engine == "auto":
-        engine = "vectorized"
     if columns is None:
         out_schema, out_cols, col_set = FLOW_SUPERSET_SCHEMA, FLOW_SUPERSET_COLUMNS, None
     else:
@@ -137,7 +118,7 @@ def sessionize_packets(
     scan_times, flush_ts = compute_timeline(df, "ts_us", cfg, flush_ts=flush_ts)
 
     keyed = with_canonical_key(df)
-    # mapInArrow/applyInPandas are opaque to Catalyst's column pruning:
+    # mapInArrow is opaque to Catalyst's column pruning:
     # everything still on the frame is shuffled, sorted AND shipped
     # through Arrow. The kernel only reads the canonical key + the int
     # feature columns — the directed src/dst endpoints are dead after
@@ -148,24 +129,6 @@ def sessionize_packets(
         _KEY_COLS + _INT_COLS + ["icmp_type", "icmp_code", "dir_a"]
     ))
     keyed = keyed.select(*_kernel_in)
-    if engine == "simple":
-        if num_partitions:
-            keyed = keyed.repartition(num_partitions, *_KEY_COLS)
-
-        def run(pdf: pd.DataFrame) -> pd.DataFrame:
-            g = _group_arrays(pdf)
-            meta = {
-                "src_ip_a": pdf["key_ip_a"].iloc[0],
-                "src_port_a": int(pdf["key_port_a"].iloc[0]),
-                "dst_ip_a": pdf["key_ip_b"].iloc[0],
-                "dst_port_a": int(pdf["key_port_b"].iloc[0]),
-            }
-            rows = process_group(g, meta, cfg, scan_times, flush_ts)
-            out = pd.DataFrame(rows)
-            return out.reindex(columns=out_cols)
-
-        return keyed.groupBy(*_KEY_COLS).applyInPandas(run, schema=out_schema)
-
     from rustiflow_spark.kernel.packet_segmented import featurize_packet_block
 
     sort_cols = _KEY_COLS + ["ts_us", "event_seq"]

@@ -18,6 +18,32 @@ def _default_driver_mem() -> str:
     return f"{gb}g"
 
 
+def with_python_workers(builder: SparkSession.Builder) -> SparkSession.Builder:
+    """Run the session's Python workers under ``rustiflow_spark.worker_daemon``.
+
+    The JVM puts ``pyspark.zip``, the py4j zip and the spark-core jar first
+    on the workers' path, and PySpark invalidates the import caches at the
+    start of every task, which makes each zip/jar importer re-read its
+    archive: ~0.25 s per task. The daemon drops the jar, and drops each zip
+    whose distribution is installed at the same version, before pyspark is
+    imported. Where only the zip exists (a cluster that ships nothing else)
+    it keeps the zip, logs one line to the worker's stderr and behaves like
+    Spark's own daemon.
+
+    The daemon lives in this package, so the package root is shipped as
+    ``spark.executorEnv.PYTHONPATH``: an executor env var, not os.environ,
+    so it also holds when the JVM is already up (spark-submit --py-files:
+    the root is then the shipped zip). The worker imports the daemon from
+    that driver-side path before --py-files reach it, so apply this only
+    where executors can read the driver's files (a local master). Call
+    before ``getOrCreate``.
+    """
+    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return builder.config("spark.executorEnv.PYTHONPATH", pkg_root).config(
+        "spark.python.daemon.module", "rustiflow_spark.worker_daemon"
+    )
+
+
 def get_spark(
     app_name: str = "rustiflow_spark",
     cores: int | None = None,
@@ -32,22 +58,10 @@ def get_spark(
     amortize Python transfer, and shuffle partitions track parallelism.
 
     Python workers run under ``rustiflow_spark.worker_daemon``
-    (``spark.python.daemon.module``). The JVM puts ``pyspark.zip``, the py4j
-    zip and the spark-core jar first on the workers' path, and PySpark
-    invalidates the import caches at the start of every task, which makes
-    each zip/jar importer re-read its archive: ~0.25 s per task. The
-    daemon drops the jar, and drops each zip whose distribution is installed
-    at the same version, before pyspark is imported. Where only the zip
-    exists (a cluster that ships nothing else) it keeps the zip, logs one
-    line to the worker's stderr and behaves like Spark's own daemon.
+    (``with_python_workers``).
     """
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(cores * 2, 8)
-    # Make the package importable in Python workers regardless of the
-    # driver's cwd: the worker daemon below lives in it. An executor env
-    # var, not os.environ, so it also holds when the JVM is already up
-    # (spark-submit --py-files: pkg_root is then the shipped zip).
-    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cores}]")
@@ -67,9 +81,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.executorEnv.PYTHONPATH", pkg_root)
-        .config("spark.python.daemon.module", "rustiflow_spark.worker_daemon")
     )
+    builder = with_python_workers(builder)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

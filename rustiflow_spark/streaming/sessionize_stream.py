@@ -607,14 +607,20 @@ def sessionize_packets_stream(
     State (default): an O(1) FlowAccum (kernel/flow_accum.py) for the open
     flow's watermark-frozen prefix plus only the raw packets inside the
     watermark horizon — the reference's state-never-holds-raw-packets rule
-    (flow_table.rs:24). With ``cfg.early_export`` set, the legacy raw
-    buffer is used instead: early export re-exports the live flow's full
-    prefix per packet past the threshold, so snapshots there are
-    regenerated from the buffered packets each batch."""
+    (flow_table.rs:24). With ``cfg.early_export`` set, the state is the open
+    flow's raw packets instead: early export re-exports the live flow's
+    full prefix per packet past the threshold, so each micro-batch segments
+    the key's buffered + new packets and runs the batch block kernel
+    (kernel/packet_segmented.featurize_packet_block) over the closed flows'
+    rows, emitting them with the snapshots that end inside them.
+
+    A trailing flow flushed by its event-time timeout keeps its "Exporter
+    Shutdown" feature values, and its cause is relabelled to the expiry
+    that fired (Idle or Active Timeout) on both paths."""
     from rustiflow_spark.config import CAUSE_TCP_RESET, CAUSE_TCP_TERM
-    from rustiflow_spark.kernel.flow_kernel import (
-        compute_session_features,
-        segment_biflow,
+    from rustiflow_spark.kernel.packet_segmented import (
+        featurize_packet_block,
+        segment_groups,
     )
     from rustiflow_spark.operators.sessionize import with_canonical_key
     from rustiflow_spark.schema import FLOW_SUPERSET_COLUMNS, FLOW_SUPERSET_SCHEMA
@@ -622,7 +628,6 @@ def sessionize_packets_stream(
     cfg = cfg or EngineConfig()
     key_cols = ["key_ip_a", "key_port_a", "key_ip_b", "key_port_b", "protocol"]
     no_scans = np.empty(0, dtype=np.int64)
-    proto_tcp = 6
     use_acc = cfg.early_export is None
 
     def _read_batches(pdfs) -> list[dict]:
@@ -727,16 +732,7 @@ def sessionize_packets_stream(
             bufs = {c: np.empty(0, dtype=np.int64) for c in _PKT_STATE_COLS}
             bufs["dir_a"] = np.empty(0, dtype=bool)
 
-        parts = [bufs]
-        for pdf in pdfs:
-            g = {}
-            for c in _PKT_STATE_COLS:
-                if c in ("icmp_type", "icmp_code"):
-                    g[c] = pdf[c].to_numpy(dtype=np.float64, na_value=-1).astype(np.int64)
-                else:
-                    g[c] = pdf[c].to_numpy(dtype=np.int64, na_value=0)
-            g["dir_a"] = pdf["dir_a"].to_numpy(dtype=bool)
-            parts.append(g)
+        parts = [bufs] + _read_batches(pdfs)
         merged = {
             c: np.concatenate([p[c] for p in parts])
             for c in (*_PKT_STATE_COLS, "dir_a")
@@ -748,65 +744,55 @@ def sessionize_packets_stream(
             return
         order = np.lexsort((merged["event_seq"], merged["ts_us"]))
         merged = {c: v[order] for c, v in merged.items()}
+        merged["key_id"] = np.zeros(n, dtype=np.int64)
 
         ts = merged["ts_us"]
-        protocol = int(merged["protocol"][0])
-        tcp_ctl = None
-        if protocol == proto_tcp:
-            tcp_ctl = {
-                "fin": merged["fin_flag"], "rst": merged["rst_flag"],
-                "syn": merged["syn_flag"], "ack": merged["ack_flag"],
-                "seq": merged["sequence_number"],
-                "ack_seq": merged["sequence_number_ack"],
-                "data_len": merged["data_length"],
-            }
         flush_all = state.hasTimedOut
-        all_sessions = segment_biflow(
-            ts, merged["dir_a"], protocol, tcp_ctl, cfg, no_scans, int(ts[-1])
-        )
-        # early-export snapshots (snapshot_of >= 0) ride at the tail of the
-        # session list and must not drive the emit/keep logic: a snapshot is
-        # emitted exactly once, alongside the close of its parent session
-        # (snapshots of the still-open trailing flow regenerate next batch).
-        sessions = [x for x in all_sessions if x.snapshot_of < 0]
-        snaps = [x for x in all_sessions if x.snapshot_of >= 0]
-        n_emit = len(sessions) if flush_all else len(sessions) - 1
-        if not flush_all and sessions and sessions[-1].cause in (
-            CAUSE_TCP_TERM, CAUSE_TCP_RESET,
-        ):
-            n_emit = len(sessions)
+        segd = segment_groups(merged, cfg, no_scans, int(ts[-1]))
+        starts, ends = segd["starts"], segd["ends"]
+        nsess = starts.size
+        if flush_all or segd["cause"][-1] in (CAUSE_TCP_TERM, CAUSE_TCP_RESET):
+            n_emit = nsess
+        else:
+            n_emit = nsess - 1
 
-        rows = []
+        out = None
         if n_emit > 0:
-            gm = dict(merged)
-            gm.update({
-                "src_ip_a": key[0], "src_port_a": int(key[1]),
-                "dst_ip_a": key[2], "dst_port_a": int(key[3]),
-            })
-            emitted_end = sessions[n_emit - 1].end
-            for i in range(n_emit):
-                r = compute_session_features(gm, sessions[i], cfg)
-                if (
-                    flush_all
-                    and i == len(sessions) - 1
-                    and r["cause"] == "Exporter Shutdown"
-                ):
-                    s0, e0 = sessions[i].start, sessions[i].end
-                    active_exp = cfg.active_expiry_us(int(ts[s0]))
-                    idle_exp = cfg.idle_expiry_us(int(ts[e0 - 1]))
-                    r = dict(r)
-                    r["cause"] = (
-                        CAUSE_ACTIVE if active_exp <= idle_exp else CAUSE_IDLE
-                    )
-                rows.append(r)
-            for snap in snaps:
-                if flush_all or snap.end <= emitted_end:
-                    rows.append(compute_session_features(gm, snap, cfg))
+            # featurize only the closed sessions' rows: the segmentation
+            # lists sessions in start order and snapshots in (start, end)
+            # order, so the closed ones are prefixes of both. A snapshot is
+            # emitted exactly once, alongside the close of its parent; those
+            # of the still-open trailing flow regenerate next batch.
+            cut = int(ends[n_emit - 1])
+            snap_ends = segd.get("snap_ends", no_scans)
+            n_snap = int(np.count_nonzero(snap_ends <= cut))
+            closed_segd = {
+                k: v[:n_snap] if k.startswith("snap_") else v[:n_emit]
+                for k, v in segd.items()
+                if n_snap or not k.startswith("snap_")
+            }
+            block = {c: v[:cut] for c, v in merged.items()}
+            keys = {
+                name: np.full(cut, v, dtype=object)
+                for name, v in zip(key_cols[:4], key)
+            }
+            res = featurize_packet_block(
+                block, keys, cfg, no_scans, int(ts[-1]), segd=closed_segd
+            )
+            out = pd.DataFrame({c: res[c] for c in FLOW_SUPERSET_COLUMNS})
+            if flush_all and out.at[nsess - 1, "cause"] == CAUSE_SHUTDOWN:
+                # relabel after featurizing, as in the accumulator path: the
+                # values stay the batch kernel's shutdown-flush values
+                active_exp = cfg.active_expiry_us(int(ts[starts[-1]]))
+                idle_exp = cfg.idle_expiry_us(int(ts[ends[-1] - 1]))
+                out.at[nsess - 1, "cause"] = (
+                    CAUSE_ACTIVE if active_exp <= idle_exp else CAUSE_IDLE
+                )
 
-        if n_emit >= len(sessions):
+        if n_emit >= nsess:
             state.remove()  # flows carry no per-key ordinal; nothing to keep
         else:
-            s, e = sessions[-1].start, sessions[-1].end
+            s, e = int(starts[-1]), int(ends[-1])
             state.update(tuple(
                 [[int(x) for x in merged[c][s:e]] for c in _PKT_STATE_COLS]
                 + [[bool(x) for x in merged["dir_a"][s:e]]]
@@ -820,8 +806,8 @@ def sessionize_packets_stream(
                 max(expiry_us // 1000, state.getCurrentWatermarkMs() + 1)
             )
 
-        if rows:
-            yield pd.DataFrame(rows).reindex(columns=FLOW_SUPERSET_COLUMNS)
+        if out is not None:
+            yield out
 
     keyed = with_canonical_key(events).withColumn(
         "__event_time", F.timestamp_micros(F.col("ts_us"))

@@ -9,9 +9,10 @@ timestamps, independent of keys — which lets a batch engine reproduce them
 exactly with one cheap pass.
 
 Scan times only influence the close timestamp + cause of sessions whose
-expiry is not observed by a successor packet of the same biflow (see
-kernel/flow_kernel.py docstring), so an approximate timeline degrades only
-the trailing-idle statistic, never segmentation.
+expiry is not observed by a successor packet of the same biflow (see the
+segmentation primitives' docstring, kernel/flow_kernel.py), so an
+approximate timeline degrades only the trailing-idle statistic, never
+segmentation.
 """
 
 from __future__ import annotations
@@ -26,9 +27,14 @@ logger = logging.getLogger(__name__)
 
 
 def scan_times_from_sorted(ts_sorted: np.ndarray, interval_us: int) -> np.ndarray:
-    """Exact scan timeline from sorted event timestamps.
+    """Scan timeline from sorted event timestamps.
 
-    O(#scans * log n); #scans <= (t_max - t_min) / interval + 1.
+    O(#scans * log n); #scans <= (t_max - t_min) / interval + 1. Exact when
+    given every distinct timestamp. Given the per-bucket minima instead
+    (scan_mode 'bucket'), a scan time may be reported up to one bucket late
+    when the true next event shares a bucket with the threshold; the
+    aggregate ``min(ts) group by ts div bucket_us`` is tiny
+    (duration-bounded) and shuffles no raw data.
     """
     if ts_sorted.size == 0:
         return np.empty(0, dtype=np.int64)
@@ -40,31 +46,6 @@ def scan_times_from_sorted(ts_sorted: np.ndarray, interval_us: int) -> np.ndarra
         if pos >= n:
             break
         scans.append(int(ts_sorted[pos]))
-    return np.asarray(scans, dtype=np.int64)
-
-
-def scan_times_from_bucket_mins(
-    bucket_mins: np.ndarray, interval_us: int, bucket_us: int
-) -> np.ndarray:
-    """Approximate scan timeline from per-bucket min timestamps.
-
-    bucket_mins: sorted array of min(ts) per time bucket of width bucket_us
-    (bucket_us should divide interval_us; smaller buckets = tighter
-    approximation). A scan time may be reported up to one bucket late when
-    the true next event shares a bucket with the threshold. Cluster-scale
-    path: the aggregate ``min(ts) group by ts div bucket_us`` is tiny
-    (duration-bounded) and shuffles no raw data.
-    """
-    if bucket_mins.size == 0:
-        return np.empty(0, dtype=np.int64)
-    scans = [int(bucket_mins[0])]
-    n = bucket_mins.size
-    while True:
-        nxt = scans[-1] + interval_us
-        pos = int(np.searchsorted(bucket_mins, nxt, side="left"))
-        if pos >= n:
-            break
-        scans.append(int(bucket_mins[pos]))
     return np.asarray(scans, dtype=np.int64)
 
 
@@ -114,7 +95,7 @@ def compute_timeline(
             .collect()
         )
         mins = np.asarray([r["mn"] for r in rows], dtype=np.int64)
-        return scan_times_from_bucket_mins(mins, cfg.check_interval_us, bucket_us)
+        return scan_times_from_sorted(mins, cfg.check_interval_us)
 
     if cfg.scan_mode == "exact":
         rows = (

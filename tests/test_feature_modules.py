@@ -1,6 +1,7 @@
 """Feature-module unit tests mirroring the reference's own test cases
 case-for-case (rustiflow/src/tests/flows/feature_modules_test.rs), asserted
-against BOTH engine kernels (simple per-group and segment-vectorized).
+on the block kernel, which is also checked against the transliteration
+oracle (tests/oracle_flow.py) on every case.
 
 Each case builds a single biflow whose packets reproduce the reference test
 inputs; flows are kept alive until shutdown flush so module state matches
@@ -16,8 +17,8 @@ import pandas as pd
 import pytest
 
 from rustiflow_spark.config import ACK_FLAG, FIN_FLAG, SYN_FLAG, EngineConfig
-from test_kernel_parity import run_kernel_all_groups
-from test_packet_vectorized import run_vectorized
+from oracle_flow import OracleFlowTable
+from test_kernel_parity import compare_flow_sets, df_to_packets, run_vectorized
 
 CFG = EngineConfig(active_timeout=10_000_000, idle_timeout=10_000_000, scan_mode="none")
 
@@ -45,17 +46,16 @@ def mk_packets(rows: list[dict]) -> pd.DataFrame:
 
 
 def run_both(pdf: pd.DataFrame, cfg: EngineConfig = CFG, n_sessions: int = 1) -> list[dict]:
-    simple = sorted(run_kernel_all_groups(pdf, cfg), key=lambda r: r["first_ts_us"])
+    """Block-kernel rows sorted by first_ts_us, after checking them against
+    the oracle."""
     vec = sorted(run_vectorized(pdf, cfg), key=lambda r: r["first_ts_us"])
-    assert len(simple) == len(vec) == n_sessions
-    for s, v in zip(simple, vec):
-        for k, val in s.items():
-            if k in v:
-                if isinstance(val, float):
-                    assert np.isclose(val, v[k], equal_nan=True), (k, val, v[k])
-                else:
-                    assert val == v[k], (k, val, v[k])
-    return simple
+    assert len(vec) == n_sessions
+    oracle = OracleFlowTable(
+        cfg.active_timeout, cfg.idle_timeout, cfg.early_export,
+        cfg.expiration_check_interval,
+    )
+    compare_flow_sets(oracle.run(df_to_packets(pdf)), vec)
+    return vec
 
 
 def test_packet_length_pooled_directional_variance():

@@ -1,7 +1,9 @@
 """Accumulator-based packet-path streaming state (round-5 verdict item 1,
 packet variant). Mirrors tests/test_event_accum.py: multi-batch replay of
-_advance_packet_key must emit the batch kernel's flows (np.isclose per
-feature), and per-key state must stay bounded by the watermark horizon."""
+_advance_packet_key must emit the batch kernel's flows
+(packet_segmented.featurize_packet_block on the key's packets; np.isclose
+per feature), and per-key state must stay bounded by the watermark
+horizon."""
 
 import numpy as np
 import pytest
@@ -13,11 +15,9 @@ from rustiflow_spark.kernel.flow_accum import (
     flow_acc_fold,
     flow_acc_finalize,
 )
-from rustiflow_spark.kernel.flow_kernel import (
-    compute_session_features,
-    process_group,
-    segment_biflow,
-)
+from rustiflow_spark.kernel.flow_kernel import segment_biflow
+from rustiflow_spark.kernel.packet_segmented import featurize_packet_block
+from rustiflow_spark.schema import FLOW_SUPERSET_COLUMNS
 from rustiflow_spark.streaming.sessionize_stream import (
     _PKT_STATE_COLS,
     _advance_packet_key,
@@ -79,6 +79,24 @@ def _synth_group(rng, proto, n):
     return g
 
 
+def _batch_rows(g, cfg):
+    """The block kernel's rows for one key's sorted packets, sessions in
+    start order (then early-export snapshots, if cfg asks for them)."""
+    n = g["ts_us"].size
+    block = dict(g, key_id=np.zeros(n, dtype=np.int64))
+    keys = {
+        "key_ip_a": np.full(n, META["src_ip_a"], dtype=object),
+        "key_port_a": np.full(n, META["src_port_a"]),
+        "key_ip_b": np.full(n, META["dst_ip_a"], dtype=object),
+        "key_port_b": np.full(n, META["dst_port_a"]),
+    }
+    res = featurize_packet_block(block, keys, cfg, NO_SCANS, int(g["ts_us"][-1]))
+    return [
+        {c: res[c][i] for c in FLOW_SUPERSET_COLUMNS}
+        for i in range(res["first_ts_us"].size)
+    ]
+
+
 def _slice(g, a, b):
     return {c: g[c][a:b] for c in COLS}
 
@@ -116,9 +134,7 @@ def test_packet_multibatch_replay_matches_batch_kernel(seed, proto):
     cfg = EngineConfig(active_timeout=3600, idle_timeout=30, scan_mode="none")
     n = int(rng.integers(50, 400))
     g = _synth_group(rng, proto, n)
-    gm = dict(g)
-    gm.update(META)
-    batch = process_group(gm, META, cfg, NO_SCANS, int(g["ts_us"][-1]))
+    batch = _batch_rows(g, cfg)
     stream_rows = _replay(g, cfg, n_batches=6, delay_us=10_000_000, rng=rng)
     assert len(stream_rows) == len(batch)
     for srow, brow in zip(stream_rows, batch):
@@ -158,9 +174,7 @@ def test_packet_open_flow_state_bounded_by_watermark_horizon():
         acc, tail, cfg, int(g["ts_us"][-1]), True, META
     )
     assert len(rows) == 1
-    gm = dict(g)
-    gm.update(META)
-    batch = process_group(gm, META, cfg, NO_SCANS, int(g["ts_us"][-1]))
+    batch = _batch_rows(g, cfg)
     assert len(batch) == 1
     for col, bv in batch[0].items():
         if col == "cause":
@@ -183,12 +197,9 @@ def test_single_fold_finalize_bit_matches_batch_features():
                "data_len": g["data_length"]}
     sessions = segment_biflow(g["ts_us"], g["dir_a"], 6, tcp_ctl, cfg,
                               NO_SCANS, int(g["ts_us"][-1]))
-    gm = dict(g)
-    gm.update(META)
-    for sess in sessions:
-        if sess.snapshot_of >= 0:
-            continue
-        brow = compute_session_features(gm, sess, cfg)
+    batch = _batch_rows(g, cfg)
+    assert len(batch) == len(sessions)
+    for sess, brow in zip(sessions, batch):
         acc = flow_acc_fold(None, _slice(g, sess.start, sess.end))
         row = flow_acc_finalize(
             acc, META, sess.cause, sess.close_ts, sess.closed,

@@ -1,6 +1,6 @@
 """Session-table integration scenarios ported case-for-case from the
-reference (rustiflow/src/tests/flows/flow_table_test.rs), asserted against
-both kernels via the same helpers as the feature-module tests."""
+reference (rustiflow/src/tests/flows/flow_table_test.rs), asserted on the
+block kernel via the same helpers as the feature-module tests."""
 
 from __future__ import annotations
 
@@ -9,7 +9,7 @@ import pytest
 
 from rustiflow_spark.config import EngineConfig
 from test_feature_modules import mk_packets, run_both
-from test_kernel_parity import run_kernel_all_groups
+from test_kernel_parity import run_vectorized
 
 
 def test_idle_timeout_cause_and_flow_key():
@@ -28,7 +28,7 @@ def test_idle_timeout_cause_and_flow_key():
     # the reference test forces export_expired_flows(3s) directly; with
     # packet-driven scanning, interval=1 makes the 3s packet fire the scan
     cfg = EngineConfig(active_timeout=3600, idle_timeout=1, expiration_check_interval=1)
-    rows = run_kernel_all_groups(both, cfg)
+    rows = run_vectorized(both, cfg)
     target = [r for r in rows if r["flow_key"].startswith("10.0.0.1:1000")]
     assert len(target) == 1
     assert target[0]["cause"] == "Idle Timeout"
@@ -93,7 +93,7 @@ def test_early_export_keeps_flow_active_for_final_export():
     cfg = EngineConfig(active_timeout=3600, idle_timeout=120, early_export=1,
                        scan_mode="none")
     rows = sorted(
-        run_kernel_all_groups(pdf, cfg), key=lambda r: (r["cause"] != "None", r["last_ts_us"])
+        run_vectorized(pdf, cfg), key=lambda r: (r["cause"] != "None", r["last_ts_us"])
     )
     assert len(rows) == 2
     snapshot = [r for r in rows if r["cause"] == "None"][0]

@@ -1,10 +1,11 @@
 """Kernel vs pure-Python oracle parity on deterministic synthetic traffic.
 
 The oracle (tests/oracle_flow.py) transliterates the reference row-by-row;
-the kernel (rustiflow_spark/kernel/flow_kernel.py) is the vectorized Spark
-implementation. Both consume the same single-shard packet stream; outputs
-must match per (flow_key, first_ts) with np.allclose on floats and exact
-equality on ints/strings.
+the kernel (rustiflow_spark/kernel/packet_segmented.featurize_packet_block)
+is the vectorized block featurizer Spark runs per sorted Arrow block. Both
+consume the same single-shard packet stream; outputs must match per
+(flow_key, first_ts) with np.allclose on floats and exact equality on
+ints/strings.
 """
 
 from __future__ import annotations
@@ -17,7 +18,8 @@ import pytest
 
 from oracle_flow import OracleFlowTable, Packet
 from rustiflow_spark.config import EngineConfig
-from rustiflow_spark.kernel.flow_kernel import process_group
+from rustiflow_spark.kernel.packet_segmented import featurize_packet_block
+from rustiflow_spark.schema import FLOW_SUPERSET_COLUMNS
 from rustiflow_spark.sources.synth import generate_packet_events
 from rustiflow_spark.timeline import scan_times_from_sorted
 
@@ -75,15 +77,16 @@ def df_to_packets(df: pd.DataFrame) -> list[Packet]:
     return pkts
 
 
-def run_kernel_all_groups(df: pd.DataFrame, cfg: EngineConfig) -> list[dict]:
-    ts_sorted = np.sort(df["ts_us"].to_numpy(dtype=np.int64))
-    scan_times = (
+def run_vectorized(df: pd.DataFrame, cfg: EngineConfig) -> list[dict]:
+    """featurize_packet_block over the whole input as one block sorted by
+    (canonical key, ts_us, event_seq), as sessionize_packets feeds it."""
+    ts_sorted = np.sort(df["ts_us"].to_numpy(np.int64))
+    scans = (
         scan_times_from_sorted(ts_sorted, cfg.check_interval_us)
         if cfg.scan_mode == "exact"
-        else np.empty(0, dtype=np.int64)
+        else np.empty(0, np.int64)
     )
     flush_ts = int(ts_sorted[-1])
-
     # canonical key (same rule as operators/sessionize.with_canonical_key)
     a_first = (df["src_ip"] < df["dst_ip"]) | (
         (df["src_ip"] == df["dst_ip"]) & (df["src_port"] <= df["dst_port"])
@@ -94,22 +97,23 @@ def run_kernel_all_groups(df: pd.DataFrame, cfg: EngineConfig) -> list[dict]:
         key_port_a=np.where(a_first, df["src_port"], df["dst_port"]),
         key_ip_b=np.where(a_first, df["dst_ip"], df["src_ip"]),
         key_port_b=np.where(a_first, df["dst_port"], df["src_port"]),
-    )
-    out = []
-    for _, pdf in df.groupby(["key_ip_a", "key_port_a", "key_ip_b", "key_port_b", "protocol"]):
-        pdf = pdf.sort_values(["ts_us", "event_seq"], kind="mergesort")
-        g = {c: pdf[c].to_numpy(dtype=np.int64) for c in INT_COLS}
-        for c in ("icmp_type", "icmp_code"):
-            g[c] = pdf[c].astype("float64").fillna(-1).to_numpy().astype(np.int64)
-        g["dir_a"] = pdf["dir_a"].to_numpy(dtype=bool)
-        meta = {
-            "src_ip_a": pdf["key_ip_a"].iloc[0],
-            "src_port_a": int(pdf["key_port_a"].iloc[0]),
-            "dst_ip_a": pdf["key_ip_b"].iloc[0],
-            "dst_port_a": int(pdf["key_port_b"].iloc[0]),
-        }
-        out.extend(process_group(g, meta, cfg, scan_times, flush_ts))
-    return out
+    ).sort_values(
+        ["key_ip_a", "key_port_a", "key_ip_b", "key_port_b", "protocol", "ts_us", "event_seq"],
+        kind="mergesort",
+    ).reset_index(drop=True)
+    g = {c: df[c].to_numpy(dtype=np.int64) for c in INT_COLS}
+    for c in ("icmp_type", "icmp_code"):
+        g[c] = df[c].astype("float64").fillna(-1).to_numpy().astype(np.int64)
+    g["dir_a"] = df["dir_a"].to_numpy(dtype=bool)
+    g["key_id"] = pd.factorize(
+        pd.MultiIndex.from_frame(
+            df[["key_ip_a", "key_port_a", "key_ip_b", "key_port_b", "protocol"]]
+        )
+    )[0].astype(np.int64)
+    keys = {k: df[k].to_numpy() for k in ("key_ip_a", "key_port_a", "key_ip_b", "key_port_b")}
+    res = featurize_packet_block(g, keys, cfg, scans, flush_ts)
+    cols = [c for c in FLOW_SUPERSET_COLUMNS if c in res]
+    return pd.DataFrame({c: res[c] for c in cols}).to_dict("records")
 
 
 def compare_flow_sets(oracle_rows: list[dict], kernel_rows: list[dict], rtol=1e-9, atol=1e-6):
@@ -150,7 +154,7 @@ def test_kernel_matches_oracle(seed):
         cfg.active_timeout, cfg.idle_timeout, cfg.early_export, cfg.expiration_check_interval
     )
     oracle_rows = oracle.run(df_to_packets(df))
-    kernel_rows = run_kernel_all_groups(df, cfg)
+    kernel_rows = run_vectorized(df, cfg)
     compare_flow_sets(oracle_rows, kernel_rows)
 
 
@@ -162,7 +166,7 @@ def test_kernel_matches_oracle_early_export(seed):
     cfg = EngineConfig(early_export=5)
     oracle = OracleFlowTable(3600, 120, 5, 60)
     oracle_rows = oracle.run(df_to_packets(df))
-    kernel_rows = run_kernel_all_groups(df, cfg)
+    kernel_rows = run_vectorized(df, cfg)
     assert any(r["cause"] == "None" for r in oracle_rows), "no snapshots generated"
     compare_flow_sets(oracle_rows, kernel_rows)
 
@@ -173,5 +177,5 @@ def test_kernel_matches_oracle_short_timeouts():
     cfg = EngineConfig(active_timeout=30, idle_timeout=8, expiration_check_interval=5)
     oracle = OracleFlowTable(30, 8, None, 5)
     oracle_rows = oracle.run(df_to_packets(df))
-    kernel_rows = run_kernel_all_groups(df, cfg)
+    kernel_rows = run_vectorized(df, cfg)
     compare_flow_sets(oracle_rows, kernel_rows)

@@ -1,54 +1,16 @@
-"""Vectorized packet block kernel must equal the simple per-group kernel
-(and therefore the oracle) on every synthetic scenario."""
+"""The vectorized packet block kernel must equal the transliteration
+oracle on every synthetic scenario, and the Spark boundary around it
+(sorting, Arrow batching, key-run carry) must not change its output."""
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 import pytest
 
+from oracle_flow import OracleFlowTable
 from rustiflow_spark.config import EngineConfig
-from rustiflow_spark.kernel.packet_segmented import featurize_packet_block
-from rustiflow_spark.schema import FLOW_SUPERSET_COLUMNS
 from rustiflow_spark.sources.synth import generate_packet_events
-from rustiflow_spark.timeline import scan_times_from_sorted
-from test_kernel_parity import INT_COLS, compare_flow_sets, run_kernel_all_groups
-
-
-def run_vectorized(df: pd.DataFrame, cfg: EngineConfig) -> list[dict]:
-    ts_sorted = np.sort(df["ts_us"].to_numpy(np.int64))
-    scans = (
-        scan_times_from_sorted(ts_sorted, cfg.check_interval_us)
-        if cfg.scan_mode == "exact"
-        else np.empty(0, np.int64)
-    )
-    flush_ts = int(ts_sorted[-1])
-    a_first = (df["src_ip"] < df["dst_ip"]) | (
-        (df["src_ip"] == df["dst_ip"]) & (df["src_port"] <= df["dst_port"])
-    )
-    df = df.assign(
-        dir_a=a_first,
-        key_ip_a=np.where(a_first, df["src_ip"], df["dst_ip"]),
-        key_port_a=np.where(a_first, df["src_port"], df["dst_port"]),
-        key_ip_b=np.where(a_first, df["dst_ip"], df["src_ip"]),
-        key_port_b=np.where(a_first, df["dst_port"], df["src_port"]),
-    ).sort_values(
-        ["key_ip_a", "key_port_a", "key_ip_b", "key_port_b", "protocol", "ts_us", "event_seq"],
-        kind="mergesort",
-    ).reset_index(drop=True)
-    g = {c: df[c].to_numpy(dtype=np.int64) for c in INT_COLS}
-    for c in ("icmp_type", "icmp_code"):
-        g[c] = df[c].astype("float64").fillna(-1).to_numpy().astype(np.int64)
-    g["dir_a"] = df["dir_a"].to_numpy(dtype=bool)
-    g["key_id"] = pd.factorize(
-        pd.MultiIndex.from_frame(
-            df[["key_ip_a", "key_port_a", "key_ip_b", "key_port_b", "protocol"]]
-        )
-    )[0].astype(np.int64)
-    keys = {k: df[k].to_numpy() for k in ("key_ip_a", "key_port_a", "key_ip_b", "key_port_b")}
-    res = featurize_packet_block(g, keys, cfg, scans, flush_ts)
-    cols = [c for c in FLOW_SUPERSET_COLUMNS if c in res]
-    return pd.DataFrame({c: res[c] for c in cols}).to_dict("records")
+from test_kernel_parity import compare_flow_sets, df_to_packets, run_vectorized
 
 
 @pytest.mark.parametrize("seed", [42, 7, 99])
@@ -59,30 +21,25 @@ def run_vectorized(df: pd.DataFrame, cfg: EngineConfig) -> list[dict]:
         EngineConfig(active_timeout=30, idle_timeout=8, expiration_check_interval=5),
         EngineConfig(active_timeout=60, idle_timeout=10, early_export=3,
                      expiration_check_interval=15),
-        EngineConfig(active_timeout=60, idle_timeout=10, early_export=3,
-                     expiration_check_interval=15, early_export_impl="gather"),
     ],
 )
 def test_vectorized_matches_simple(seed, cfg):
+    """Block kernel vs the oracle: default timeouts, short timeouts with
+    scan-time closes, and early-export snapshots."""
     df = generate_packet_events(n_flows=80, seed=seed, long_flow_packets=300)
-    simple = run_kernel_all_groups(df, cfg)
-    vec = run_vectorized(df, cfg)
-    compare_flow_sets(simple, vec)
+    oracle = OracleFlowTable(
+        cfg.active_timeout, cfg.idle_timeout, cfg.early_export,
+        cfg.expiration_check_interval,
+    )
+    expected = oracle.run(df_to_packets(df))
+    compare_flow_sets(expected, run_vectorized(df, cfg))
 
 
-@pytest.mark.parametrize("seed", [11, 23])
-def test_prefix_snapshots_match_gather(seed):
-    """The O(n) prefix-cumulative snapshot path must equal the quadratic
-    gather-expansion reference on every superset column (same tolerance as
-    the simple-kernel parity)."""
-    df = generate_packet_events(n_flows=40, seed=seed, long_flow_packets=400)
-    cfg_p = EngineConfig(active_timeout=600, idle_timeout=30, early_export=2)
-    cfg_g = EngineConfig(active_timeout=600, idle_timeout=30, early_export=2,
-                         early_export_impl="gather")
-    prefix = run_vectorized(df, cfg_p)
-    gather = run_vectorized(df, cfg_g)
-    assert any(r["cause"] == "None" for r in prefix), "no snapshots produced"
-    compare_flow_sets(gather, prefix)
+def _assert_spark_equals_local(spark_pdf: pd.DataFrame, local_rows: list[dict], key):
+    local = pd.DataFrame(local_rows)[list(spark_pdf.columns)]
+    a = spark_pdf.sort_values(key).reset_index(drop=True)
+    b = local.sort_values(key).reset_index(drop=True)
+    pd.testing.assert_frame_equal(a, b, check_dtype=False)
 
 
 def test_vectorized_spark_end_to_end(spark):
@@ -92,28 +49,24 @@ def test_vectorized_spark_end_to_end(spark):
     pdf = generate_packet_events(n_flows=50, seed=2, long_flow_packets=150)
     sdf = make_events_df(spark, pdf)
     cfg = EngineConfig()
-    vec = sessionize_packets(sdf, cfg, engine="vectorized").toPandas()
-    simple = sessionize_packets(sdf, cfg, engine="simple").toPandas()
-    key = ["flow_key", "first_ts_us", "last_ts_us"]
-    a = vec.sort_values(key).reset_index(drop=True)
-    b = simple.sort_values(key).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
+    got = sessionize_packets(sdf, cfg).toPandas()
+    _assert_spark_equals_local(
+        got, run_vectorized(pdf, cfg), ["flow_key", "first_ts_us", "last_ts_us"]
+    )
 
 
 def test_vectorized_early_export_spark_end_to_end(spark):
-    """early_export no longer changes engine selection: the vectorized path
-    emits the same snapshots (gather-expansion) as the per-group kernel."""
+    """The Spark path emits the same early-export snapshots as the block
+    kernel run locally over the whole input."""
     from rustiflow_spark.operators.sessionize import sessionize_packets
     from test_sessionize_spark import make_events_df
 
     pdf = generate_packet_events(n_flows=30, seed=5, long_flow_packets=200)
     sdf = make_events_df(spark, pdf)
     cfg = EngineConfig(active_timeout=3600, idle_timeout=120, early_export=2)
-    auto = sessionize_packets(sdf, cfg)  # engine='auto' must stay vectorized
-    vec = auto.toPandas()
-    simple = sessionize_packets(sdf, cfg, engine="simple").toPandas()
-    assert (vec["cause"] == "None").any(), "no early-export snapshots produced"
-    key = ["flow_key", "first_ts_us", "last_ts_us", "cause", "duration_us"]
-    a = vec.sort_values(key).reset_index(drop=True)
-    b = simple.sort_values(key).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
+    got = sessionize_packets(sdf, cfg).toPandas()
+    assert (got["cause"] == "None").any(), "no early-export snapshots produced"
+    _assert_spark_equals_local(
+        got, run_vectorized(pdf, cfg),
+        ["flow_key", "first_ts_us", "last_ts_us", "cause", "duration_us"],
+    )

@@ -237,7 +237,10 @@ def test_packet_stream_early_export_no_reemission(spark, tmp_path):
     """Early-export snapshots must not drive the emit/keep logic: a snapshot
     is emitted exactly once, alongside its parent flow's close, and
     snapshots of the still-open trailing flow are not re-emitted per
-    micro-batch (ADVICE r2)."""
+    micro-batch (ADVICE r2). Three keys cover the three ways a flow closes
+    on this path: a later packet (UDP), TCP termination by FIN (the
+    segmentation's TCP-control path) and the event-time timeout flush of a
+    trailing flow (relabelled Idle Timeout)."""
     import time as _time
 
     from rustiflow_spark.streaming.sessionize_stream import sessionize_packets_stream
@@ -247,39 +250,68 @@ def test_packet_stream_early_export_no_reemission(spark, tmp_path):
     out_dir = str(tmp_path / "ee_out")
     ckpt = str(tmp_path / "ee_ckpt")
 
-    def packets(ts_list, seq0):
+    def packets(ts_list, seq0, **cols):
         n = len(ts_list)
-        return pd.DataFrame({
-            "src_ip": ["10.0.0.1"] * n, "dst_ip": ["10.0.0.2"] * n,
-            "src_port": [1234] * n, "dst_port": [443] * n,
-            "protocol": [17] * n,
+        pdf = pd.DataFrame({
+            "src_ip": "10.0.0.1", "dst_ip": "10.0.0.2",
+            "src_port": 1234, "dst_port": 443, "protocol": 17,
             "ts_us": np.asarray(ts_list, dtype=np.int64),
-            "fin_flag": [0] * n, "syn_flag": [0] * n, "rst_flag": [0] * n,
-            "psh_flag": [0] * n, "ack_flag": [0] * n, "urg_flag": [0] * n,
-            "cwr_flag": [0] * n, "ece_flag": [0] * n, "flags": [0] * n,
-            "data_length": [100] * n, "header_length": [8] * n,
-            "length": [128] * n, "window_size": [0] * n,
-            "sequence_number": [0] * n, "sequence_number_ack": [0] * n,
-            "icmp_type": [None] * n, "icmp_code": [None] * n,
+            "fin_flag": 0, "syn_flag": 0, "rst_flag": 0,
+            "psh_flag": 0, "ack_flag": 0, "urg_flag": 0,
+            "cwr_flag": 0, "ece_flag": 0, "flags": 0,
+            "data_length": 100, "header_length": 8,
+            "length": 128, "window_size": 0,
+            "sequence_number": 0, "sequence_number_ack": 0,
+            "icmp_type": None, "icmp_code": None,
             "event_seq": np.arange(seq0, seq0 + n, dtype=np.int64),
         })
+        for c, v in cols.items():
+            pdf[c] = v
+        return pdf
 
     base = 1_700_000_000_000_000
-    # batch 1: one flow spanning 8s -> snapshots past the 2s threshold,
-    # flow still open at end of batch
+    # key 1 (UDP), batch 1: one flow spanning 8s -> snapshots past the 2s
+    # threshold, flow still open at end of batch
     b1 = [base + i * 2_000_000 for i in range(5)]
     # batch 2: a gap > idle timeout closes the first flow (successor packet)
     b2 = [base + 200_000_000]
+    # key 2 (TCP), batch 1: handshake, data, FIN both ways, last ACK
+    fwd = [True, False, True, True, False, True, False, True]
+    tcp = packets(
+        [base + i * 1_000_000 for i in range(8)], 20,
+        src_ip=["10.0.0.3" if f else "10.0.0.4" for f in fwd],
+        dst_ip=["10.0.0.4" if f else "10.0.0.3" for f in fwd],
+        src_port=[5555 if f else 80 for f in fwd],
+        dst_port=[80 if f else 5555 for f in fwd],
+        protocol=6,
+        syn_flag=[1, 1, 0, 0, 0, 0, 0, 0],
+        ack_flag=[0, 1, 1, 1, 1, 1, 1, 1],
+        fin_flag=[0, 0, 0, 0, 0, 1, 1, 0],
+        psh_flag=[0, 0, 0, 1, 0, 0, 0, 0],
+        flags=[0x02, 0x12, 0x10, 0x18, 0x10, 0x11, 0x11, 0x10],
+        data_length=[0, 0, 0, 100, 0, 0, 0, 0],
+        header_length=20, window_size=1000,
+        sequence_number=[100, 500, 101, 101, 501, 201, 501, 202],
+        sequence_number_ack=[0, 101, 501, 501, 201, 501, 202, 502],
+    )
+    # key 3 (UDP), batch 1: a flow that no later packet closes; batch 2
+    # moves the watermark past its idle expiry, so its timeout flushes it
+    trailing = packets(
+        [base + (10 + i) * 1_000_000 for i in range(5)], 40,
+        src_ip="10.0.0.5", dst_ip="10.0.0.6", src_port=53, dst_port=5353,
+    )
+    batch1 = pd.concat([packets(b1, 0), tcp, trailing], ignore_index=True)
+    batch2 = packets(b2, 10)
     from test_sessionize_spark import make_events_df
-    make_events_df(spark, packets(b1, 0)).coalesce(1).write.mode(
+    make_events_df(spark, batch1).coalesce(1).write.mode(
         "overwrite").parquet(str(src_dir / "f1.parquet"))
     _time.sleep(1.1)
-    make_events_df(spark, packets(b2, 10)).coalesce(1).write.mode(
+    make_events_df(spark, batch2).coalesce(1).write.mode(
         "overwrite").parquet(str(src_dir / "f2.parquet"))
 
     cfg = EngineConfig(active_timeout=3600, idle_timeout=60, scan_mode="none",
                        early_export=2)
-    schema = make_events_df(spark, packets(b1, 0)).schema
+    schema = make_events_df(spark, batch1).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -296,16 +328,69 @@ def test_packet_stream_early_export_no_reemission(spark, tmp_path):
     q.awaitTermination(120)
     got = spark.read.parquet(out_dir).toPandas()
 
-    snaps = got[got["cause"] == "None"]
-    closed = got[got["cause"] != "None"]
+    udp = got[got["flow_key"].str.startswith("10.0.0.1:")]
+    snaps = udp[udp["cause"] == "None"]
+    closed = udp[udp["cause"] != "None"]
     # first flow closed by the batch-2 successor; its snapshots (packets at
     # +4s/+6s/+8s past the 2s threshold) emitted exactly once each
-    assert len(closed) == 1, got[["cause", "first_ts_us", "last_ts_us"]]
-    assert len(snaps) == 3, got[["cause", "first_ts_us", "last_ts_us"]]
+    assert len(closed) == 1, udp[["cause", "first_ts_us", "last_ts_us"]]
+    assert len(snaps) == 3, udp[["cause", "first_ts_us", "last_ts_us"]]
     assert snaps.duplicated(["flow_key", "first_ts_us", "last_ts_us"]).sum() == 0
     # every snapshot spans a prefix of the closed flow
     assert (snaps["first_ts_us"] == closed.iloc[0]["first_ts_us"]).all()
     assert (snaps["last_ts_us"] <= closed.iloc[0]["last_ts_us"]).all()
+
+    # the closed flows and their snapshots carry the batch kernel's values
+    from rustiflow_spark.operators.sessionize import sessionize_packets
+
+    all_packets = pd.concat([batch1, batch2], ignore_index=True)
+    batch = sessionize_packets(make_events_df(spark, all_packets), cfg).toPandas()
+    _assert_stream_rows_match_batch(got, batch)
+
+    # the TCP and the timeout-flushed flow are exported whole, with every
+    # snapshot, exactly once
+    span = ["first_ts_us", "last_ts_us"]
+    for prefix, cause in (("10.0.0.3:", "TCP Normal Termination"),
+                          ("10.0.0.5:", "Idle Timeout")):
+        g = got[got["flow_key"].str.startswith(prefix)]
+        b = batch[batch["flow_key"].str.startswith(prefix)]
+        assert (g["cause"] != "None").sum() == 1, g[["cause", *span]]
+        assert g.loc[g["cause"] != "None", "cause"].iloc[0] == cause
+        assert (g["cause"] == "None").sum() >= 2, g[["cause", *span]]
+        assert sorted(map(tuple, g[span].to_numpy())) == sorted(
+            map(tuple, b[span].to_numpy())
+        ), (g[["cause", *span]], b[["cause", *span]])
+
+
+def _assert_stream_rows_match_batch(got: pd.DataFrame, batch: pd.DataFrame) -> None:
+    """Every streamed flow row equals the batch row with the same
+    (flow_key, first_ts_us, last_ts_us, cause): ints and strings exactly,
+    floats with np.isclose.
+
+    A trailing flow flushed by its event-time timeout is exported with its
+    "Exporter Shutdown" features and the cause relabelled to Idle/Active
+    Timeout (sessionize_packets_stream docstring). Such a row is matched on
+    the batch "Exporter Shutdown" row and only its cause is not compared:
+    no other column reads the close time of a shutdown-flushed flow."""
+    key = ["flow_key", "first_ts_us", "last_ts_us", "cause"]
+    by_key = batch.set_index(key)
+    assert not by_key.index.duplicated().any()
+    for _, srow in got.iterrows():
+        k = tuple(srow[c] for c in key)
+        skip = set()
+        if k not in by_key.index and srow["cause"] in ("Idle Timeout", "Active Timeout"):
+            k = k[:3] + ("Exporter Shutdown",)
+            skip.add("cause")
+        assert k in by_key.index, f"streamed row missing from batch: {k}"
+        brow = by_key.loc[k]
+        for col in batch.columns:
+            if col in key or col in skip:
+                continue
+            sv, bv = srow[col], brow[col]
+            if pd.api.types.is_float_dtype(batch[col].dtype):
+                assert np.isclose(float(sv), float(bv)), (k, col, sv, bv)
+            else:
+                assert sv == bv, (k, col, sv, bv)
 
 
 def test_rollup_stream_matches_batch_on_finalized_buckets(spark, tmp_path):

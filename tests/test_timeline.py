@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from rustiflow_spark.timeline import scan_times_from_bucket_mins, scan_times_from_sorted
+from rustiflow_spark.timeline import scan_times_from_sorted
 
 
 def test_exact_scan_recursion():
@@ -30,7 +30,7 @@ def test_bucket_mode_error_bound():
     mins = np.array(
         [ts[buckets == b].min() for b in np.unique(buckets)], dtype=np.int64
     )
-    approx = scan_times_from_bucket_mins(mins, interval, bucket_us)
+    approx = scan_times_from_sorted(mins, interval)
     # each approximate scan is a real event time and within one bucket of an
     # exact scan's neighborhood; counts match within rounding drift
     assert np.isin(approx, ts).all()

@@ -18,7 +18,26 @@ from __future__ import annotations
 
 import argparse
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
+
+
+def build_session() -> SparkSession:
+    """The job's session. No master: spark-submit --master decides.
+
+    The worker set-up of get_spark (session.with_python_workers) is applied
+    only to a local master: its worker daemon is imported from the driver's
+    path to the package before --py-files reach the worker, and a cluster
+    executor need not be able to read that path.
+    """
+    from rustiflow_spark.session import with_python_workers
+
+    SparkContext._ensure_initialized()  # the JVM spark-submit started
+    master = SparkConf().get("spark.master", "")
+    builder = SparkSession.builder.appName("rustiflow-submit")
+    if master == "local" or master.startswith("local["):
+        builder = with_python_workers(builder)
+    return builder.getOrCreate()
 
 
 def main() -> None:
@@ -36,7 +55,7 @@ def main() -> None:
     from rustiflow_spark.config import EngineConfig
     from rustiflow_spark.pipeline import run_checkpointed, token_feature_pipeline
 
-    spark = SparkSession.builder.appName("rustiflow-submit").getOrCreate()
+    spark = build_session()
     cfg = EngineConfig(
         idle_timeout=args.idle_timeout_s, active_timeout=args.active_timeout_s
     )
