@@ -128,9 +128,8 @@ def _engine_cfg():
 
 
 def _events_flush_us(sf_dir: str) -> int | None:
-    """Flush timestamp (max epoch µs of events.ts) from parquet footer
-    statistics — no data scan. Passing it pins the reference's flush time;
-    omitting it gives the same output (the engine flushes at end of input)."""
+    """Max epoch µs of events.ts from parquet footer statistics — no data
+    scan."""
     from rustiflow_spark.sources.tables import parquet_column_max
 
     mx = parquet_column_max(f"{sf_dir}/events.parquet", "ts")
@@ -162,7 +161,6 @@ def q_session_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         # column pruning pushed through the kernel: only the feature blocks
         # this query projects are computed and shipped back through Arrow
         features=["value", "iat", "subflow", "direction"],
-        flush_ts=_events_flush_us(sf_dir),
     )
     return feats.select(
         "user_id",
@@ -260,7 +258,6 @@ def q_session_features_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         value_col="value",
         features=["value", "iat", "subflow", "direction"],
         next_ts_col="next_key_ts",
-        flush_ts=_events_flush_us(sf_dir),
     )
     return feats.select(
         "user_id",
@@ -438,7 +435,6 @@ def q_session_annotation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ann = assign_sessions(
         _events(spark, sf_dir), ["user_id"], _engine_cfg(),
-        flush_ts=_events_flush_us(sf_dir),
     )
     return ann.select(
         "user_id",
@@ -3911,15 +3907,7 @@ _SERVER_IP = "172.16.0.9"
 _IDLE_CUT_US = (IDLE_S + 1) * 1_000_000  # strict > in whole seconds, int µs
 
 
-def _packet_flush_us(sf_dir: str) -> int | None:
-    """Footer-stats flush for the synthesized packet table: the ts
-    transformation (raw_us div 40000) * 1000 is monotone, so the max maps
-    through directly."""
-    raw = _events_flush_us(sf_dir)
-    return None if raw is None else (raw // 40000) * 1000
-
-
-def _sessionize_pruned(spark, df, cfg, flush_ts, build):
+def _sessionize_pruned(spark, df, cfg, build):
     """sessionize_packets with kernel column pruning derived from ``build``'s
     attribute references: the Arrow batch out of the Python kernel carries
     only the superset columns the downstream projection reads, and unneeded
@@ -3929,7 +3917,7 @@ def _sessionize_pruned(spark, df, cfg, flush_ts, build):
     from rustiflow_spark.schema import projection_superset_columns
 
     cols = projection_superset_columns(spark, build)
-    return build(sessionize_packets(df, cfg, flush_ts=flush_ts, columns=cols))
+    return build(sessionize_packets(df, cfg, columns=cols))
 
 
 # ICMP type from event_id % 5: echo request, echo reply, dest-unreachable,
@@ -4241,7 +4229,6 @@ def q_flow_cic_udp(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         _packet_table(spark, sf_dir, tcp=False),
         cfg,
-        _packet_flush_us(sf_dir),
         build,
     )
 
@@ -4400,7 +4387,7 @@ def q_flow_rustiflow203(spark: SparkSession, sf_dir: str) -> DataFrame:
         active_timeout=BIG_ACTIVE_S, idle_timeout=IDLE_S, scan_mode="none"
     )
     flows = sessionize_packets(
-        _packet_table(spark, sf_dir, tcp=False), cfg, flush_ts=_packet_flush_us(sf_dir)
+        _packet_table(spark, sf_dir, tcp=False), cfg
     )
     full = rustiflow_schema(flows)
     return full.select(
@@ -4743,7 +4730,6 @@ def q_flow_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
     flows = sessionize_packets(
         _packet_table(spark, sf_dir, tcp=False),
         cfg,
-        flush_ts=_packet_flush_us(sf_dir),
         columns=projection_superset_columns(spark, basic_schema),
     )
     return basic_schema(flows)
@@ -4790,7 +4776,6 @@ def q_flow_nf(spark: SparkSession, sf_dir: str) -> DataFrame:
     flows = sessionize_packets(
         _packet_table(spark, sf_dir, tcp=False),
         cfg,
-        flush_ts=_packet_flush_us(sf_dir),
         columns=projection_superset_columns(spark, nf_schema),
     )
     full = nf_schema(flows)
@@ -4915,7 +4900,6 @@ def q_flow_cidds(spark: SparkSession, sf_dir: str) -> DataFrame:
     flows = sessionize_packets(
         _packet_table(spark, sf_dir, tcp=True),
         cfg,
-        flush_ts=_packet_flush_us(sf_dir),
         columns=projection_superset_columns(spark, cidds_schema),
     )
     return cidds_schema(flows)
@@ -4998,7 +4982,7 @@ def q_flow_cic_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
         active_timeout=BIG_ACTIVE_S, idle_timeout=IDLE_S, scan_mode="none"
     )
     flows = sessionize_packets(
-        _packet_table(spark, sf_dir, tcp=False), cfg, flush_ts=_packet_flush_us(sf_dir)
+        _packet_table(spark, sf_dir, tcp=False), cfg
     )
     dur, subflows = _double("duration_us"), _double("subflow_count")
     fwd_n, bwd_n = _double("fwd_packet_len_count"), _double("bwd_packet_len_count")
@@ -5111,7 +5095,6 @@ def q_flow_icmp(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         _packet_table(spark, sf_dir, tcp=False, icmp=True),
         cfg,
-        _packet_flush_us(sf_dir),
         build,
     )
 
@@ -5277,7 +5260,7 @@ def q_flow_tcp_fin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return _sessionize_pruned(
-        spark, _tcp_fin_packets(spark, sf_dir), cfg, _packet_flush_us(sf_dir), build
+        spark, _tcp_fin_packets(spark, sf_dir), cfg, build
     )
 
 
@@ -5467,7 +5450,7 @@ def q_flow_od_modules(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return _sessionize_pruned(
-        spark, _od_packets(spark, sf_dir), cfg, _packet_flush_us(sf_dir), build
+        spark, _od_packets(spark, sf_dir), cfg, build
     )
 
 
@@ -5639,7 +5622,6 @@ def q_flow_early_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         _packet_table(spark, sf_dir, tcp=False),
         cfg,
-        _packet_flush_us(sf_dir),
         build,
     )
 
@@ -6547,7 +6529,6 @@ def q_flow_custom_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     flows = sessionize_packets(
         _packet_table(spark, sf_dir, tcp=False, icmp=True),
         cfg,
-        flush_ts=_packet_flush_us(sf_dir),
     )
     return example_custom_schema().apply(flows)
 
@@ -6606,7 +6587,6 @@ def q_flow_tcp_rst(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         _packet_table(spark, sf_dir, tcp=True),
         cfg,
-        _packet_flush_us(sf_dir),
         build,
     )
 
@@ -6708,7 +6688,7 @@ def q_flow_active_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cfg = EngineConfig(active_timeout=3600, idle_timeout=IDLE_S, scan_mode="none")
     flows = sessionize_packets(
-        _packet_table(spark, sf_dir, tcp=False), cfg, flush_ts=_packet_flush_us(sf_dir)
+        _packet_table(spark, sf_dir, tcp=False), cfg
     )
     return flows.select(
         "flow_key",
@@ -6783,7 +6763,7 @@ def q_flow_scan_close(spark: SparkSession, sf_dir: str) -> DataFrame:
         expiration_check_interval=7200,
     )
     flows = sessionize_packets(
-        _packet_table(spark, sf_dir, tcp=False), cfg, flush_ts=_packet_flush_us(sf_dir)
+        _packet_table(spark, sf_dir, tcp=False), cfg
     )
     return flows.select(
         "flow_key",

@@ -9,7 +9,8 @@ per session.
 Plan shape of the kernel path (one shuffle):
 
     scan -> repartition(key) -> sortWithinPartitions(key, ts, seq)
-         -> mapInArrow(block kernel, key-run carry) -> feature rows
+         -> mapInArrow(block kernel over kernel/key_runs.key_blocks)
+         -> feature rows
 
 ``strategy='catalyst'`` (or 'auto') replaces the Python stage with
 windows + aggregations (sessionize_events_catalyst). With scan_mode
@@ -25,11 +26,11 @@ token-equality invariant.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from rustiflow_spark.config import EngineConfig
 from rustiflow_spark.kernel.event_kernel import EVENT_FEATURE_COLUMNS
+from rustiflow_spark.kernel.key_runs import _require_no_nulls, key_blocks, record_batch
 from rustiflow_spark.timeline import compute_timeline
 
 
@@ -241,34 +242,6 @@ def _feature_schema(
     return T.StructType(fields)
 
 
-def _require_no_nulls(batch, names: list[str]) -> None:
-    """Raise if a kernel input column holds NULL: to_numpy would turn it
-    into NaN and astype(int64) into an arbitrary integer."""
-    for name in names:
-        nulls = batch.column(batch.schema.get_field_index(name)).null_count
-        if nulls:
-            raise ValueError(
-                f"column {name!r} has {nulls} NULL value(s); the session "
-                "kernel needs every row's value (filter or fill them first)"
-            )
-
-
-def _concat_batches(batches):
-    """One RecordBatch with every row of ``batches``, in order.
-
-    pa.concat_arrays raises (offset overflow) instead of splitting a
-    column that does not fit one array, so no row is ever dropped."""
-    import pyarrow as pa
-
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.concat_arrays([b.column(i) for b in batches])
-            for i in range(batches[0].num_columns)
-        ],
-        schema=batches[0].schema,
-    )
-
-
 def sessionize_events(
     df: DataFrame,
     key_cols: list[str],
@@ -289,9 +262,9 @@ def sessionize_events(
     Scale path: hash-repartition by key, sort within partitions by
     (key, ts, seq), then a mapInArrow pass over the sorted stream feeds the
     segment-vectorized block kernel (kernel/segmented.py). Arrow batches that
-    split a key are stitched by buffering the trailing (possibly incomplete)
-    key of each batch — so the plan is exactly one shuffle and the Python
-    stage does no per-session work.
+    split a key are stitched into whole key runs by kernel/key_runs.key_blocks
+    — so the plan is exactly one shuffle and the Python stage does no
+    per-session work.
 
     features: optional subset of kernel.segmented.FEATURE_BLOCKS — prunes
     both computation and the Arrow-returned columns (the session output can
@@ -415,12 +388,6 @@ def sessionize_events(
         )
     )
 
-    # Arrow-native boundary (guide §4.1/§4.2, same as sessionize_packets):
-    # the kernel is numpy end-to-end, so pandas frames on both sides of
-    # the round-5 mapInPandas were pure conversion overhead. Dense key
-    # ids come from adjacent-row run detection — rows arrive sorted by
-    # the key columns, where it equals pd.factorize's first-appearance
-    # numbering.
     from pyspark.sql.pandas.types import to_arrow_schema
 
     arrow_schema = to_arrow_schema(schema)
@@ -431,16 +398,11 @@ def sessionize_events(
         if c
     ]
 
-    def _batch_cols(b) -> dict[str, np.ndarray]:
-        _require_no_nulls(b, numeric)
-        return {
-            name: b.column(i).to_numpy(zero_copy_only=False)
-            for i, name in enumerate(b.schema.names)
+    def process_block(block, key_ids: np.ndarray):
+        _require_no_nulls(block, numeric)
+        cols = {
+            c: block.column(c).to_numpy(zero_copy_only=False) for c in numeric
         }
-
-    def process_block(cols: dict[str, np.ndarray]):
-        import pyarrow as pa
-
         ts = cols[ts_col].astype(np.int64, copy=False)
         value = cols[value_col].astype(np.float64, copy=False)
         direction = (
@@ -453,52 +415,23 @@ def sessionize_events(
             if terminator_col
             else np.zeros(ts.size, dtype=np.int64)
         )
-        newk = np.zeros(ts.size, dtype=bool)
-        newk[0] = True
-        for c in key_cols:
-            v = cols[c]
-            newk[1:] |= v[1:] != v[:-1]
-        key_ids = np.cumsum(newk) - 1
         next_after = (
             cols[next_ts_col].astype(np.int64, copy=False)
             if next_ts_col
             else None
         )
         res = featurize_block(
-            key_ids.astype(np.int64), ts, value, direction, terminator, cfg,
+            key_ids, ts, value, direction, terminator, cfg,
             scan_times, flush_ts, blocks=blocks, next_after=next_after,
         )
         rows = res.pop("session_row")
         for col in key_cols:
-            res[col] = cols[col][rows]
-        return pa.RecordBatch.from_arrays(
-            [
-                pa.array(np.asarray(res[f.name]), type=f.type, from_pandas=True)
-                for f in arrow_schema
-            ],
-            schema=arrow_schema,
-        )
+            res[col] = block.column(col).take(rows)
+        return record_batch(res, arrow_schema)
 
     def run_partition(batches):
-        carry: dict[str, np.ndarray] | None = None
-        for b in batches:
-            cols = _batch_cols(b)
-            if carry is not None and carry[ts_col].size:
-                cols = {k: np.concatenate([carry[k], cols[k]]) for k in cols}
-            n = cols[ts_col].size
-            if not n:
-                continue
-            # hold back the trailing key — it may continue in the next batch
-            mask = np.ones(n, dtype=bool)
-            for c in key_cols:
-                v = cols[c]
-                mask &= v == v[n - 1]
-            boundary = int(np.flatnonzero(mask)[0])
-            carry = {k: v[boundary:] for k, v in cols.items()}
-            if boundary:
-                yield process_block({k: v[:boundary] for k, v in cols.items()})
-        if carry is not None and carry[ts_col].size:
-            yield process_block(carry)
+        for block, key_ids in key_blocks(batches, key_cols):
+            yield process_block(block, key_ids)
 
     keyed = df.select(*needed)
     parts = num_partitions
@@ -566,41 +499,31 @@ def assign_sessions(
             T.StructField("session_cause", T.StringType()),
         ]
     )
-    in_cols = [f.name for f in df.schema.fields]
     sort_cols = key_cols + [ts_col] + ([order_col] if order_col else [])
 
-    # Arrow-native passthrough (guide §4.1): the annotator only READS
-    # (key, ts, terminator) and appends two columns — with mapInArrow
-    # every payload column (including array payloads like `tokens`)
-    # rides through as untouched Arrow buffers, zero pandas coercion;
-    # batch splits at key boundaries are zero-copy slices.
+    # the annotator only reads (key, ts, terminator) and appends two
+    # columns: every payload column (array payloads like `tokens`
+    # included) rides through as untouched Arrow buffers
     from pyspark.sql.pandas.types import to_arrow_schema
 
     arrow_schema = to_arrow_schema(schema)
-    name_idx = {f.name: i for i, f in enumerate(schema.fields)}
 
-    def process_block(b, key_np: dict[str, np.ndarray]):
+    def process_block(b, key_ids: np.ndarray):
         import pyarrow as pa
 
         _require_no_nulls(b, [ts_col] + ([terminator_col] if terminator_col else []))
         ts = (
-            b.column(name_idx[ts_col])
+            b.column(ts_col)
             .to_numpy(zero_copy_only=False)
             .astype(np.int64, copy=False)
         )
         terminator = (
-            b.column(name_idx[terminator_col])
+            b.column(terminator_col)
             .to_numpy(zero_copy_only=False)
             .astype(np.int64, copy=False)
             if terminator_col
             else np.zeros(ts.size, dtype=np.int64)
         )
-        newk = np.zeros(ts.size, dtype=bool)
-        newk[0] = True
-        for c in key_cols:
-            v = key_np[c]
-            newk[1:] |= v[1:] != v[:-1]
-        key_ids = (np.cumsum(newk) - 1).astype(np.int64)
         starts = segment_block(key_ids, ts, terminator, cfg)
         ends = np.append(starts[1:], ts.size)
         cause, _, _ = close_sessions(
@@ -621,34 +544,8 @@ def assign_sessions(
         )
 
     def run_partition(batches):
-        carry = None
-        for b in batches:
-            if carry is not None and carry.num_rows:
-                b = _concat_batches([carry, b])
-            n = b.num_rows
-            if not n:
-                continue
-            key_np = {
-                c: b.column(name_idx[c]).to_numpy(zero_copy_only=False)
-                for c in key_cols
-            }
-            mask = np.ones(n, dtype=bool)
-            for c in key_cols:
-                v = key_np[c]
-                mask &= v == v[n - 1]
-            boundary = int(np.flatnonzero(mask)[0])
-            carry = b.slice(boundary)
-            if boundary:
-                yield process_block(
-                    b.slice(0, boundary),
-                    {c: v[:boundary] for c, v in key_np.items()},
-                )
-        if carry is not None and carry.num_rows:
-            key_np = {
-                c: carry.column(name_idx[c]).to_numpy(zero_copy_only=False)
-                for c in key_cols
-            }
-            yield process_block(carry, key_np)
+        for block, key_ids in key_blocks(batches, key_cols):
+            yield process_block(block, key_ids)
 
     keyed = df.repartition(*key_cols).sortWithinPartitions(*sort_cols)
     return keyed.mapInArrow(run_partition, schema=schema)

@@ -6,8 +6,10 @@ Spark plan shape (one shuffle):
       -> canonical biflow key columns               [Catalyst exprs, codegen]
       -> repartition(key) + sortWithinPartitions    [hash shuffle on key,
          (xxhash64(key), key, ts_us, event_seq)      radix-sortable prefix]
-      -> mapInArrow(block kernel)                   [sorted Arrow batches,
-                                                     NumPy, key-run carry]
+      -> mapInArrow(block kernel)                   [sorted Arrow batches cut
+                                                     into whole key runs by
+                                                     kernel/key_runs.key_blocks,
+                                                     NumPy]
       -> feature superset DataFrame                 [downstream selects are
                                                      pure column pruning]
 
@@ -133,104 +135,48 @@ def sessionize_packets(
 
     sort_cols = _KEY_COLS + ["ts_us", "event_seq"]
 
-    # Arrow-native boundary (guide §4.1/§4.2): the kernel consumes and
-    # produces numpy arrays, so the pandas DataFrame on each side of the
-    # round-5 mapInPandas was pure conversion overhead (identity-pass
-    # A/B at sf1.0: +0.79 s pandas vs +0.35 s Arrow over the same sorted
-    # input). RecordBatch columns decode straight to numpy (fill_null
-    # replays the old na_value semantics) and outputs build straight
-    # into RecordBatches; from_pandas=True keeps NaN->NULL for doubles,
-    # matching the pandas serializer bit-for-bit.
     from pyspark.sql.pandas.types import to_arrow_schema
+
+    from rustiflow_spark.kernel.key_runs import (
+        _require_no_nulls,
+        key_blocks,
+        record_batch,
+    )
 
     arrow_schema = to_arrow_schema(out_schema)
 
-    def _batch_cols(b) -> dict[str, np.ndarray]:
+    def process_block(block, key_ids: np.ndarray):
         import pyarrow.compute as pc
 
-        d: dict[str, np.ndarray] = {}
-        for i, name in enumerate(b.schema.names):
-            col = b.column(i)
-            if name in ("icmp_type", "icmp_code"):
-                d[name] = (
-                    pc.fill_null(col, -1)
-                    .to_numpy(zero_copy_only=False)
-                    .astype(np.int64)
-                )
+        _require_no_nulls(block, ["ts_us"])
+        # one dict holds the kernel inputs and the per-row key arrays;
+        # NULL flags and ICMP fields are legitimate (non-TCP, non-ICMP)
+        g: dict[str, np.ndarray] = {"key_id": key_ids}
+        for name in block.schema.names:
+            col = block.column(name)
+            if name in ("key_ip_a", "key_ip_b"):
+                g[name] = col.to_numpy(zero_copy_only=False)
             elif name == "dir_a":
-                d[name] = col.to_numpy(zero_copy_only=False).astype(bool)
-            elif name in ("key_ip_a", "key_ip_b"):
-                d[name] = col.to_numpy(zero_copy_only=False)
+                g[name] = col.to_numpy(zero_copy_only=False).astype(bool)
             else:
-                d[name] = (
-                    pc.fill_null(col, 0)
+                fill = -1 if name in ("icmp_type", "icmp_code") else 0
+                g[name] = (
+                    pc.fill_null(col, fill)
                     .to_numpy(zero_copy_only=False)
                     .astype(np.int64)
                 )
-        return d
-
-    def process_block(cols: dict[str, np.ndarray]):
-        import pyarrow as pa
-
-        n = cols["ts_us"].size
-        g = {c: cols[c] for c in _INT_COLS}
-        g["icmp_type"] = cols["icmp_type"]
-        g["icmp_code"] = cols["icmp_code"]
-        g["dir_a"] = cols["dir_a"]
-        # rows arrive sorted by the key columns, so key_id is a run index
-        # from adjacent-row comparison — ~10x cheaper than hash-factorizing
-        # a MultiIndex over the five key columns
-        newk = np.zeros(n, dtype=bool)
-        newk[0] = True
-        for c in _KEY_COLS:
-            v = cols[c]
-            newk[1:] |= v[1:] != v[:-1]
-        g["key_id"] = np.cumsum(newk) - 1
-        keys = {
-            "key_ip_a": cols["key_ip_a"],
-            "key_port_a": cols["key_port_a"],
-            "key_ip_b": cols["key_ip_b"],
-            "key_port_b": cols["key_port_b"],
-        }
-        res = featurize_packet_block(g, keys, cfg, scan_times, flush_ts, columns=col_set)
+        res = featurize_packet_block(g, g, cfg, scan_times, flush_ts, columns=col_set)
         if "__empty" in res:
             return None
         if col_set is not None:
             missing = [c for c in out_cols if c not in res]
             if missing:  # a gating bug must fail loudly, never emit NaN
                 raise RuntimeError(f"kernel pruning dropped {missing}")
-        return pa.RecordBatch.from_arrays(
-            [
-                pa.array(np.asarray(res[f.name]), type=f.type, from_pandas=True)
-                for f in arrow_schema
-            ],
-            schema=arrow_schema,
-        )
+        return record_batch(res, arrow_schema)
 
     def run_partition(batches):
-        carry: dict[str, np.ndarray] | None = None
-        for b in batches:
-            cols = _batch_cols(b)
-            if carry is not None and carry["ts_us"].size:
-                cols = {
-                    k: np.concatenate([carry[k], cols[k]]) for k in cols
-                }
-            n = cols["ts_us"].size
-            if not n:
-                continue
-            # hold back the trailing key — it may continue in the next batch
-            mask = np.ones(n, dtype=bool)
-            for c in _KEY_COLS:
-                v = cols[c]
-                mask &= v == v[n - 1]
-            boundary = int(np.flatnonzero(mask)[0])
-            carry = {k: v[boundary:] for k, v in cols.items()}
-            if boundary:
-                out = process_block({k: v[:boundary] for k, v in cols.items()})
-                if out is not None:
-                    yield out
-        if carry is not None and carry["ts_us"].size:
-            out = process_block(carry)
+        for block, key_ids in key_blocks(batches, _KEY_COLS):
+            out = process_block(block, key_ids)
             if out is not None:
                 yield out
 

@@ -155,12 +155,11 @@ def test_spark_event_features_and_token_passthrough(spark):
 
 
 def test_concat_batches_keeps_every_row():
-    """The key-run carry of assign_sessions joins batches into one; every
-    row of every input batch must survive, payload arrays and NULLs
-    included."""
+    """key_blocks joins the batches of a key run into one; every row of
+    every input batch must survive, payload arrays and NULLs included."""
     import pyarrow as pa
 
-    from rustiflow_spark.operators.event_features import _concat_batches
+    from rustiflow_spark.kernel.key_runs import _concat_batches
 
     schema = pa.schema([("k", pa.int64()), ("tokens", pa.list_(pa.string()))])
     batches = [
@@ -175,49 +174,145 @@ def test_concat_batches_keeps_every_row():
     assert out.num_rows == 6
 
 
-def test_assign_sessions_small_arrow_batches(spark):
-    """Keys spanning many Arrow batches (carry joined batch after batch)
-    give the same annotation as one batch per partition."""
-    from rustiflow_spark.operators.event_features import assign_sessions
-
-    pdf = generate_token_sequences(n_docs=30, seed=8)
-    sdf = spark.createDataFrame(pdf)
+def _batch_size_case(spark, op):
+    """Input frames for ``op`` (one with a hot key spanning many batches,
+    one with three keys over more partitions than keys, so some partitions
+    are empty and some hold a single key) and a function that runs ``op``
+    and returns its rows in a fixed order."""
     cfg = EngineConfig(scan_mode="none")
     key = ["source", "doc_id"]
+    if op == "sessionize_packets":
+        from rustiflow_spark.operators.sessionize import sessionize_packets
+        from rustiflow_spark.sources.synth import generate_packet_events
+        from test_sessionize_spark import make_events_df
 
-    def run():
-        return (
-            assign_sessions(sdf, key, cfg).toPandas()
-            .sort_values("event_seq").reset_index(drop=True)
-        )
+        frames = [
+            make_events_df(spark, generate_packet_events(n_flows=n, seed=11, long_flow_packets=300))
+            for n in (40, 3)
+        ]
 
-    base = run()
+        def run(sdf):
+            out = sessionize_packets(sdf, cfg, num_partitions=16).toPandas()
+            return out.sort_values(list(out.columns)).reset_index(drop=True)
+
+        return frames, run
+    from rustiflow_spark.operators import event_features
+
+    pdf = generate_token_sequences(n_docs=30, seed=8)
+    few = pdf[key].drop_duplicates().head(3)
+    frames = [spark.createDataFrame(pdf), spark.createDataFrame(pdf.merge(few, on=key))]
+    if op == "assign_sessions":
+        def run(sdf):
+            out = event_features.assign_sessions(sdf, key, cfg).toPandas()
+            return out.sort_values("event_seq").reset_index(drop=True)
+    else:
+        def run(sdf):
+            out = event_features.sessionize_events(
+                sdf.drop("tokens"), key, cfg, num_partitions=16
+            ).toPandas()
+            return out.sort_values(key + ["session_index"]).reset_index(drop=True)
+    return frames, run
+
+
+@pytest.mark.parametrize(
+    "op", ["assign_sessions", "sessionize_events", "sessionize_packets"]
+)
+def test_assign_sessions_small_arrow_batches(spark, op):
+    """Output does not depend on the Arrow batch size: 1, 7 and 65536 rows
+    per batch give the one-batch-per-partition output, with a hot key
+    spanning many batches, empty partitions and single-key partitions."""
+    frames, run = _batch_size_case(spark, op)
     conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(conf)
-    spark.conf.set(conf, "3")
     try:
-        small = run()
+        for sdf in frames:
+            spark.conf.set(conf, str(1 << 30))
+            base = run(sdf)
+            assert len(base)
+            for size in (1, 7, 65536):
+                spark.conf.set(conf, str(size))
+                got = run(sdf)
+                if "tokens" in base:
+                    assert [list(t) for t in base["tokens"]] == [
+                        list(t) for t in got["tokens"]
+                    ]
+                pd.testing.assert_frame_equal(
+                    base.drop(columns="tokens", errors="ignore"),
+                    got.drop(columns="tokens", errors="ignore"),
+                )
     finally:
         spark.conf.set(conf, old)
-    assert len(small) == len(pdf)
-    pd.testing.assert_frame_equal(
-        base.drop(columns="tokens"), small.drop(columns="tokens")
-    )
-    assert [list(t) for t in base["tokens"]] == [list(t) for t in small["tokens"]]
 
 
 @pytest.mark.parametrize("op", ["sessionize_events", "assign_sessions"])
-def test_null_timestamp_fails_loudly(spark, op):
-    """A NULL ts must raise, not become an arbitrary integer timestamp."""
+def test_null_key_rows_group_together(spark, op):
+    """Rows with a NULL key are one key, as in Spark's grouping: the kernel
+    gives the Catalyst plan's output, also for a partition whose last row
+    has a NULL key."""
+    from pyspark.sql import types as T
+
     from rustiflow_spark.operators import event_features
 
+    schema = T.StructType(
+        [T.StructField("uid", T.LongType())]
+        + [
+            T.StructField(c, T.LongType(), False)
+            for c in ("ts_us", "n_tok", "direction", "terminator", "event_seq")
+        ]
+    )
+    rows = [
+        (None, 0, 5, 0, 0, 0),
+        (None, 1_000, 6, 1, 0, 1),
+        (None, 2_000, 7, 0, 0, 2),
+        (1, 0, 8, 0, 0, 3),
+        (1, 900_000_000, 9, 1, 0, 4),
+        (2, 10, 3, 0, 1, 5),
+    ]
+    cfg = EngineConfig(scan_mode="none")
+    fn = getattr(event_features, op)
+    for data in (rows, rows[:3]):
+        sdf = spark.createDataFrame(data, schema)
+        if op == "sessionize_events":
+            sort = ["uid", "session_index"]
+            kw = {"value_col": "n_tok", "num_partitions": 1}
+        else:
+            sort = ["event_seq"]
+            kw = {}
+        kernel, catalyst = (
+            fn(sdf, ["uid"], cfg, strategy=s, **kw).toPandas()
+            .sort_values(sort).reset_index(drop=True)
+            for s in ("kernel", "catalyst")
+        )
+        pd.testing.assert_frame_equal(kernel, catalyst[kernel.columns])
+        assert kernel["uid"].isna().sum() == (1 if op == "sessionize_events" else 3)
+
+
+@pytest.mark.parametrize(
+    "op", ["sessionize_events", "assign_sessions", "sessionize_packets"]
+)
+def test_null_timestamp_fails_loudly(spark, op):
+    """A NULL ts must raise, not become an arbitrary integer timestamp."""
     from pyspark.sql import functions as F
 
-    sdf = spark.createDataFrame(generate_token_sequences(n_docs=5, seed=2))
+    from rustiflow_spark.operators import event_features, sessionize
+
+    cfg = EngineConfig(scan_mode="none")
+    if op == "sessionize_packets":
+        from rustiflow_spark.sources.synth import generate_packet_events
+        from test_sessionize_spark import make_events_df
+
+        sdf = make_events_df(spark, generate_packet_events(n_flows=5, seed=2))
+
+        def run(d):
+            return sessionize.sessionize_packets(d, cfg)
+    else:
+        sdf = spark.createDataFrame(generate_token_sequences(n_docs=5, seed=2))
+
+        def run(d):
+            return getattr(event_features, op)(d, ["source", "doc_id"], cfg)
     first = sdf.agg(F.min("event_seq")).first()[0]
     sdf = sdf.withColumn(
         "ts_us", F.expr(f"CASE WHEN event_seq = {first} THEN NULL ELSE ts_us END")
     )
-    fn = getattr(event_features, op)
     with pytest.raises(Exception, match="'ts_us' has 1 NULL"):
-        fn(sdf, ["source", "doc_id"], EngineConfig(scan_mode="none")).collect()
+        run(sdf).collect()

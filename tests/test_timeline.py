@@ -71,6 +71,7 @@ def test_sessionize_with_explicit_flush_matches_default(spark, sf_dir):
     import dataclasses
 
     import pandas as pd
+    from pyspark.sql import functions as F
 
     import __spark_entry__ as em
     from rustiflow_spark.operators.event_features import sessionize_events
@@ -78,7 +79,8 @@ def test_sessionize_with_explicit_flush_matches_default(spark, sf_dir):
 
     ev = em._events(spark, sf_dir)
     packets = em._packet_table(spark, sf_dir, tcp=True)
-    ev_flush, pkt_flush = em._events_flush_us(sf_dir), em._packet_flush_us(sf_dir)
+    ev_flush = em._events_flush_us(sf_dir)
+    pkt_flush = packets.agg(F.max("ts_us")).first()[0]
     assert ev_flush is not None and pkt_flush is not None
 
     def frames(build, flush, key):

@@ -1,4 +1,4 @@
-"""Planted heavy-hitter benchmark: one key owns 30% of a 1M-event table.
+"""Planted heavy-hitter benchmark: one key owns 80% of a 1M-event table.
 
 Compares, under AQE, the three aggregation strategies the engine offers for
 that shape:
@@ -35,7 +35,7 @@ IDLE_S = 1800
 
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    spark = get_spark("skew-bench", cores=32, shuffle_partitions=64)
+    spark = get_spark("skew-bench")  # cores from SPARK_GRAFT_CPUS
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.sparkContext.setLogLevel("ERROR")
 
