@@ -239,46 +239,6 @@ FROM agg
 """
 
 
-def q_session_features_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heavy-key pre-split variant (K3, operators/skew.py): sessions grouped
-    by (key, episode) with the next_key_ts handoff must produce EXACTLY the
-    session_features output — same DuckDB oracle, proving the skew split is
-    lossless driver-visibly."""
-    _ensure_package_shipped(spark)
-    from rustiflow_spark.operators.event_features import sessionize_events
-    from rustiflow_spark.operators.skew import with_episodes
-
-    split = with_episodes(
-        _events(spark, sf_dir), ["user_id"], "ts_us", IDLE_S, "event_seq"
-    )
-    feats = sessionize_events(
-        split,
-        ["user_id", "episode"],
-        _engine_cfg(),
-        value_col="value",
-        features=["value", "iat", "subflow", "direction"],
-        next_ts_col="next_key_ts",
-    )
-    return feats.select(
-        "user_id",
-        "first_ts_us",
-        "last_ts_us",
-        "duration_us",
-        "cause",
-        F.col("event_count").cast("long").alias("event_count"),
-        F.col("fwd_event_count").cast("long").alias("fwd_event_count"),
-        F.col("bwd_event_count").cast("long").alias("bwd_event_count"),
-        F.round("n_tok_total", 6).alias("value_total"),
-        F.round("n_tok_mean", 6).alias("value_mean"),
-        F.round("n_tok_max", 6).alias("value_max"),
-        F.round("n_tok_min", 6).alias("value_min"),
-        F.round("iat_total", 4).alias("iat_total_ms"),
-        F.round("iat_max", 4).alias("iat_max_ms"),
-        F.round("iat_min", 4).alias("iat_min_ms"),
-        F.col("subflow_count").cast("long").alias("subflow_count"),
-    )
-
-
 def q_session_features_catalyst(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pure-Catalyst fast path for the same sessionization: windows +
     aggregations only, zero Python workers in the plan (asserted by
@@ -7958,7 +7918,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "negative_samples": q_negative_samples,
         "bpe_roundtrip": q_bpe_roundtrip,
         "ffill_stream": q_ffill_stream,
-        "session_features_split": q_session_features_split,
         "backfill_split": q_backfill_split,
         "target_encode_split": q_target_encode_split,
         "quantile_bin_split": q_quantile_bin_split,
@@ -8056,11 +8015,8 @@ def oracle_sql() -> dict[str, str]:
         "multimodal_features": _mm_features_sql(),
         "neardup_jaccard": _Q_JACCARD_SQL,
         "salted_stats": _Q_SALTED_SQL,
-        # identical expected output to session_features: the episode split
-        # is exact, so the same oracle applies
-        "session_features_split": _Q_SESSION_SQL,
-        # identical expected output again: the pure-Catalyst (zero-Python)
-        # fast path must match the kernel bit-for-bit
+        # identical expected output to session_features: the pure-Catalyst
+        # (zero-Python) fast path must match the kernel bit-for-bit
         "session_features_catalyst": _Q_SESSION_SQL,
         "flow_active_timeout": _Q_ACTIVE_SQL,
         "flow_scan_close": _Q_SCAN_SQL,

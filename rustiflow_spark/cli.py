@@ -89,8 +89,9 @@ def build_parser() -> argparse.ArgumentParser:
     t.add_argument("--terminator-col", default="terminator")
     t.add_argument(
         "--strategy", default="kernel", choices=["kernel", "catalyst", "auto"],
-        help="auto: zero-Python Catalyst plan when the config permits "
-             "(scan off, active timeout disabled); kernel: Arrow block kernel",
+        help="auto: zero-Python Catalyst plan when scan_mode is 'none' "
+             "(finite active timeouts included), else the kernel; "
+             "kernel: Arrow block kernel",
     )
     # subparsers parse into a fresh namespace (bpo-9351), so --config file
     # defaults must be applied to them directly, not to the root parser

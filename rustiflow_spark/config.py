@@ -9,7 +9,7 @@ truncating division, exactly like the reference
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 US_PER_S = 1_000_000
 
@@ -111,12 +111,3 @@ class EngineConfig:
     def idle_expiry_us(self, last_ts_us: int) -> int:
         return last_ts_us + (self.idle_timeout + 1) * US_PER_S
 
-
-@dataclass(frozen=True)
-class TokenPipelineConfig:
-    """North-rule token-sequence pipeline configuration."""
-
-    engine: EngineConfig = field(default_factory=EngineConfig)
-    # Salting / skew handling
-    episode_split: bool = False  # pre-split groups at guaranteed idle cuts
-    shuffle_partitions: int | None = None

@@ -96,18 +96,12 @@ def close_sessions(
     cfg: EngineConfig,
     scan_times: np.ndarray,
     flush_ts: int,
-    next_after: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Vectorized cause + close-ts + closed-flag per session.
 
     cause codes: TERM/ACTIVE/IDLE/SHUTDOWN; closed=False only for TERM
     (reference exports terminated flows without close_flow —
     flow_table.rs:95-97, 113-119).
-
-    next_after: optional per-row timestamp of the next same-logical-key
-    event OUTSIDE this block (-1 if none) — used by episode pre-splitting
-    so the final session of an episode still sees the event that would
-    have observed its expiry (exactness of the skew split).
     """
     nsess = starts.size
     first_ts = ts[starts]
@@ -122,11 +116,6 @@ def close_sessions(
     has_next[:-1] = key_ids[starts[1:]] == key_ids[starts[:-1]]
     next_ts = np.full(nsess, -1, dtype=np.int64)
     next_ts[:-1][has_next[:-1]] = ts[starts[1:][has_next[:-1]]]
-    if next_after is not None:
-        ext = next_after[ends - 1]
-        take = ~has_next & (ext >= 0)
-        next_ts[take] = ext[take]
-        has_next = has_next | take
 
     if scan_times.size:
         pos = np.searchsorted(scan_times, expiry, side="left")
@@ -228,7 +217,6 @@ def featurize_block(
     scan_times: np.ndarray,
     flush_ts: int,
     blocks: frozenset | None = None,
-    next_after: np.ndarray | None = None,
 ) -> dict[str, np.ndarray]:
     """All session features for a sorted block. Returns column arrays plus
     'session_row' (index of each session's first row, for key extraction).
@@ -246,7 +234,7 @@ def featurize_block(
     ends = np.append(starts[1:], n)
     nsess = starts.size
     cause, close_ts, closed = close_sessions(
-        starts, ends, key_ids, ts, terminator, cfg, scan_times, flush_ts, next_after
+        starts, ends, key_ids, ts, terminator, cfg, scan_times, flush_ts
     )
     sess_of_row = np.zeros(n, dtype=np.int64)
     sess_of_row[starts[1:]] = 1

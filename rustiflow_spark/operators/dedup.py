@@ -7,7 +7,7 @@ candidate pairs only.
 
 Operators:
   exact_dedup           hash-groupBy on content
-  minhash_signatures    k-shingles -> 64-perm MinHash (JVM, no Python)
+  minhash_signatures    k-shingles -> 64-perm MinHash (Arrow-vectorized NumPy)
   minhash_lsh_dedup     band-bucket join -> candidate pairs -> Jaccard
                         verify -> greedy min-id clustering
   simhash_dedup         64-bit SimHash (Arrow-vectorized NumPy) + Hamming
@@ -127,8 +127,7 @@ def minhash_signatures(
     shingle hashes (unique), then permutation j = min over shingles of
     (a_j * h + b_j) in wrapping uint64 arithmetic — one (S x num_perm)
     matrix min per document instead of num_perm Catalyst lambda passes over
-    the shingle array (measured 110 s -> ~2 s for 5000 documents). A pure
-    Catalyst variant is kept as minhash_signatures_catalyst."""
+    the shingle array (measured 110 s -> ~2 s for 5000 documents)."""
     import pyspark.sql.types as T2
 
     schema = T.StructType(
@@ -158,25 +157,6 @@ def minhash_signatures(
     from rustiflow_spark.parallelism import ensure_min_parallelism
 
     return ensure_min_parallelism(df).mapInPandas(batch, schema=schema)
-
-
-def minhash_signatures_catalyst(
-    df: DataFrame, text_col: str, num_perm: int = 64, shingle_k: int = 5
-) -> DataFrame:
-    """Pure-Catalyst MinHash (xxhash64 per (shingle, permutation)) — JVM
-    whole-stage codegen, no Python workers; slower in wall-clock than the
-    Arrow kernel because the num_perm x shingles lambda evaluations
-    dominate, but useful where Python workers are unavailable."""
-    sig = F.expr(
-        f"transform(sequence(0, {num_perm - 1}),"
-        f" j -> array_min(transform(__h, h -> xxhash64(h, j))))"
-    )
-    return (
-        df.withColumn("__shingles", F.array_distinct(_shingles(text_col, shingle_k)))
-        .withColumn("__h", F.expr("transform(__shingles, s -> xxhash64(s))"))
-        .withColumn("minhash", sig)
-        .drop("__shingles", "__h")
-    )
 
 
 def minhash_lsh_candidates(
@@ -266,17 +246,10 @@ def cluster_min_id(
     id_col: str,
     max_iter: int = 10,
     persist: str = "local",
-    pointer_jump: bool = False,
 ) -> DataFrame:
     """Connected components by iterative min-id label propagation over the
     duplicate-pair graph. Each iteration is one join+groupBy; converges in
     O(diameter) rounds (near-dup clusters are tiny, so 2-3 in practice).
-
-    pointer_jump=True adds one shortcutting join per round
-    (cluster_id <- label(cluster_id)), the path-doubling step of
-    Shiloach-Vishkin-style CC: convergence drops from O(diameter) to
-    O(log diameter) rounds — worth it only for degenerate chain-shaped
-    components, hence off by default (no plan change locally).
 
     persist: see _materialize — "local" (default) for single-node runs,
     "disk"/"checkpoint" for fault-tolerant cluster runs. Inside the
@@ -327,23 +300,6 @@ def cluster_min_id(
                 ),
             )
         )
-        if pointer_jump:
-            # shortcut: follow the label's own label (path doubling)
-            parent = new_labels.select(
-                F.col("src").alias("p_src"), F.col("cluster_id").alias("p_label")
-            )
-            new_labels = (
-                new_labels.join(
-                    parent, new_labels.cluster_id == F.col("p_src"), "left"
-                )
-                .select(
-                    "src",
-                    F.least(
-                        F.col("cluster_id"),
-                        F.coalesce("p_label", F.col("cluster_id")),
-                    ).alias("cluster_id"),
-                )
-            )
         changed = (
             new_labels.alias("n")
             .join(labels.alias("o"), "src")
@@ -390,7 +346,6 @@ def minhash_lsh_dedup(
     shingle_k: int = 5,
     threshold: float = 0.7,
     persist: str = "local",
-    pointer_jump: bool = False,
     collapse_exact: bool = True,
 ) -> DataFrame:
     """Full near-dup pipeline: signatures -> LSH candidates -> exact Jaccard
@@ -423,7 +378,7 @@ def minhash_lsh_dedup(
         )
         rep_clusters = minhash_lsh_dedup(
             reps, id_col, text_col, num_perm, bands, shingle_k, threshold,
-            persist, pointer_jump, collapse_exact=False,
+            persist, collapse_exact=False,
         ).select(F.col(id_col).alias("__rep"), "cluster_id")
         rep_of = hashed.groupBy("__th").agg(F.min(id_col).alias("__rep"))
         out = (
@@ -435,8 +390,7 @@ def minhash_lsh_dedup(
     sigs = minhash_signatures(df, text_col, num_perm, shingle_k)
     cands = minhash_lsh_candidates(sigs, id_col, num_perm, bands, persist=persist)
     verified = ngram_jaccard_verify(df, cands, id_col, text_col, shingle_k, threshold)
-    clusters = cluster_min_id(verified, df.select(id_col), id_col,
-                              persist=persist, pointer_jump=pointer_jump)
+    clusters = cluster_min_id(verified, df.select(id_col), id_col, persist=persist)
     return clusters.withColumn("is_keeper", F.col(id_col) == F.col("cluster_id"))
 
 

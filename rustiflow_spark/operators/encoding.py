@@ -94,9 +94,8 @@ def target_encode_expanding_split(
       4. broadcast-join the prefix back; encoding = (prefix + in-chunk).
 
     Bit-identical to target_encode_expanding when the target is integral
-    (integer sums are associative); same plan family as the split
-    sessionizer (operators/skew.py episode split). No smoothing here —
-    compose downstream if needed.
+    (integer sums are associative). No smoothing here — compose
+    downstream if needed.
     """
     if chunk_us <= 0:
         raise ValueError("chunk_us must be positive")

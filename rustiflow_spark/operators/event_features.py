@@ -34,10 +34,10 @@ from rustiflow_spark.kernel.key_runs import _require_no_nulls, key_blocks, recor
 from rustiflow_spark.timeline import compute_timeline
 
 
-_BLOCK_OF_COLUMN = {}
-
-# active timeouts at/above this (seconds) are treated as "disabled" by
-# strategy='auto' — ~116 days of continuous single-session activity
+# active timeouts at/above this (seconds) count as "disabled" in the
+# Catalyst plan, which then skips the active-cut refinement passes
+# (_with_session_boundaries) — ~116 days of continuous single-session
+# activity
 _ACTIVE_DISABLED_S = 10_000_000
 
 # Auto partition sizing for the Catalyst window path: target bytes of
@@ -82,54 +82,6 @@ def _maybe_repartition(
     if num_partitions:
         return df.repartition(int(num_partitions), *key_cols)
     return df
-
-
-# Heavy-hitter detection for strategy='auto' (round-3 verdict item 6): a
-# key whose events serialize inside ONE window task is the Catalyst plan's
-# only structural weakness, so auto samples the keyspace and routes just
-# those keys through the episode-split kernel. Inputs below the size floor
-# skip detection entirely (no extra job): a key that fits one partition's
-# sort comfortably is not a skew problem.
-_SKEW_SAMPLE_MIN_BYTES = 256 << 20
-_SKEW_KEY_ROWS = 5_000_000  # rows that pin one window task for seconds
-_SKEW_SAMPLE_FRACTION = 0.001
-_SKEW_MAX_HEAVY_KEYS = 200
-
-
-def _detect_heavy_keys(df: DataFrame, key_cols: list[str]) -> list[tuple]:
-    """Sampled heavy-hitter keys (estimated rows >= _SKEW_KEY_ROWS).
-    Costs one small sample+aggregate job, run only above the size floor."""
-    try:
-        size = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        return []
-    if size < _SKEW_SAMPLE_MIN_BYTES or size >= 1 << 60:
-        return []
-    thresh = int(_SKEW_KEY_ROWS * _SKEW_SAMPLE_FRACTION)
-    rows = (
-        df.select(*key_cols)
-        .sample(fraction=_SKEW_SAMPLE_FRACTION, seed=7)
-        .groupBy(*key_cols)
-        .count()
-        .where(F.col("count") >= thresh)
-        .select(*key_cols)
-        .limit(_SKEW_MAX_HEAVY_KEYS)
-        .collect()
-    )
-    return [tuple(r) for r in rows]
-
-
-def _heavy_key_predicate(key_cols: list[str], heavy: list[tuple]):
-    """Literal predicate selecting the (few) heavy keys — pushdown-able."""
-    cond = F.lit(False)
-    for values in heavy:
-        match = F.lit(True)
-        for c, v in zip(key_cols, values):
-            match = match & (F.col(c) == F.lit(v))
-        cond = cond | match
-    return cond
 
 
 def _with_session_boundaries(
@@ -253,7 +205,6 @@ def sessionize_events(
     order_col: str | None = "event_seq",
     num_partitions: int | None = None,
     features: list[str] | None = None,
-    next_ts_col: str | None = None,
     flush_ts: int | None = None,
     strategy: str = "kernel",
 ) -> DataFrame:
@@ -282,20 +233,11 @@ def sessionize_events(
     'catalyst' forces the zero-Python windows+aggregations plan
     (sessionize_events_catalyst, same output, raises if the configuration
     needs the kernel); 'auto' picks the Catalyst plan when the
-    configuration permits it — scan_mode 'none' and no episode handoff
-    (next_ts_col). Finite active timeouts ride the Catalyst plan too
-    (bounded-pass cut refinement, exact up to 8 renewals per episode);
-    the Catalyst path carries a runtime guard that fails loudly (rather
-    than diverging) if an episode needs more cuts than that.
-
-    'auto' additionally samples the keyspace (inputs >= 256 MB only) and
-    routes heavy-hitter keys — whose events would serialize inside one
-    window task — through the episode-split kernel
-    (operators/skew.py:with_episodes, per-group state bounded at episode
-    size), unioning with the Catalyst output for the rest of the keyspace
-    and restoring the global per-key session ordinal with one window over
-    the (small) heavy-key session rows. Exactness is oracle-checked
-    (session_features_split) and partition-invariant (tests).
+    configuration permits it (scan_mode 'none') and the kernel otherwise.
+    Finite active timeouts ride the Catalyst plan too (bounded-pass cut
+    refinement, exact up to 8 renewals per idle-episode); the Catalyst
+    path carries a runtime guard that fails loudly (rather than
+    diverging) if an idle-episode needs more cuts than that.
     """
     from rustiflow_spark.kernel.segmented import featurize_block
 
@@ -303,22 +245,15 @@ def sessionize_events(
     if strategy not in ("kernel", "catalyst", "auto"):
         raise ValueError(f"unknown strategy {strategy!r}")
     if strategy != "kernel":
-        eligible = cfg.scan_mode == "none" and next_ts_col is None
+        eligible = cfg.scan_mode == "none"
         if strategy == "catalyst" and not eligible:
             raise ValueError(
-                "strategy='catalyst' requires scan_mode='none' and no "
-                "next_ts_col (episode handoff); use the kernel path"
+                "strategy='catalyst' requires scan_mode='none'; use the "
+                "kernel path"
             )
         if eligible:
-            heavy = (
-                _detect_heavy_keys(df, key_cols) if strategy == "auto" else []
-            )
-            light = df
-            if heavy:
-                cond = _heavy_key_predicate(key_cols, heavy)
-                light = df.where(~cond)
             out = sessionize_events_catalyst(
-                light,
+                df,
                 key_cols,
                 cfg,
                 ts_col=ts_col,
@@ -332,46 +267,12 @@ def sessionize_events(
             schema = _feature_schema(
                 df, key_cols, None if features is None else frozenset(features)
             )
-            out = out.selectExpr(
+            return out.selectExpr(
                 *[
                     f"cast(`{f.name}` as {f.dataType.simpleString()}) as `{f.name}`"
                     for f in schema.fields
                 ]
             )
-            if heavy:
-                from rustiflow_spark.operators.skew import with_episodes
-
-                hv = with_episodes(
-                    df.where(cond), key_cols, ts_col, cfg.idle_timeout, order_col
-                )
-                hv_out = sessionize_events(
-                    hv,
-                    key_cols + ["episode"],
-                    cfg,
-                    ts_col=ts_col,
-                    value_col=value_col,
-                    direction_col=direction_col,
-                    terminator_col=terminator_col,
-                    order_col=order_col,
-                    num_partitions=num_partitions,
-                    features=features,
-                    next_ts_col="next_key_ts",
-                    flush_ts=flush_ts,
-                    strategy="kernel",
-                )
-                # per-episode ordinals -> the global per-key ordinal the
-                # unsplit paths emit ((episode, session_index) is strictly
-                # increasing in time within a key)
-                kq = ", ".join(f"`{c}`" for c in key_cols)
-                hv_out = hv_out.withColumn(
-                    "session_index",
-                    F.expr(
-                        f"cast(row_number() OVER (PARTITION BY {kq} "
-                        "ORDER BY episode, session_index) - 1 as int)"
-                    ),
-                ).drop("episode")
-                out = out.unionByName(hv_out)
-            return out
     blocks = None if features is None else frozenset(features)
     scan_times, flush_ts = compute_timeline(df, ts_col, cfg, flush_ts=flush_ts)
     schema = _feature_schema(df, key_cols, blocks)
@@ -384,7 +285,6 @@ def sessionize_events(
             + ([direction_col] if direction_col else [])
             + ([terminator_col] if terminator_col else [])
             + ([order_col] if order_col else [])
-            + ([next_ts_col] if next_ts_col else [])
         )
     )
 
@@ -392,11 +292,7 @@ def sessionize_events(
 
     arrow_schema = to_arrow_schema(schema)
 
-    numeric = [
-        c
-        for c in (ts_col, value_col, direction_col, terminator_col, next_ts_col)
-        if c
-    ]
+    numeric = [c for c in (ts_col, value_col, direction_col, terminator_col) if c]
 
     def process_block(block, key_ids: np.ndarray):
         _require_no_nulls(block, numeric)
@@ -415,14 +311,9 @@ def sessionize_events(
             if terminator_col
             else np.zeros(ts.size, dtype=np.int64)
         )
-        next_after = (
-            cols[next_ts_col].astype(np.int64, copy=False)
-            if next_ts_col
-            else None
-        )
         res = featurize_block(
             key_ids, ts, value, direction, terminator, cfg,
-            scan_times, flush_ts, blocks=blocks, next_after=next_after,
+            scan_times, flush_ts, blocks=blocks,
         )
         rows = res.pop("session_row")
         for col in key_cols:
@@ -601,12 +492,9 @@ def sessionize_events_catalyst(
     session's spark.sql.shuffle.partitions.
 
     Skew: a heavy-hitter key serializes inside one window task here, same
-    as it would in any partitionBy(key) plan. For skewed keyspaces use the
-    kernel path with the episode pre-split
-    (operators/skew.py:with_episodes + next_ts_col), which this plan
-    deliberately does not attempt — the cross-episode ordinal/cause
-    handoff would reintroduce a join against the single-sort shape that
-    makes this path fast.
+    as it would in any partitionBy(key) plan (and in the kernel path's
+    one sorted partition). Splitting a hot key would need a cross-split
+    ordinal/cause handoff, which this single-sort plan does not attempt.
     """
     from rustiflow_spark.config import (
         ACTIVE_IDLE_TIMEOUT_US,

@@ -1,61 +1,21 @@
 """Skew / heavy-hitter handling (SURVEY.md §4 custom-work #1).
 
-Two tools:
+Two tools for keys that would otherwise serialize inside one reducer:
 
-1. ``episode_split_expr`` — sessions can never straddle a gap of
-   >= (idle_timeout+1) seconds (any packet after such a gap finds its flow
-   expired-on-arrival, basic_flow.rs:365-367 + flow_table.rs:120-126), so a
-   heavy key's event stream can be *exactly* pre-split at those gaps into
-   independent episodes. Grouping by (key, episode) bounds the per-group
-   state held by the kernel without changing any output value.
-
-2. ``salted_welford_agg`` — order-invariant population statistics with a
+1. ``salted_welford_agg`` — order-invariant population statistics with a
    salted two-phase partial/final aggregation. The final merge uses the
    exact Chan/Welford parallel-merge formula — the same math the reference
    uses to pool directional variances (packet_stats.rs:63-91) — so results
    are identical (up to float associativity) to a single-phase aggregate
    while heavy keys fan out across `salt_buckets` reducers.
+
+2. ``salted_join`` — a salted equi-join for a hot join key that AQE's
+   skew-join split cannot break up.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
-
-
-def episode_split_expr(
-    key_cols: list[str], ts_col: str, idle_timeout_s: int, order_col: str | None = None
-) -> Column:
-    """Episode ordinal per key: increments at every guaranteed session cut
-    (gap >= (idle+1) seconds). Costs one window pass over the keyed sort —
-    the same shuffle the kernel needs anyway."""
-    order = [F.asc(ts_col)] + ([F.asc(order_col)] if order_col else [])
-    w = Window.partitionBy(*key_cols).orderBy(*order)
-    gap = F.col(ts_col) - F.lag(ts_col).over(w)
-    cut = F.when(gap >= (idle_timeout_s + 1) * 1_000_000, 1).otherwise(0)
-    return F.sum(cut).over(
-        Window.partitionBy(*key_cols)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-
-
-def with_episodes(
-    df: DataFrame,
-    key_cols: list[str],
-    ts_col: str,
-    idle_timeout_s: int,
-    order_col: str | None = None,
-) -> DataFrame:
-    """Add `episode` (exact pre-split ordinal) and `next_key_ts` (timestamp
-    of the next same-key event, for exact cross-episode close causes) —
-    then sessionize by key_cols + ['episode'] with
-    ``next_ts_col='next_key_ts'`` for results identical to unsplit
-    grouping, with per-group state bounded by episode size."""
-    order = [F.asc(ts_col)] + ([F.asc(order_col)] if order_col else [])
-    w = Window.partitionBy(*key_cols).orderBy(*order)
-    return df.withColumn(
-        "episode", episode_split_expr(key_cols, ts_col, idle_timeout_s, order_col)
-    ).withColumn("next_key_ts", F.coalesce(F.lead(ts_col).over(w), F.lit(-1)))
+from pyspark.sql import DataFrame, functions as F
 
 
 def salted_welford_agg(

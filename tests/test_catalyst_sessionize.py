@@ -82,6 +82,37 @@ def test_auto_strategy_dispatch(spark):
     kernel_f = sessionize_events(sdf, KEY, finite)
     _compare(kernel_f.toPandas(), auto_f.toPandas())
 
+    # planted hot key (2000 events, idle gaps + terminators) beside twelve
+    # light keys: auto is plain dispatch — one zero-Python plan, no union
+    # of a split branch — equal to the kernel (session_index included)
+    # whatever the input partitioning
+    rng = np.random.default_rng(42)
+    rows = []
+    seq = 0
+    for doc, n in [("hot", 2000)] + [(f"d{i}", 40) for i in range(12)]:
+        ts = 1_000_000
+        for _ in range(n):
+            ts += int(rng.choice([500_000, 2_000_000, 61_000_001],
+                                 p=[0.6, 0.3, 0.1]))
+            rows.append({
+                "source": "s", "doc_id": doc, "ts_us": ts,
+                "n_tok": int(rng.integers(0, 200)),
+                "direction": int(rng.integers(0, 2)),
+                "terminator": int(rng.random() < 0.02),
+                "event_seq": seq,
+            })
+            seq += 1
+    hot = pd.DataFrame(rows)
+    kernel_h = sessionize_events(spark.createDataFrame(hot), KEY, cfg).toPandas()
+    for parts in (1, 7):
+        auto_h = sessionize_events(
+            spark.createDataFrame(hot).repartition(parts), KEY, cfg,
+            strategy="auto",
+        )
+        plan = plan_of(auto_h)
+        assert "Python" not in plan and "Union" not in plan, plan[:2000]
+        _compare(kernel_h, auto_h.toPandas())
+
     # forcing catalyst under an unsupported config raises
     with pytest.raises(ValueError, match="catalyst"):
         sessionize_events(

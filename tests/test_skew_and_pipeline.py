@@ -1,4 +1,4 @@
-"""Skew handling (episode split, salted two-phase Welford) + the end-to-end
+"""Skew handling (salted two-phase Welford) + the end-to-end
 north-rule pipeline, including plan-quality assertions (pushdown/pruning)."""
 
 from __future__ import annotations
@@ -8,40 +8,9 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from rustiflow_spark.config import EngineConfig
-from rustiflow_spark.operators.event_features import sessionize_events
-from rustiflow_spark.operators.skew import episode_split_expr, salted_welford_agg
+from rustiflow_spark.operators.skew import salted_welford_agg
 from rustiflow_spark.pipeline import token_feature_pipeline
 from rustiflow_spark.sources.synth import generate_token_sequences
-
-
-def test_episode_split_preserves_sessions(spark):
-    """Grouping by (key, episode) must produce identical sessions: episodes
-    are delimited by guaranteed cuts."""
-    pdf = generate_token_sequences(n_docs=50, seed=6)
-    sdf = spark.createDataFrame(pdf)
-    cfg = EngineConfig(active_timeout=10_000_000, idle_timeout=60, scan_mode="none")
-
-    base = sessionize_events(sdf, ["source", "doc_id"], cfg).toPandas()
-
-    from rustiflow_spark.operators.skew import with_episodes
-
-    split = with_episodes(sdf, ["source", "doc_id"], "ts_us", 60, "event_seq")
-    episodic = sessionize_events(
-        split, ["source", "doc_id", "episode"], cfg, next_ts_col="next_key_ts"
-    ).toPandas()
-
-    key = ["source", "doc_id", "first_ts_us", "last_ts_us"]
-    a = base.sort_values(key).reset_index(drop=True)
-    b = episodic.sort_values(key).reset_index(drop=True)
-    assert len(a) == len(b)
-    for col in ("event_count", "n_tok_total", "iat_mean", "subflow_count",
-                "duration_us", "idle_total", "active_total"):
-        assert np.allclose(
-            a[col].astype(float), b[col].astype(float)
-        ), f"{col} differs under episode split"
-    # causes must be fully identical: the next_key_ts handoff gives the
-    # final session of each episode its true observation event
-    assert (a["cause"].to_numpy() == b["cause"].to_numpy()).all()
 
 
 def test_salted_welford_matches_plain(spark):
@@ -133,71 +102,3 @@ def test_packet_plan_single_exchange(spark, sf_dir):
     assert "MapInArrow" in plan, plan
     # props is never referenced by the synthesis; the scan must prune it
     assert "props" not in plan, plan
-
-
-def test_auto_strategy_skew_routing(spark, monkeypatch):
-    """strategy='auto' with a planted heavy key must (a) route the heavy
-    key through the episode-split kernel and the rest through the
-    zero-Python Catalyst plan, (b) produce EXACTLY the kernel-unsplit
-    output — including the global per-key session_index — and (c) be
-    partition-invariant."""
-    import rustiflow_spark.operators.event_features as ef
-
-    # small data: force detection on (no size floor, full sample, low bar)
-    monkeypatch.setattr(ef, "_SKEW_SAMPLE_MIN_BYTES", 0)
-    monkeypatch.setattr(ef, "_SKEW_SAMPLE_FRACTION", 1.0)
-    monkeypatch.setattr(ef, "_SKEW_KEY_ROWS", 500)
-
-    rng = np.random.default_rng(42)
-    rows = []
-    seq = 0
-    # heavy key: 2000 events with idle gaps + terminators; light keys: ~40
-    for doc, n in [("hot", 2000)] + [(f"d{i}", 40) for i in range(12)]:
-        ts = 1_000_000
-        for _ in range(n):
-            ts += int(rng.choice([500_000, 2_000_000, 61_000_001],
-                                 p=[0.6, 0.3, 0.1]))
-            rows.append({
-                "source": "s", "doc_id": doc, "ts_us": ts,
-                "n_tok": int(rng.integers(0, 200)),
-                "direction": int(rng.integers(0, 2)),
-                "terminator": int(rng.random() < 0.02),
-                "event_seq": seq,
-            })
-            seq += 1
-    pdf = pd.DataFrame(rows)
-    cfg = EngineConfig(active_timeout=10_000_000, idle_timeout=60, scan_mode="none")
-    key = ["source", "doc_id"]
-
-    heavy = ef._detect_heavy_keys(spark.createDataFrame(pdf), key)
-    assert ("s", "hot") in heavy and len(heavy) == 1
-
-    kernel = sessionize_events(spark.createDataFrame(pdf), key, cfg).toPandas()
-    auto = sessionize_events(
-        spark.createDataFrame(pdf), key, cfg, strategy="auto"
-    )
-    plan = auto._jdf.queryExecution().executedPlan().toString()
-    assert "MapInArrow" in plan and "Union" in plan  # both branches present
-    auto_pdf = auto.toPandas()
-
-    sort = key + ["session_index"]
-    a = kernel.sort_values(sort).reset_index(drop=True)
-    b = auto_pdf[a.columns].sort_values(sort).reset_index(drop=True)
-    assert len(a) == len(b)
-    for col in a.columns:
-        if a[col].dtype.kind == "f":
-            assert np.allclose(a[col].to_numpy(), b[col].to_numpy(),
-                               rtol=1e-9, atol=1e-6), col
-        else:
-            assert (a[col] == b[col]).all(), col
-
-    # partition invariance: same rows regardless of input partitioning
-    for parts in (1, 7):
-        again = sessionize_events(
-            spark.createDataFrame(pdf).repartition(parts), key, cfg,
-            strategy="auto",
-        ).toPandas()
-        c = again[a.columns].sort_values(sort).reset_index(drop=True)
-        assert len(c) == len(a)
-        assert (c["session_index"] == a["session_index"]).all()
-        assert np.allclose(c["n_tok_total"], a["n_tok_total"])

@@ -325,11 +325,11 @@ def test_exact_dedup_member_cap(spark):
     assert list(big["member_ids"]) == [0, 1, 2, 3, 4]
 
 
-def test_cluster_min_id_persist_modes_and_pointer_jump(spark, tmp_path):
+def test_cluster_min_id_persist_modes(spark, tmp_path):
     """Fault-tolerance knobs must not change results: localCheckpoint,
     persist(DISK_ONLY) and reliable checkpoint produce identical components,
-    and pointer jumping converges to the same labels on a chain graph whose
-    diameter exceeds what plain propagation covers per round."""
+    including on a chain graph whose diameter needs many propagation
+    rounds."""
     from rustiflow_spark.operators.dedup import cluster_min_id
 
     # a 12-node chain (worst case for label propagation) + a triangle + isolates
@@ -348,10 +348,6 @@ def test_cluster_min_id_persist_modes_and_pointer_jump(spark, tmp_path):
             .toPandas().sort_values("doc_id").reset_index(drop=True)
         )
         results[mode] = got
-    jump = (
-        cluster_min_id(pairs, all_ids, "doc_id", max_iter=20, pointer_jump=True)
-        .toPandas().sort_values("doc_id").reset_index(drop=True)
-    )
 
     base = results["local"]
     # chain collapses to 0, triangle to 20, isolates to themselves
@@ -362,7 +358,6 @@ def test_cluster_min_id_persist_modes_and_pointer_jump(spark, tmp_path):
     assert got_map == expect, got_map
     for mode in ("disk", "checkpoint"):
         pd.testing.assert_frame_equal(base, results[mode])
-    pd.testing.assert_frame_equal(base, jump)
 
 
 def test_deterministic_sampling_and_split(spark):

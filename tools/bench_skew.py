@@ -1,15 +1,18 @@
 """Planted heavy-hitter benchmark: one key owns 80% of a 1M-event table.
 
-Compares, under AQE, the three aggregation strategies the engine offers for
-that shape:
+Times, under AQE, what the engine offers for that shape:
 
-  1. sessionize unsplit          — groupBy(user): the hot key's entire
-                                   stream lands in ONE kernel task
-  2. sessionize episode_split    — exact pre-split at guaranteed idle cuts
-                                   (operators/skew.py), hot key fans out
+  1. sessionize, kernel          — the hot key's entire stream lands in
+                                   ONE sorted kernel task
+  2. sessionize, catalyst / auto — zero-Python window plan ('auto' picks
+                                   it here: scan_mode='none'); the hot key
+                                   lands in ONE window task
   3. salted two-phase Welford    — order-invariant stats with Chan merge
+                                   (operators/skew.py), hot key fans out
+  4. sort-merge skew join        — AQE's skew-join split off vs on
 
-and checks 1 vs 2 produce identical session rows (the split is exact).
+and checks that 'auto' emits the kernel's session rows, session_index
+included.
 
 Usage: python tools/bench_skew.py [n_events]
 Prints one JSON line for BENCH.md.
@@ -27,7 +30,7 @@ from pyspark.sql import functions as F
 
 from rustiflow_spark.config import EngineConfig
 from rustiflow_spark.operators.event_features import sessionize_events
-from rustiflow_spark.operators.skew import salted_welford_agg, with_episodes
+from rustiflow_spark.operators.skew import salted_welford_agg
 from rustiflow_spark.session import get_spark
 
 IDLE_S = 1800
@@ -40,8 +43,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     # deterministic skewed stream: 80% of events on user 0, rest uniform
-    # over 2000 users; the hot key's stream has idle cuts every 500 events,
-    # so the episode split can fan it out
+    # over 2000 users; the hot key's stream has idle cuts every 500 events
     hot = int(n * 0.8)
     ev = spark.range(n).select(
         F.when(F.col("id") < hot, F.lit(0))
@@ -77,10 +79,6 @@ def main() -> None:
     feats = ["value", "iat", "subflow"]
     unsplit_df = sessionize_events(ev, ["user_id"], cfg, value_col="value",
                                    features=feats)
-    split_src = with_episodes(ev, ["user_id"], "ts_us", IDLE_S, "event_seq")
-    split_df = sessionize_events(split_src, ["user_id", "episode"], cfg,
-                                 value_col="value", features=feats,
-                                 next_ts_col="next_key_ts")
     # warm up Python workers / codegen
     # warmup = one FULL materialization: a limit(1) warmup interrupts
     # mapInPandas tasks mid-stream and a reused Python worker can come
@@ -88,10 +86,8 @@ def main() -> None:
     # a both-sides-reading deadlock at 64M rows; tools/bench_catalyst.py)
     mat(unsplit_df)
     t_unsplit = min(mat(unsplit_df) for _ in range(2))
-    t_split = min(mat(split_df) for _ in range(2))
-    # pure Catalyst (hot key serializes in ONE window task) vs auto
-    # (samples heavy hitters, routes ONLY them through the episode-split
-    # kernel, Catalyst for the rest)
+    # pure Catalyst (hot key serializes in ONE window task) vs auto (the
+    # same plan, picked by dispatch)
     catalyst_df = sessionize_events(ev, ["user_id"], cfg, value_col="value",
                                     features=feats, strategy="catalyst")
     auto_df = sessionize_events(ev, ["user_id"], cfg, value_col="value",
@@ -106,10 +102,8 @@ def main() -> None:
             F.min("value"), F.max("value"))) for _ in range(2)
     )
 
-    cols = ["user_id", "first_ts_us", "last_ts_us", "event_count"]
-    a = unsplit_df.select(cols).exceptAll(split_df.select(cols)).count()
-    b = split_df.select(cols).exceptAll(unsplit_df.select(cols)).count()
-    cols_i = cols + ["session_index"]
+    cols_i = ["user_id", "first_ts_us", "last_ts_us", "event_count",
+              "session_index"]
     c = unsplit_df.select(cols_i).exceptAll(auto_df.select(cols_i)).count()
     d = auto_df.select(cols_i).exceptAll(unsplit_df.select(cols_i)).count()
 
@@ -137,9 +131,6 @@ def main() -> None:
         "n_events": n,
         "hot_key_share": 0.8,
         "sessionize_unsplit_sec": round(t_unsplit, 2),
-        "sessionize_episode_split_sec": round(t_split, 2),
-        "split_speedup": round(t_unsplit / t_split, 2),
-        "split_exact": a == 0 and b == 0,
         "sessionize_catalyst_sec": round(t_catalyst, 2),
         "sessionize_auto_sec": round(t_auto, 2),
         "auto_exact_incl_ordinals": c == 0 and d == 0,
