@@ -98,12 +98,3 @@ def locality_from_scopes(s: str, d: str) -> str:
 
 def ip_version(ip_str: str) -> int:
     return 6 if ":" in ip_str else 4
-
-
-def iana_port_class(port: int) -> str:
-    # flows/util.rs:4-10
-    if port <= 1023:
-        return "well-known"
-    if port <= 49151:
-        return "registered"
-    return "dynamic"

@@ -49,6 +49,7 @@ def _rate_per_s(value: str, duration_us: str) -> str:
 
 
 def _iana(port: str) -> str:
+    # flows/util.rs:4-10
     return (
         f"CASE WHEN {port} <= 1023 THEN 'well-known' "
         f"WHEN {port} <= 49151 THEN 'registered' ELSE 'dynamic' END"

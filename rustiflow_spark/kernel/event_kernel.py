@@ -43,11 +43,17 @@ def segment_events(
     cfg: EngineConfig,
     scan_times: np.ndarray,
     flush_ts: int,
+    resume: tuple[int, int] | None = None,
 ) -> list[tuple[int, int, str, int, bool]]:
     """Split one key's sorted event stream into sessions.
 
     Returns [(start, end, cause, close_ts, closed)]. Terminator events cut
     AFTER the event; timeout cuts BEFORE the first event observing expiry.
+
+    resume=(first_ts, last_ts) continues an open session whose earlier
+    events are not in ``ts``: the first session returned is that session
+    (it may hold zero rows), with its idle and active checks applied from
+    row 0 against those timestamps.
     """
     n = ts.size
     active_us = (cfg.active_timeout + 1) * US_PER_S
@@ -56,33 +62,33 @@ def segment_events(
     gap_cut = np.zeros(n, dtype=bool)
     if n > 1:
         gap_cut[1:] = np.diff(ts) >= idle_us
+    if resume is not None and n:
+        gap_cut[0] = ts[0] - resume[1] >= idle_us
     gap_idx = np.flatnonzero(gap_cut)
     term_idx = np.flatnonzero(terminator > 0)
 
     out = []
     s = 0
-    while s < n:
-        first = int(ts[s])
-        gi = gap_idx[np.searchsorted(gap_idx, s, side="right"):]
+    cont = resume is not None  # the session at s continues the open one
+    while s < n or cont:
+        first, last = resume if cont else (int(ts[s]), -1)
+        # a continued session may cut before its row s; a fresh one cannot
+        gi = gap_idx[np.searchsorted(gap_idx, s, side="left" if cont else "right"):]
         next_idle = int(gi[0]) if gi.size else n
         na = int(np.searchsorted(ts, first + active_us, side="left"))
-        next_active = na if na > s else n
+        next_active = na if na > s or cont else n
         e = min(next_idle, next_active, n)
         tj = term_idx[np.searchsorted(term_idx, s, side="left"):]
         next_term = int(tj[0]) + 1 if tj.size else n + 1
+        cont = False
         if next_term <= e:
             out.append((s, next_term, CAUSE_TCP_TERM, int(ts[next_term - 1]), False))
             s = next_term
             continue
-        if e >= n:
-            cause, close_ts = _timeout_close(
-                cfg, first, int(ts[n - 1]), -1, scan_times, flush_ts
-            )
-            out.append((s, n, cause, close_ts, True))
-            break
-        cause, close_ts = _timeout_close(
-            cfg, first, int(ts[e - 1]), int(ts[e]), scan_times, flush_ts
-        )
+        if e > s:
+            last = int(ts[e - 1])
+        nxt = int(ts[e]) if e < n else -1
+        cause, close_ts = _timeout_close(cfg, first, last, nxt, scan_times, flush_ts)
         out.append((s, e, cause, close_ts, True))
         s = e
     return out

@@ -4,8 +4,10 @@ Features are computed elsewhere: by the block kernel
 (kernel/packet_segmented.featurize_packet_block) in batch and in the
 streaming early-export path, and by the accumulator (kernel/flow_accum.py)
 in the streaming default path. Those, and the event kernel
-(kernel/event_kernel.py), import the cut rules from here. Together they
-reproduce the reference's ``FlowTable`` semantics
+(kernel/event_kernel.py), import the cut rules from here; the streaming
+default path keeps no copy of its own and continues each key's open flow
+by passing the accumulator's state to ``segment_biflow`` as ``resume=``.
+Together they reproduce the reference's ``FlowTable`` semantics
 (rustiflow/src/flow_table.rs:23-246):
 
   * idle timeout:  (t - last)/1e6  > idle   (basic_flow.rs:365-367)
@@ -211,17 +213,28 @@ def segment_biflow(
     cfg: EngineConfig,
     scan_times: np.ndarray,
     flush_ts: int,
+    resume: tuple[int, int, bool, _TcpState] | None = None,
 ) -> list[Session]:
     """Split one canonical-biflow packet sequence into exported sessions.
 
     ts: int64 timestamps (sorted); dir_a: bool, directed-key orientation;
     tcp_ctl: dict of int64 arrays (fin, syn, rst, ack, seq, ack_seq,
     data_len) when protocol is TCP else None.
+
+    resume=(first_ts, last_ts, first_dir_a, tcp_state) continues an open
+    flow whose earlier packets are not in ``ts``: the first session
+    returned is that flow (it may hold zero rows), with its idle and active
+    checks applied from row 0 and its TCP lifecycle advancing ``tcp_state``
+    in place. Early-export snapshots of the continued flow cover only its
+    rows here, so callers that resume run without early export.
     """
     n = ts.size
     sessions: list[Session] = []
+    # a resumed TCP flow may finish or complete its handshake on a packet
+    # without control flags, so it always takes the per-packet loop
     has_ctl = tcp_ctl is not None and (
-        tcp_ctl["fin"].any() or tcp_ctl["rst"].any() or tcp_ctl["syn"].any()
+        resume is not None
+        or tcp_ctl["fin"].any() or tcp_ctl["rst"].any() or tcp_ctl["syn"].any()
     )
     active_us = (cfg.active_timeout + 1) * US_PER_S
     idle_us = (cfg.idle_timeout + 1) * US_PER_S
@@ -232,25 +245,27 @@ def segment_biflow(
         gap_cut = np.zeros(n, dtype=bool)
         if n > 1:
             gap_cut[1:] = np.diff(ts) >= idle_us
+        if resume is not None and n:
+            gap_cut[0] = ts[0] - resume[1] >= idle_us
         gap_idx = np.flatnonzero(gap_cut)
         s = 0
-        while s < n:
-            first = int(ts[s])
-            # next idle cut after s
-            gi = gap_idx[np.searchsorted(gap_idx, s, side="right"):]
+        cont = resume is not None  # the session at s continues the open flow
+        while s < n or cont:
+            first, last = resume[:2] if cont else (int(ts[s]), -1)
+            # next idle cut: after s for a fresh session, at s for a
+            # continued one (its previous packet is not in ts)
+            gi = gap_idx[np.searchsorted(gap_idx, s, side="left" if cont else "right"):]
             next_idle = int(gi[0]) if gi.size else n
-            # next active cut: first index > s with ts >= first + active_us
+            # next active cut: first index with ts >= first + active_us
             na = int(np.searchsorted(ts, first + active_us, side="left"))
-            next_active = na if na > s else n
+            next_active = na if na > s or cont else n
             cut = min(next_idle, next_active, n)
-            if cut >= n:
-                cause, close_ts = _timeout_close(
-                    cfg, first, int(ts[n - 1]), -1, scan_times, flush_ts
-                )
-                sessions.append(Session(s, n, cause, close_ts, closed=True))
-                break
+            cont = False
+            if cut > s:
+                last = int(ts[cut - 1])
+            nxt = int(ts[cut]) if cut < n else -1
             cause, close_ts = _timeout_close(
-                cfg, first, int(ts[cut - 1]), int(ts[cut]), scan_times, flush_ts
+                cfg, first, last, nxt, scan_times, flush_ts
             )
             sessions.append(Session(s, cut, cause, close_ts, closed=True))
             s = cut
@@ -300,14 +315,17 @@ def segment_biflow(
 
     snapshots: list[Session] = []
     s = 0
-    while s < n:
-        first = ts_l[s]
-        st = _TcpState()
-        fwd_dir = dir_l[s]
+    cont = resume is not None  # the session at s continues the open flow
+    while s < n or cont:
+        if cont:
+            first, prev_t, fwd_dir, st = resume
+        else:
+            first = prev_t = ts_l[s]
+            fwd_dir = dir_l[s]
+            st = _TcpState()
         i = s
         terminated = False
         term_cause = ""
-        prev_t = first
         act_lim = first + active_us
         # first index whose ts crosses the active limit (fixed per session)
         ja = int(np.searchsorted(ts, act_lim)) if jump else n
@@ -347,7 +365,7 @@ def segment_biflow(
                     i = j
                     continue
             t = ts_l[i]
-            if i > s:
+            if i > s or cont:
                 # expiry check before applying packet (flow_table.rs:132-153)
                 # t >= min(act_lim, prev+idle) decomposed to avoid min()
                 if t >= act_lim or t - prev_t >= idle_us:
@@ -380,12 +398,13 @@ def segment_biflow(
                 snapshots.append(snap)
             prev_t = t
             i += 1
+        cont = False
         if terminated:
             sess = Session(s, i, term_cause, ts_l[i - 1], closed=False)
         else:
             nxt = ts_l[i] if i < n else -1
             cause, close_ts = _timeout_close(
-                cfg, first, ts_l[i - 1], nxt, scan_times, flush_ts
+                cfg, first, prev_t, nxt, scan_times, flush_ts
             )
             sess = Session(s, i, cause, close_ts, closed=True)
         sess.handshake_completed = st.handshake

@@ -83,9 +83,10 @@ def segment_groups(
     least one FIN/RST/SYN run the per-group lifecycle state machine
     (segment_biflow), exactly the rows whose cuts are control-driven
     (basic_flow.rs:155-191). Both paths produce identical sessions for
-    flagless groups (the accumulator stream path segments with
-    segment_biflow alone; tests/test_flow_accum.py and the stream-vs-batch
-    tests compare them).
+    flagless groups. The accumulator stream path calls segment_biflow
+    alone, passing each key's open flow as ``resume=`` (a resumed TCP flow
+    always takes the per-packet loop); tests/test_flow_accum.py and the
+    stream-vs-batch tests compare the two.
 
     Returns per-session arrays sorted by start row: starts, ends (exclusive),
     cause (object), close_ts, closed, close_style (object), handshake,

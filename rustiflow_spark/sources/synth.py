@@ -36,25 +36,6 @@ IPV6_POOL = [
 ]
 
 
-def _flag_cols(
-    n, fin=None, syn=None, rst=None, psh=None, ack=None, urg=None, cwr=None, ece=None
-):
-    z = np.zeros(n, dtype=np.int64)
-    out = {}
-    for name, v in (
-        ("fin", fin),
-        ("syn", syn),
-        ("rst", rst),
-        ("psh", psh),
-        ("ack", ack),
-        ("urg", urg),
-        ("cwr", cwr),
-        ("ece", ece),
-    ):
-        out[name + "_flag"] = z.copy() if v is None else np.asarray(v, dtype=np.int64)
-    return out
-
-
 def _mk_flags_bitmask(df_cols: dict) -> np.ndarray:
     bits = {
         "fin_flag": 1,

@@ -12,9 +12,12 @@ applyInPandasWithState`` with event-time timeouts:
     interleave. State size is O(watermark_delay x event_rate), independent
     of session length: a key emitting 10k ev/s inside a 1-hour active
     window holds ~delay-seconds of raw events, not 36M.
-  * every micro-batch sorts the horizon buffer + new events, segments them
-    with the SAME cut rules as the batch kernel (prefix-aware variant of
-    kernel/event_kernel.py:segment_events), emits every session that is
+  * every micro-batch sorts the horizon buffer + new events and segments
+    them with the batch kernel's own segment_events
+    (kernel/event_kernel.py), resumed from the accumulator's open session
+    (``resume=(first_ts, last_ts)``; the packet path resumes
+    flow_kernel.segment_biflow the same way, adding the first packet's
+    direction and the TCP lifecycle state). It emits every session that is
     provably closed (a successor event observed its expiry, or a
     terminator event ended it), folds the surviving open session's
     now-frozen events (ts < current watermark) into the accumulator and
@@ -42,13 +45,19 @@ from rustiflow_spark.config import (
     CAUSE_ACTIVE,
     CAUSE_IDLE,
     CAUSE_SHUTDOWN,
+    CAUSE_TCP_RESET,
     CAUSE_TCP_TERM,
-    US_PER_S,
+    PROTO_TCP,
     EngineConfig,
 )
-from rustiflow_spark.kernel.event_accum import acc_finalize, acc_fold
+from rustiflow_spark.kernel.event_accum import (
+    I_FIRST_TS,
+    I_LAST_TS,
+    acc_finalize,
+    acc_fold,
+)
 from rustiflow_spark.kernel.event_kernel import segment_events
-from rustiflow_spark.kernel.flow_kernel import _timeout_close
+from rustiflow_spark.kernel.flow_kernel import segment_biflow
 
 STATE_SCHEMA = T.StructType(
     [
@@ -65,49 +74,11 @@ STATE_SCHEMA = T.StructType(
 _NO_SCANS = np.empty(0, dtype=np.int64)
 
 
-def _segment_tail_with_prefix(
-    acc_first: int,
-    acc_last: int,
-    ts: np.ndarray,
-    terminator: np.ndarray,
-    cfg: EngineConfig,
-    flush_ts: int,
-) -> tuple[int, str, int, bool, bool]:
-    """Where does the accumulator-anchored open session end within the raw
-    tail? Mirrors segment_events' cut precedence (event_kernel.py:39) with
-    the session's first event virtualized at acc_first and the previous
-    event at acc_last. Returns (n_tail_events_in_session, cause, close_ts,
-    closed, still_open)."""
-    n = ts.size
-    if n == 0:
-        cause, close_ts = _timeout_close(
-            cfg, acc_first, acc_last, -1, _NO_SCANS, flush_ts
-        )
-        return 0, cause, close_ts, True, True
-    active_us = (cfg.active_timeout + 1) * US_PER_S
-    idle_us = (cfg.idle_timeout + 1) * US_PER_S
-    gaps = np.empty(n, dtype=np.int64)
-    gaps[0] = ts[0] - acc_last
-    if n > 1:
-        gaps[1:] = np.diff(ts)
-    idle_pos = np.flatnonzero(gaps >= idle_us)
-    next_idle = int(idle_pos[0]) if idle_pos.size else n
-    next_active = int(np.searchsorted(ts, acc_first + active_us, side="left"))
-    e = min(next_idle, next_active, n)
-    term_pos = np.flatnonzero(terminator > 0)
-    next_term = int(term_pos[0]) + 1 if term_pos.size else n + 1
-    if next_term <= e:
-        return next_term, CAUSE_TCP_TERM, int(ts[next_term - 1]), False, False
-    last = int(ts[e - 1]) if e > 0 else acc_last
-    if e >= n:
-        cause, close_ts = _timeout_close(
-            cfg, acc_first, last, -1, _NO_SCANS, flush_ts
-        )
-        return n, cause, close_ts, True, True
-    cause, close_ts = _timeout_close(
-        cfg, acc_first, last, int(ts[e]), _NO_SCANS, flush_ts
-    )
-    return e, cause, close_ts, True, False
+def _set_timeout(state: GroupState, at_us: int) -> None:
+    """Event-time timeout at at_us, clamped strictly past the current
+    watermark: a backlog replay can put an expiry behind the stream head,
+    and Spark rejects timestamps <= watermark (IllegalArgumentException)."""
+    state.setTimeoutTimestamp(max(at_us // 1000, state.getCurrentWatermarkMs() + 1))
 
 
 def _advance_event_key(
@@ -127,53 +98,33 @@ def _advance_event_key(
     this is a timeout flush. Returns (emitted_rows, new_acc, new_tail) with
     new_tail a dict of arrays holding ONLY events >= watermark_us (None
     alongside new_acc=None when every session closed)."""
-    from rustiflow_spark.kernel.event_accum import I_FIRST_TS, I_LAST_TS
-
     n = ts.size
     if acc is None and n == 0:
         return [], None, None
     flush_ts = int(ts[-1]) if n else int(acc[0][I_LAST_TS])
 
-    # (start, end, cause, close_ts, closed, uses_acc) over the raw tail
-    sessions: list[tuple[int, int, str, int, bool, bool]] = []
-    if acc is not None:
-        e0, cause0, cts0, closed0, open0 = _segment_tail_with_prefix(
-            int(acc[0][I_FIRST_TS]), int(acc[0][I_LAST_TS]), ts, tm, cfg, flush_ts
-        )
-        sessions.append((0, e0, cause0, cts0, closed0, True))
-        rest_from = e0 if not open0 else n
-    else:
-        rest_from = 0
-    if rest_from < n:
-        for s, e, cause, close_ts, closed in segment_events(
-            ts[rest_from:], tm[rest_from:], cfg, _NO_SCANS, flush_ts
-        ):
-            sessions.append(
-                (s + rest_from, e + rest_from, cause, close_ts, closed, False)
-            )
+    # session 0 continues the accumulator's open session, if there is one
+    resume = (
+        (int(acc[0][I_FIRST_TS]), int(acc[0][I_LAST_TS]))
+        if acc is not None else None
+    )
+    sessions = segment_events(ts, tm, cfg, _NO_SCANS, flush_ts, resume=resume)
 
-    n_emit = len(sessions) if flush_all else len(sessions) - 1
-    if not flush_all and sessions and sessions[-1][2] == CAUSE_TCP_TERM:
-        n_emit = len(sessions)
+    trailing_open = sessions[-1][2] != CAUSE_TCP_TERM
+    n_emit = len(sessions) - 1 if (trailing_open and not flush_all) else len(sessions)
 
     rows: list[dict] = []
     for i in range(n_emit):
-        s, e, cause, close_ts, closed, uses_acc = sessions[i]
-        a = acc_fold(acc if uses_acc else None, ts[s:e], val[s:e], dr[s:e])
+        s, e, cause, close_ts, closed = sessions[i]
+        a = acc_fold(acc if i == 0 else None, ts[s:e], val[s:e], dr[s:e])
         row = acc_finalize(a, cause, close_ts, closed)
-        if (
-            flush_all
-            and i == len(sessions) - 1
-            and cause == CAUSE_SHUTDOWN
-        ):
+        if flush_all and i == len(sessions) - 1 and cause == CAUSE_SHUTDOWN:
             # timeout flush: the watermark passed the earlier of the two
             # expiries; active is checked first (basic_flow.rs:361). The
             # relabel happens AFTER finalize — the feature values stay the
             # batch kernel's shutdown-flush values (no trailing idle gap).
-            first = int(acc[0][I_FIRST_TS]) if uses_acc else int(ts[s])
-            last = int(ts[e - 1]) if e > s else int(acc[0][I_LAST_TS])
-            active_exp = cfg.active_expiry_us(first)
-            idle_exp = cfg.idle_expiry_us(last)
+            active_exp = cfg.active_expiry_us(int(a[0][I_FIRST_TS]))
+            idle_exp = cfg.idle_expiry_us(int(a[0][I_LAST_TS]))
             row["cause"] = CAUSE_ACTIVE if active_exp <= idle_exp else CAUSE_IDLE
         row["session_index"] = i
         rows.append(row)
@@ -182,9 +133,9 @@ def _advance_event_key(
         return rows, None, None
 
     # trailing open session: fold its watermark-frozen prefix, keep the rest
-    s, e, _, _, _, uses_acc = sessions[-1]
+    s, e = sessions[-1][:2]
     frozen_end = s + int(np.searchsorted(ts[s:e], watermark_us, side="left"))
-    new_acc = acc if uses_acc else None
+    new_acc = acc if len(sessions) == 1 else None
     if frozen_end > s:
         new_acc = acc_fold(
             new_acc, ts[s:frozen_end], val[s:frozen_end], dr[s:frozen_end]
@@ -196,23 +147,6 @@ def _advance_event_key(
         "terminator": tm[frozen_end:e],
     }
     return rows, new_acc, tail
-
-
-def output_schema(key_fields: list[T.StructField]) -> T.StructType:
-    from rustiflow_spark.kernel.event_kernel import EVENT_FEATURE_COLUMNS
-
-    fields = list(key_fields)
-    for name in EVENT_FEATURE_COLUMNS:
-        if name in ("session_index", "event_count", "fwd_event_count", "bwd_event_count",
-                    "subflow_count"):
-            fields.append(T.StructField(name, T.IntegerType()))
-        elif name in ("first_ts_us", "last_ts_us", "duration_us"):
-            fields.append(T.StructField(name, T.LongType()))
-        elif name == "cause":
-            fields.append(T.StructField(name, T.StringType()))
-        else:
-            fields.append(T.StructField(name, T.DoubleType()))
-    return T.StructType(fields)
 
 
 def sessionize_stream(
@@ -239,14 +173,13 @@ def sessionize_stream(
     key restarts session_index at 0 — documented divergence; without the
     TTL the state store would grow without bound on high-cardinality
     ephemeral keys)."""
+    from rustiflow_spark.operators.event_features import _feature_schema
+
     cfg = cfg or EngineConfig()
-    key_fields = [f for f in events.schema.fields if f.name in key_cols]
-    out_schema = output_schema(key_fields)
+    out_schema = _feature_schema(events, key_cols)
     out_cols = [f.name for f in out_schema.fields]
 
     def func(key: tuple, pdfs, state: GroupState):
-        from rustiflow_spark.kernel.event_accum import I_FIRST_TS, I_LAST_TS
-
         if state.exists:
             acc_i, acc_f, ts_b, val_b, dir_b, term_b, base = state.get
             acc = (
@@ -289,14 +222,6 @@ def sessionize_stream(
             state.hasTimedOut,
         )
 
-        # event-time timeouts must land strictly past the current watermark
-        # (a backlog replay can make an expiry predate the stream head, and
-        # Spark rejects timestamps <= watermark with IllegalArgumentException)
-        def set_timeout(at_us: int) -> None:
-            state.setTimeoutTimestamp(
-                max(at_us // 1000, state.getCurrentWatermarkMs() + 1)
-            )
-
         if new_acc is None and tail is None:
             # keep the per-key session ordinal across micro-batches: an
             # empty entry + the advanced base. Removing state here would
@@ -307,7 +232,7 @@ def sessionize_stream(
             # empty entry and removes it) so state stays bounded.
             last_ts = int(allev["ts"].iloc[-1]) if len(allev) else wm_us
             state.update(([], [], [], [], [], [], base + len(rows)))
-            set_timeout(last_ts + ordinal_ttl_s * 1_000_000)
+            _set_timeout(state, last_ts + ordinal_ttl_s * 1_000_000)
         else:
             ai = new_acc[0] if new_acc is not None else None
             first_ts = (
@@ -318,20 +243,19 @@ def sessionize_stream(
                 else int(ai[I_LAST_TS])
             )
             state.update((
-                [int(x) for x in new_acc[0]] if new_acc is not None else [],
-                [float(x) for x in new_acc[1]] if new_acc is not None else [],
-                [int(x) for x in tail["ts"]],
-                [float(x) for x in tail["value"]],
-                [int(x) for x in tail["direction"]],
-                [int(x) for x in tail["terminator"]],
+                new_acc[0].tolist() if new_acc is not None else [],
+                new_acc[1].tolist() if new_acc is not None else [],
+                tail["ts"].tolist(),
+                tail["value"].tolist(),
+                tail["direction"].tolist(),
+                tail["terminator"].tolist(),
                 base + len(rows),
             ))
             # flush at whichever expiry comes first: idle (vs last event) or
             # active (vs the open session's first event)
-            expiry_us = min(
+            _set_timeout(state, min(
                 cfg.idle_expiry_us(last_ts), cfg.active_expiry_us(first_ts)
-            )
-            set_timeout(expiry_us)
+            ))
 
         if rows:
             out = pd.DataFrame(rows)
@@ -385,111 +309,6 @@ PACKET_ACC_STATE_SCHEMA = T.StructType(
 )
 
 
-def _segment_flow_tail_with_prefix(acc: dict, g: dict, cfg: EngineConfig,
-                                   flush_ts: int):
-    """Continue the accumulator-anchored open flow's segmentation over the
-    raw tail — the resume twin of flow_kernel.segment_biflow's per-session
-    loop, with the session's first packet virtualized at the accumulator's
-    first_ts and the TCP lifecycle machine restored from the accumulator.
-    Returns (n_tail_pkts_in_flow, cause, close_ts, closed, still_open, st);
-    st is a COPY advanced over tail[0:n_tail_pkts] (the durable machine in
-    the accumulator only advances at fold time)."""
-    from rustiflow_spark.kernel import flow_accum as fa
-    from rustiflow_spark.config import PROTO_TCP
-
-    ai = acc["i"]
-    first = int(ai[fa.I_FIRST_TS])
-    acc_last = int(ai[fa.I_LAST_TS])
-    fwd_dir = bool(ai[fa.I_FIRST_DIR_A])
-    protocol = int(ai[fa.I_PROTOCOL])
-    st = fa.tcp_state_from_acc(ai)
-    ts = g["ts_us"]
-    n = ts.size
-    if n == 0:
-        cause, close_ts = _timeout_close(
-            cfg, first, acc_last, -1, _NO_SCANS, flush_ts
-        )
-        return 0, cause, close_ts, True, True, st
-    active_us = (cfg.active_timeout + 1) * US_PER_S
-    idle_us = (cfg.idle_timeout + 1) * US_PER_S
-    act_lim = first + active_us
-
-    if protocol != PROTO_TCP:
-        gaps = np.empty(n, dtype=np.int64)
-        gaps[0] = ts[0] - acc_last
-        if n > 1:
-            gaps[1:] = np.diff(ts)
-        idle_pos = np.flatnonzero(gaps >= idle_us)
-        next_idle = int(idle_pos[0]) if idle_pos.size else n
-        next_active = int(np.searchsorted(ts, act_lim, side="left"))
-        e = min(next_idle, next_active, n)
-        last = int(ts[e - 1]) if e > 0 else acc_last
-        if e >= n:
-            cause, close_ts = _timeout_close(
-                cfg, first, last, -1, _NO_SCANS, flush_ts
-            )
-            return n, cause, close_ts, True, True, st
-        cause, close_ts = _timeout_close(
-            cfg, first, last, int(ts[e]), _NO_SCANS, flush_ts
-        )
-        return e, cause, close_ts, True, False, st
-
-    # TCP: the per-packet lifecycle loop (segment_biflow's slow path with
-    # the expiry check applied from packet 0 — mid-session resume)
-    from rustiflow_spark.config import CAUSE_TCP_RESET
-
-    ts_l = ts.tolist()
-    dir_l = g["dir_a"].tolist()
-    fin = g["fin_flag"].tolist()
-    rst = g["rst_flag"].tolist()
-    syn = g["syn_flag"].tolist()
-    ack = g["ack_flag"].tolist()
-    seq = g["sequence_number"].tolist()
-    ack_seq = g["sequence_number_ack"].tolist()
-    data_len = g["data_length"].tolist()
-    prev_t = acc_last
-    i = 0
-    terminated = False
-    term_cause = ""
-    while i < n:
-        t = ts_l[i]
-        if t >= act_lim or t - prev_t >= idle_us:
-            break
-        fwd = dir_l[i] == fwd_dir
-        if syn[i] or ack[i]:
-            st.observe_handshake(fwd, syn[i] > 0, ack[i] > 0, seq[i], ack_seq[i])
-        if (fin[i] or st.state_fwd or st.state_bwd) and st.is_finished(
-            fwd, fin[i] > 0, seq[i], ack_seq[i], data_len[i]
-        ):
-            terminated = True
-            term_cause = CAUSE_TCP_TERM
-            i += 1
-            break
-        if rst[i]:
-            if st.handshake:
-                st.reset_after = True
-            else:
-                st.reset_before = True
-            terminated = True
-            term_cause = CAUSE_TCP_RESET
-            i += 1
-            break
-        prev_t = t
-        i += 1
-    if terminated:
-        return i, term_cause, ts_l[i - 1], False, False, st
-    last = ts_l[i - 1] if i > 0 else acc_last
-    if i >= n:
-        cause, close_ts = _timeout_close(
-            cfg, first, last, -1, _NO_SCANS, flush_ts
-        )
-        return n, cause, close_ts, True, True, st
-    cause, close_ts = _timeout_close(
-        cfg, first, last, int(ts_l[i]), _NO_SCANS, flush_ts
-    )
-    return i, cause, close_ts, True, False, st
-
-
 def _advance_packet_key(
     acc: dict | None,
     g: dict[str, np.ndarray],
@@ -501,9 +320,7 @@ def _advance_packet_key(
     """Pure per-key micro-batch transition for the packet path (acc mode).
     Same contract as _advance_event_key: returns (rows, new_acc, new_tail)
     with the tail holding only packets >= watermark_us."""
-    from rustiflow_spark.config import CAUSE_TCP_RESET, PROTO_TCP
     from rustiflow_spark.kernel import flow_accum as fa
-    from rustiflow_spark.kernel.flow_kernel import segment_biflow
 
     ts = g["ts_us"]
     n = ts.size
@@ -511,76 +328,56 @@ def _advance_packet_key(
         return [], None, None
     flush_ts = int(ts[-1]) if n else int(acc["i"][fa.I_LAST_TS])
 
-    # (s, e, cause, close_ts, closed, uses_acc, handshake, rst_before,
-    #  rst_after, close_style)
-    entries: list[tuple] = []
-    trailing_open = False
+    protocol = int(g["protocol"][0]) if n else int(acc["i"][fa.I_PROTOCOL])
+    tcp_ctl = None
+    if protocol == PROTO_TCP:
+        tcp_ctl = {
+            "fin": g["fin_flag"], "rst": g["rst_flag"], "syn": g["syn_flag"],
+            "ack": g["ack_flag"], "seq": g["sequence_number"],
+            "ack_seq": g["sequence_number_ack"], "data_len": g["data_length"],
+        }
+    # session 0 continues the accumulator's open flow, if there is one
+    resume = None
     if acc is not None:
-        e0, cause0, cts0, closed0, open0, st0 = _segment_flow_tail_with_prefix(
-            acc, g, cfg, flush_ts
+        ai = acc["i"]
+        resume = (
+            int(ai[fa.I_FIRST_TS]), int(ai[fa.I_LAST_TS]),
+            bool(ai[fa.I_FIRST_DIR_A]), fa.tcp_state_from_acc(ai),
         )
-        entries.append((
-            0, e0, cause0, cts0, closed0, True,
-            st0.handshake, st0.reset_before, st0.reset_after,
-            st0.close_style(cause0),
-        ))
-        rest_from = n if open0 else e0
-        trailing_open = open0
-    else:
-        rest_from = 0
-    if rest_from < n:
-        sub = {c: v[rest_from:] for c, v in g.items()}
-        protocol = int(sub["protocol"][0])
-        tcp_ctl = None
-        if protocol == PROTO_TCP:
-            tcp_ctl = {
-                "fin": sub["fin_flag"], "rst": sub["rst_flag"],
-                "syn": sub["syn_flag"], "ack": sub["ack_flag"],
-                "seq": sub["sequence_number"],
-                "ack_seq": sub["sequence_number_ack"],
-                "data_len": sub["data_length"],
-            }
-        sessions = [
-            x for x in segment_biflow(
-                sub["ts_us"], sub["dir_a"], protocol, tcp_ctl, cfg,
-                _NO_SCANS, flush_ts,
-            )
-            if x.snapshot_of < 0  # acc mode requires early_export=None
-        ]
-        for sess in sessions:
-            entries.append((
-                sess.start + rest_from, sess.end + rest_from, sess.cause,
-                sess.close_ts, sess.closed, False, sess.handshake_completed,
-                sess.reset_before_handshake, sess.reset_after_handshake,
-                sess.close_style,
-            ))
-        trailing_open = sessions[-1].cause not in (
-            CAUSE_TCP_TERM, CAUSE_TCP_RESET,
+    sessions = [
+        x for x in segment_biflow(
+            ts, g["dir_a"], protocol, tcp_ctl, cfg, _NO_SCANS, flush_ts,
+            resume=resume,
         )
-
-    n_emit = len(entries) - 1 if (trailing_open and not flush_all) else len(entries)
+        if x.snapshot_of < 0  # acc mode requires early_export=None
+    ]
+    trailing_open = sessions[-1].cause not in (CAUSE_TCP_TERM, CAUSE_TCP_RESET)
+    n_emit = len(sessions) - 1 if (trailing_open and not flush_all) else len(sessions)
 
     rows: list[dict] = []
     for i in range(n_emit):
-        s, e, cause, cts, closed, uses_acc, hs, rb, ra, style = entries[i]
+        sess = sessions[i]
         a = fa.flow_acc_fold(
-            acc if uses_acc else None, {c: v[s:e] for c, v in g.items()}
+            acc if i == 0 else None,
+            {c: v[sess.start:sess.end] for c, v in g.items()},
         )
-        row = fa.flow_acc_finalize(a, meta, cause, cts, closed, hs, rb, ra, style)
-        if flush_all and i == len(entries) - 1 and cause == CAUSE_SHUTDOWN:
-            first = int(a["i"][fa.I_FIRST_TS])
-            last = int(a["i"][fa.I_LAST_TS])
-            active_exp = cfg.active_expiry_us(first)
-            idle_exp = cfg.idle_expiry_us(last)
+        row = fa.flow_acc_finalize(
+            a, meta, sess.cause, sess.close_ts, sess.closed,
+            sess.handshake_completed, sess.reset_before_handshake,
+            sess.reset_after_handshake, sess.close_style,
+        )
+        if flush_all and i == len(sessions) - 1 and sess.cause == CAUSE_SHUTDOWN:
+            active_exp = cfg.active_expiry_us(int(a["i"][fa.I_FIRST_TS]))
+            idle_exp = cfg.idle_expiry_us(int(a["i"][fa.I_LAST_TS]))
             row["cause"] = CAUSE_ACTIVE if active_exp <= idle_exp else CAUSE_IDLE
         rows.append(row)
 
-    if n_emit >= len(entries):
+    if n_emit >= len(sessions):
         return rows, None, None
 
-    s, e, _, _, _, uses_acc, _, _, _, _ = entries[-1]
+    s, e = sessions[-1].start, sessions[-1].end
     frozen_end = s + int(np.searchsorted(ts[s:e], watermark_us, side="left"))
-    new_acc = acc if uses_acc else None
+    new_acc = acc if len(sessions) == 1 else None
     if frozen_end > s:
         new_acc = fa.flow_acc_fold(
             new_acc, {c: v[s:frozen_end] for c, v in g.items()}
@@ -617,7 +414,6 @@ def sessionize_packets_stream(
     A trailing flow flushed by its event-time timeout keeps its "Exporter
     Shutdown" feature values, and its cause is relabelled to the expiry
     that fired (Idle or Active Timeout) on both paths."""
-    from rustiflow_spark.config import CAUSE_TCP_RESET, CAUSE_TCP_TERM
     from rustiflow_spark.kernel.packet_segmented import (
         featurize_packet_block,
         segment_groups,
@@ -627,7 +423,6 @@ def sessionize_packets_stream(
 
     cfg = cfg or EngineConfig()
     key_cols = ["key_ip_a", "key_port_a", "key_ip_b", "key_port_b", "protocol"]
-    no_scans = np.empty(0, dtype=np.int64)
     use_acc = cfg.early_export is None
 
     def _read_batches(pdfs) -> list[dict]:
@@ -689,13 +484,11 @@ def sessionize_packets_stream(
             state.remove()  # flows carry no per-key ordinal; nothing to keep
         else:
             if new_acc is not None:
+                # the retransmission range lists already hold Python ints
                 acc_cols = (
-                    [int(x) for x in new_acc["i"]],
-                    [float(x) for x in new_acc["f"]],
-                    [int(x) for x in new_acc["rf_s"]],
-                    [int(x) for x in new_acc["rf_e"]],
-                    [int(x) for x in new_acc["rb_s"]],
-                    [int(x) for x in new_acc["rb_e"]],
+                    new_acc["i"].tolist(), new_acc["f"].tolist(),
+                    new_acc["rf_s"], new_acc["rf_e"],
+                    new_acc["rb_s"], new_acc["rb_e"],
                 )
                 first_ts = int(new_acc["i"][fa.I_FIRST_TS])
                 last_ts = (
@@ -706,18 +499,12 @@ def sessionize_packets_stream(
                 acc_cols = ([], [], [], [], [], [])
                 first_ts = int(tail["ts_us"][0])
                 last_ts = int(tail["ts_us"][-1])
-            state.update(acc_cols + tuple(
-                [[int(x) for x in tail[c]] for c in _PKT_STATE_COLS]
-                + [[bool(x) for x in tail["dir_a"]]]
-            ))
-            expiry_us = min(
+            state.update(
+                acc_cols + tuple(tail[c].tolist() for c in (*_PKT_STATE_COLS, "dir_a"))
+            )
+            _set_timeout(state, min(
                 cfg.idle_expiry_us(last_ts), cfg.active_expiry_us(first_ts)
-            )
-            # clamp strictly past the watermark (backlog replay can put an
-            # idle expiry behind the stream head; Spark rejects <= watermark)
-            state.setTimeoutTimestamp(
-                max(expiry_us // 1000, state.getCurrentWatermarkMs() + 1)
-            )
+            ))
 
         if rows:
             yield pd.DataFrame(rows).reindex(columns=FLOW_SUPERSET_COLUMNS)
@@ -748,7 +535,7 @@ def sessionize_packets_stream(
 
         ts = merged["ts_us"]
         flush_all = state.hasTimedOut
-        segd = segment_groups(merged, cfg, no_scans, int(ts[-1]))
+        segd = segment_groups(merged, cfg, _NO_SCANS, int(ts[-1]))
         starts, ends = segd["starts"], segd["ends"]
         nsess = starts.size
         if flush_all or segd["cause"][-1] in (CAUSE_TCP_TERM, CAUSE_TCP_RESET):
@@ -764,7 +551,7 @@ def sessionize_packets_stream(
             # emitted exactly once, alongside the close of its parent; those
             # of the still-open trailing flow regenerate next batch.
             cut = int(ends[n_emit - 1])
-            snap_ends = segd.get("snap_ends", no_scans)
+            snap_ends = segd.get("snap_ends", _NO_SCANS)
             n_snap = int(np.count_nonzero(snap_ends <= cut))
             closed_segd = {
                 k: v[:n_snap] if k.startswith("snap_") else v[:n_emit]
@@ -777,7 +564,7 @@ def sessionize_packets_stream(
                 for name, v in zip(key_cols[:4], key)
             }
             res = featurize_packet_block(
-                block, keys, cfg, no_scans, int(ts[-1]), segd=closed_segd
+                block, keys, cfg, _NO_SCANS, int(ts[-1]), segd=closed_segd
             )
             out = pd.DataFrame({c: res[c] for c in FLOW_SUPERSET_COLUMNS})
             if flush_all and out.at[nsess - 1, "cause"] == CAUSE_SHUTDOWN:
@@ -793,18 +580,12 @@ def sessionize_packets_stream(
             state.remove()  # flows carry no per-key ordinal; nothing to keep
         else:
             s, e = int(starts[-1]), int(ends[-1])
-            state.update(tuple(
-                [[int(x) for x in merged[c][s:e]] for c in _PKT_STATE_COLS]
-                + [[bool(x) for x in merged["dir_a"][s:e]]]
-            ))
-            expiry_us = min(
+            state.update(
+                tuple(merged[c][s:e].tolist() for c in (*_PKT_STATE_COLS, "dir_a"))
+            )
+            _set_timeout(state, min(
                 cfg.idle_expiry_us(int(ts[e - 1])), cfg.active_expiry_us(int(ts[s]))
-            )
-            # clamp strictly past the watermark (backlog replay can put an
-            # idle expiry behind the stream head; Spark rejects <= watermark)
-            state.setTimeoutTimestamp(
-                max(expiry_us // 1000, state.getCurrentWatermarkMs() + 1)
-            )
+            ))
 
         if out is not None:
             yield out

@@ -128,22 +128,33 @@ def _replay(g, cfg, n_batches, delay_us, rng):
     return rows_all
 
 
-@pytest.mark.parametrize("seed,proto", [(1, 6), (2, 6), (3, 17), (4, 1), (5, 6)])
-def test_packet_multibatch_replay_matches_batch_kernel(seed, proto):
+# (active_timeout, idle_timeout): the long active timeout never fires; the
+# short ones make flows resumed across micro-batches reach the active cut
+REPLAY_TIMEOUTS = [(3600, 30), (60, 30), (20, 120)]
+
+
+@pytest.mark.parametrize("seed,proto,active,idle", [
+    pytest.param(seed, proto, act, idle, id=f"{seed}-{proto}" if act == 3600
+                 else f"{seed}-{proto}-a{act}-i{idle}")
+    for act, idle in REPLAY_TIMEOUTS
+    for seed, proto in [(1, 6), (2, 6), (3, 17), (4, 1), (5, 6)]
+])
+def test_packet_multibatch_replay_matches_batch_kernel(seed, proto, active, idle):
     rng = np.random.default_rng(seed)
-    cfg = EngineConfig(active_timeout=3600, idle_timeout=30, scan_mode="none")
+    cfg = EngineConfig(active_timeout=active, idle_timeout=idle,
+                       scan_mode="none")
     n = int(rng.integers(50, 400))
     g = _synth_group(rng, proto, n)
     batch = _batch_rows(g, cfg)
     stream_rows = _replay(g, cfg, n_batches=6, delay_us=10_000_000, rng=rng)
     assert len(stream_rows) == len(batch)
-    for srow, brow in zip(stream_rows, batch):
+    for i, (srow, brow) in enumerate(zip(stream_rows, batch)):
         for col, bv in brow.items():
             av = srow[col]
-            if col == "cause":
+            if col == "cause" and i == len(batch) - 1:
                 continue  # flush relabel (Shutdown -> Idle/Active), documented
             if isinstance(bv, str):
-                assert av == bv, (col, av, bv)
+                assert av == bv, (i, col, av, bv)
             elif isinstance(bv, float) and np.isinf(bv):
                 assert np.isinf(float(av)), (col, av, bv)
             else:

@@ -44,7 +44,12 @@ def main() -> int:
         "strict-contract",
         cores=8,
         shuffle_partitions=32,
-        extra_conf={"spark.driver.memory": "8g"},
+        # no console progress bar: its "[Stage N: ...]\r" lines would
+        # prefix the result lines and hide them from line-anchored greps
+        extra_conf={
+            "spark.driver.memory": "8g",
+            "spark.ui.showConsoleProgress": "false",
+        },
     )
     import __spark_entry__ as entrymod
 
