@@ -43,7 +43,11 @@ def build_parser() -> argparse.ArgumentParser:
         sp.add_argument("--early-export", type=int, default=None)
         sp.add_argument("--expiration-check-interval", type=int, default=60)
         sp.add_argument("--scan-mode", default="exact", choices=["exact", "bucket", "none"])
-        sp.add_argument("--cores", type=int, default=None, help="local[N]; omit on a cluster")
+        sp.add_argument(
+            "--cores", type=int, default=None,
+            help="task slots of the local[N] master (default: SPARK_GRAFT_CPUS, "
+            "else the CPUs this process may run on)",
+        )
         sp.add_argument("--shuffle-partitions", type=int, default=None)
         sp.add_argument("--checkpoint-dir", default=None,
                         help="enable bucketed checkpoint/resume manifests")
