@@ -331,6 +331,9 @@ def sessionize_events(
     else:
         keyed = keyed.repartition(*key_cols)
     keyed = keyed.sortWithinPartitions(*sort_cols)
+    if order_col and order_col not in key_cols + numeric:
+        # the kernel reads the sequence only as the sort's tiebreak
+        keyed = keyed.drop(order_col)
     return keyed.mapInArrow(run_partition, schema=schema)
 
 

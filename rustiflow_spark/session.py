@@ -23,6 +23,20 @@ CDS_QUIET = "-Xlog:cds=off -Xlog:cds+dynamic=off"
 DUMP_EXIT_WAIT_S = 120  # the archive dump makes the JVM's exit ~15-20 s longer
 PROBE_WAIT_S = 60
 
+# SQL settings every session of the engine gets, on any master. Spark 4.1
+# checks maxBytesPerBatch by sizing the whole Arrow writer (every column's
+# buffers) before each row it feeds to Python, unless the setting is exactly
+# Int.MaxValue (2147483647); that per-row check was about a fifth of the
+# executor's CPU on a hot-key event feed of ~46 B/row, where the 64 MB cap
+# never fires. With the byte cap off, the row count alone bounds a batch:
+# at most 10000 x row width, which keeps rows up to ~6.7 KB (text, token
+# arrays) under the old 64 MB; wider rows (media bytes,
+# operators/multimodal.py) can make a batch larger than that.
+ARROW_BATCH_CONF = {
+    "spark.sql.execution.arrow.maxBytesPerBatch": "2147483647",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+}
+
 
 def _default_driver_mem() -> str:
     """min(48g, ~40% of physical RAM), floor 2g — a 48g default on a small
@@ -219,8 +233,10 @@ def get_spark(
 
     On a real cluster the same settings ship via spark-submit --conf; the
     adaptive/Arrow settings below are what make the 100 TB plan viable:
-    AQE coalesces + skew-splits the sessionization shuffle, Arrow batches
-    amortize Python transfer, and shuffle partitions track parallelism.
+    AQE coalesces small shuffle partitions (a hot sessionization key still
+    runs as one task: AQE splits skewed partitions only for joins), Arrow
+    batches of ``ARROW_BATCH_CONF`` amortize Python transfer without a
+    per-row size check, and shuffle partitions track parallelism.
 
     Python workers run under ``rustiflow_spark.worker_daemon``
     (``with_python_workers``). ``cores`` defaults to ``default_cores()``.
@@ -244,7 +260,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
+        .config(map=ARROW_BATCH_CONF)
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # in local mode the driver JVM IS the executor: its heap must hold
         # the shuffle/sort working set for all cores. 8g silently hung

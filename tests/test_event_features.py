@@ -154,6 +154,23 @@ def test_spark_event_features_and_token_passthrough(spark):
     assert (right.groupby(["source", "doc_id"])["session_index"].min() == 0).all()
 
 
+def test_order_col_shared_with_a_kernel_column(spark):
+    """The sequence column leaves the kernel's feed after the sort, except
+    when it is also a column the kernel reads (here the key or the ts)."""
+    from rustiflow_spark.operators.event_features import sessionize_events
+
+    key = ["source", "doc_id"]
+    sdf = spark.createDataFrame(generate_token_sequences(n_docs=20, seed=5)).drop("tokens")
+
+    def run(order_col):
+        out = sessionize_events(sdf, key, EngineConfig(), order_col=order_col).toPandas()
+        return out.sort_values(key + ["session_index"]).reset_index(drop=True)
+
+    base = run("event_seq")
+    for order_col in ("ts_us", "doc_id"):
+        pd.testing.assert_frame_equal(run(order_col), base)
+
+
 def test_concat_batches_keeps_every_row():
     """key_blocks joins the batches of a key run into one; every row of
     every input batch must survive, payload arrays and NULLs included."""

@@ -1,5 +1,6 @@
-"""Python workers started by get_spark import pyspark from the installed
-distribution, so the per-task import-cache invalidation re-reads no archive."""
+"""Sessions from get_spark: Python workers import pyspark from the installed
+distribution, so the per-task import-cache invalidation re-reads no archive,
+and Arrow batches to Python are bounded by row count alone."""
 
 from __future__ import annotations
 
@@ -53,6 +54,23 @@ def test_workers_import_nothing_from_archives(spark):
         paths = list(r.path) + list(r.cache) + [r.pyspark_file]
         assert [p for p in paths if _archive(p)] == []
         assert "zipimporter" not in r.importers
+
+
+def test_arrow_batch_settings_reach_the_sql_conf(spark):
+    # both keys are internal: a misspelt one would be accepted and ignored,
+    # and Spark would size the Arrow writer before every row again
+    sql_conf = spark._jsparkSession.sessionState().conf()
+    assert sql_conf.arrowMaxBytesPerBatch() == 2147483647
+    assert sql_conf.arrowMaxRecordsPerBatch() == 10000
+
+
+def test_arrow_batches_are_cut_by_row_count(spark):
+    def sizes(batches):
+        for b in batches:
+            yield pa.RecordBatch.from_pydict({"n": [b.num_rows]})
+
+    rows = spark.range(25_000, numPartitions=1).mapInArrow(sizes, "n long").collect()
+    assert [r.n for r in rows] == [10_000, 10_000, 5_000]
 
 
 def _pyspark_zip(tmp_path, version: str) -> str:

@@ -8,6 +8,7 @@ as on a cluster where executors have no repo checkout.
 
 from __future__ import annotations
 
+import ast
 import os
 import shutil
 import subprocess
@@ -15,8 +16,17 @@ import sys
 
 import pytest
 
+from rustiflow_spark.session import ARROW_BATCH_CONF
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPARK_SUBMIT = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
+MAX_RECORDS = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+
+def _arrow_conf(stdout: str) -> dict:
+    """The Arrow batch settings the job's session reported."""
+    line = next(l for l in stdout.splitlines() if l.startswith("arrow batch conf: "))
+    return ast.literal_eval(line.split(": ", 1)[1])
 
 
 @pytest.mark.skipif(
@@ -67,6 +77,8 @@ def test_spark_submit_pyfiles_end_to_end(spark, tmp_path):
         timeout=420,
     )
     assert res.returncode == 0, res.stderr[-3000:]
+    # no --conf names them: the job's session has get_spark's values
+    assert _arrow_conf(res.stdout) == ARROW_BATCH_CONF
 
     got = spark.read.parquet(out)
     assert got.count() > 0
@@ -99,6 +111,7 @@ def test_spark_submit_checkpointed_resume(spark, tmp_path):
     cmd = [
         SPARK_SUBMIT, "--master", "local[2]",
         "--conf", "spark.sql.shuffle.partitions=4",
+        "--conf", f"{MAX_RECORDS}=5000",
         "--py-files", zip_path, job,
         "--input", inp, "--output", out,
         "--checkpointed", "--n-buckets", "3", "--fingerprint", "fp1",
@@ -107,6 +120,8 @@ def test_spark_submit_checkpointed_resume(spark, tmp_path):
                         capture_output=True, text=True, timeout=420)
     assert r1.returncode == 0, r1.stderr[-3000:]
     assert "'completed': 3" in r1.stdout and "'skipped': 0" in r1.stdout
+    # the user's --conf wins; the setting it leaves out keeps the default
+    assert _arrow_conf(r1.stdout) == {**ARROW_BATCH_CONF, MAX_RECORDS: "5000"}
     # resume with the same fingerprint: every bucket skips, output intact
     r2 = subprocess.run(cmd, cwd=str(tmp_path), env=env,
                         capture_output=True, text=True, timeout=420)

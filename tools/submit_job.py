@@ -25,16 +25,22 @@ from pyspark.sql import SparkSession
 def build_session() -> SparkSession:
     """The job's session. No master: spark-submit --master decides.
 
-    The worker set-up of get_spark (session.with_python_workers) is applied
-    only to a local master: its worker daemon is imported from the driver's
-    path to the package before --py-files reach the worker, and a cluster
-    executor need not be able to read that path.
+    The Arrow batch settings of get_spark (session.ARROW_BATCH_CONF) apply
+    on every master, each unless spark-submit's --conf already sets it. The
+    worker set-up (session.with_python_workers) is applied only to a local
+    master: its worker daemon is imported from the driver's path to the
+    package before --py-files reach the worker, and a cluster executor need
+    not be able to read that path.
     """
-    from rustiflow_spark.session import with_python_workers
+    from rustiflow_spark.session import ARROW_BATCH_CONF, with_python_workers
 
     SparkContext._ensure_initialized()  # the JVM spark-submit started
-    master = SparkConf().get("spark.master", "")
+    conf = SparkConf()
+    master = conf.get("spark.master", "")
     builder = SparkSession.builder.appName("rustiflow-submit")
+    for key, value in ARROW_BATCH_CONF.items():
+        if not conf.contains(key):
+            builder = builder.config(key, value)
     if master == "local" or master.startswith("local["):
         builder = with_python_workers(builder)
     return builder.getOrCreate()
@@ -54,8 +60,10 @@ def main() -> None:
     # imported AFTER spark-submit has added --py-files to the path
     from rustiflow_spark.config import EngineConfig
     from rustiflow_spark.pipeline import run_checkpointed, token_feature_pipeline
+    from rustiflow_spark.session import ARROW_BATCH_CONF
 
     spark = build_session()
+    print("arrow batch conf:", {k: spark.conf.get(k) for k in ARROW_BATCH_CONF})
     cfg = EngineConfig(
         idle_timeout=args.idle_timeout_s, active_timeout=args.active_timeout_s
     )
